@@ -6,7 +6,7 @@ Boots and owns the full stack:
     IngestServer (TCP, S6)            duo/src/grpc/mod.rs:14-27
       -> staged parquet records
     span/log streaming pipelines      duo/src/grpc/server.rs:27-121
-      -> stateful span completion (T4)
+      -> foreachBatch span completion (T4, streaming/merge.py)
       -> partitioned parquet sink (T3) or memory tables (T5)
     PartitionedStore + registries     duo/src/memory.rs, schema.rs
     QueryService                      duo/src/web/mod.rs:72-82
@@ -37,15 +37,20 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from duo_spark.ingest import ProcessRegistry
+from duo_spark.schemas import LOG_CORE_SCHEMA
 from duo_spark.sources.logschema import LogSchemaRegistry
 from duo_spark.sources.store import HotColdTable, PartitionedStore
 from duo_spark.streaming.ingest_server import IngestServer
 from duo_spark.streaming.pipeline import (
     _scratch,
+    completed_span_schema,
     start_log_pipeline,
     start_span_pipeline,
 )
 from duo_spark.web.api import QueryService
+
+#: what each table reads as before its first rows land
+_EMPTY_SCHEMAS = {"span": completed_span_schema(), "log": LOG_CORE_SCHEMA}
 
 
 class DuoEngine:
@@ -58,18 +63,11 @@ class DuoEngine:
         memory_mode: bool = False,
         granularity: str = "minute",
         trigger_seconds: int = 5,
-        span_engine: str = "fast",
     ):
         self.spark = spark
         self.data_dir = data_dir
         self.memory_mode = memory_mode
         self.trigger_seconds = trigger_seconds
-        #: span completion formulation (round 8 default flip — VERDICT
-        #: r7 #4): "fast" = JVM foreachBatch partial-merge writing the
-        #: exactly-once versioned delta log (36x throughput, SCALING.md
-        #: probe 13); "stateful" = per-event applyInPandasWithState
-        #: with wall-clock TTL + intact flag into the flat K1 layout.
-        self.span_engine = span_engine
         self.store = PartitionedStore(spark, data_dir, granularity=granularity)
         self.process_registry = ProcessRegistry(self.store)
         self.log_schema_registry = LogSchemaRegistry(self.store)
@@ -116,8 +114,6 @@ class DuoEngine:
             kwargs.update(memory_mode=True, memory_table=mem_table)
         else:
             kwargs.update(out_dir=self.store.table_path(table))
-        if table == "span":
-            kwargs.update(engine=self.span_engine)
         return kwargs
 
     def start_pipelines(self) -> None:
@@ -154,26 +150,26 @@ class DuoEngine:
     # -------------------------------------------------------- query --
 
     def _table_df(self, table: str, mem_table: str) -> DataFrame:
-        if self.memory_mode:
-            return self.spark.table(mem_table)
-        if table == "span" and self.span_engine == "fast":
-            from duo_spark.streaming.merge import read_completed
-            from duo_spark.streaming.pipeline import completed_span_schema
+        """The table's current rows. A table with no rows yet reads as
+        an empty frame in its schema, so an empty engine is queryable."""
+        from duo_spark.streaming.merge import read_completed
 
+        if self.memory_mode:
+            if self.spark.catalog.tableExists(mem_table):
+                return self.spark.table(mem_table)
+        else:
             try:
-                return read_completed(
-                    self.spark, self.store.table_path("span")
-                )
+                if table == "span":
+                    return read_completed(
+                        self.spark, self.store.table_path("span")
+                    )
+                return HotColdTable(self.store, table).df()
             except FileNotFoundError:
-                # nothing completed yet — an empty engine is queryable
-                return self.spark.createDataFrame(
-                    [], completed_span_schema()
-                )
-        return HotColdTable(self.store, table).df()
+                pass
+        return self.spark.createDataFrame([], _EMPTY_SCHEMAS[table])
 
     def spans(self) -> DataFrame:
-        df = self._table_df("span", self._mem_spans)
-        return df.drop("intact") if "intact" in df.columns else df
+        return self._table_df("span", self._mem_spans)
 
     def logs(self) -> DataFrame:
         return self._table_df("log", self._mem_logs)
@@ -206,7 +202,7 @@ class DuoEngine:
 
     def compact(self, retain_latest: int = 2) -> None:
         """Fold small files across both tables' layouts (round 8):
-        the fast span engine's completed delta log compacts via
+        the span table's completed delta log compacts via
         ``merge.compact_completed`` (a 60 s tick writes ~1,440 tiny
         delta dirs/day; the versioned snapshot fold is crash-safe),
         and the log table's minute partitions fold to hour files via
@@ -215,22 +211,15 @@ class DuoEngine:
         only touch versions/partitions no in-flight batch can rewrite."""
         if self.memory_mode:
             return
-        def _exists(table: str) -> bool:
-            fs, p = self.store._fs(self.store.table_path(table))
-            return fs.exists(p)
+        from duo_spark.streaming.merge import compact_completed
 
-        if self.span_engine == "fast":
-            from duo_spark.streaming.merge import compact_completed
-
-            # no-ops gracefully when nothing has been ingested yet
-            compact_completed(
-                self.spark,
-                self.store.table_path("span"),
-                retain_latest=retain_latest,
-            )
-        elif _exists("span"):
-            self.store.compact("span", to_granularity="hour")
-        if _exists("log"):
+        # no-ops gracefully when nothing has been ingested yet
+        compact_completed(
+            self.spark,
+            self.store.table_path("span"),
+            retain_latest=retain_latest,
+        )
+        if self.store.exists("log"):
             self.store.compact("log", to_granularity="hour")
 
     # --------------------------------------------------------- stop --

@@ -3,9 +3,9 @@
 Reference: duo/src/aggregator.rs:17-39 — record_span fires at span open
 AND close; the SpanAggregator merges records by id (later record wins
 `end`, tags extend, parent_id coalesces) and only releases spans whose
-`end` arrived. Batch form here; the streaming form (same merge rules,
-plus state TTL) lives in duo_spark.streaming.state — the two agree on
-any record set, which tests/test_streaming.py asserts.
+`end` arrived. Batch form here; the streaming form (same merge rules)
+lives in duo_spark.streaming.merge — the two agree on any record set,
+which tests/test_streaming.py asserts.
 """
 
 from __future__ import annotations

@@ -407,8 +407,7 @@ def _span_merge_records(spark: SparkSession, sf_dir: str, modulo: int | None = N
     """Open+close span-record stream derived from lineitem; lineitems
     5..7 never get a close record => stay incomplete and are withheld
     (duo/src/aggregator.rs:32-39 semantics). ``modulo`` keeps every
-    m-th order only (used to bound the per-key-stateful streaming
-    replay's Python-side group count)."""
+    m-th order only (keeps the streaming gate replays short)."""
     li = _t(spark, sf_dir, "lineitem")
     if modulo is not None:
         li = li.filter(F.col("l_orderkey") % modulo == 0)
@@ -546,17 +545,15 @@ FROM recs GROUP BY id HAVING max("end") IS NOT NULL
 
 def q_streaming_span_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1-T5: the SAME record set as span_merge pushed through the real
-    Structured Streaming path — file source -> applyInPandasWithState
-    completion (duo_spark/streaming/state.py) -> memory-mode sink
-    (availableNow drain). The oracle is identical to the batch one
-    because streaming and batch merge rules agree; the record set is
-    thinned to every-20th order to bound the per-key Python state
-    overhead at gate scale."""
+    Structured Streaming path — file source -> foreachBatch completion
+    (duo_spark/streaming/merge.py) -> memory-mode view (availableNow
+    drain). The oracle is identical to the batch one because streaming
+    and batch merge rules agree; the record set is thinned to
+    every-20th order to keep the gate run short."""
     from duo_spark.streaming import replay_span_records
 
     records = _span_merge_records(spark, sf_dir, modulo=20)
-    merged = replay_span_records(spark, records, engine="stateful")
-    return merged.filter(F.col("intact")).select(
+    return replay_span_records(spark, records).select(
         "id", "parent_id", "trace_id", "name", "process_id", "start", "end"
     )
 
@@ -568,8 +565,7 @@ def q_streaming_span_merge_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/merge.streaming_span_merge_fast across two staged
     micro-batches, read back from the completed delta log. Same oracle
     as the batch merge: the fast path's scalar folds and sorted tag
-    resolution are schedule-independent (SCALING.md probe 13: ~36×
-    the applyInPandasWithState formulation's throughput at sf0.1)."""
+    resolution are schedule-independent."""
     import uuid as _uuid
 
     from duo_spark.schemas import SPAN_SCHEMA
@@ -613,18 +609,16 @@ FROM recs GROUP BY id HAVING max("end") IS NOT NULL
 
 
 def q_streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T3 end-to-end: the record set pushed through the REAL streaming
-    parquet sink — file source -> stateful completion -> 60 s-cadence
-    partitioned parquet sink (availableNow drain) -> read back through
-    PartitionedStore/HotColdTable. Proves the streaming sink's on-disk
-    layout (date=/hour=/minute= + bloom) is exactly what the batch
-    store reads (duo/src/grpc/server.rs:89-120 + partition/writer.rs).
-    Thinned to every-40th order: the span starts are date-grained, so
-    each distinct ship date is one minute-partition dir — the sink's
-    small-file behavior is part of what's under test."""
+    """T3 end-to-end: the record set pushed through the REAL persistent
+    span pipeline — file source -> foreachBatch completion -> versioned
+    completed-span delta log carrying the K1 date/hour/minute columns
+    (availableNow drain) -> read back through
+    ``merge.read_completed``, the engine's span read path
+    (duo/src/grpc/server.rs:89-120 + partition/writer.rs). Thinned to
+    every-40th order."""
     import uuid as _uuid
 
-    from duo_spark.sources.store import HotColdTable, PartitionedStore
+    from duo_spark.streaming.merge import read_completed
     from duo_spark.streaming.pipeline import _scratch, start_span_pipeline
 
     records = _span_merge_records(spark, sf_dir, modulo=40)
@@ -637,12 +631,9 @@ def q_streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_dir=f"{run}/store/span",
         checkpoint_dir=f"{run}/ckpt",
         available_now=True,
-        engine="stateful",
     )
     q.awaitTermination()
-    store = PartitionedStore(spark, f"{run}/store", granularity="minute")
-    merged = HotColdTable(store, "span").df()
-    return merged.filter(F.col("intact")).select(
+    return read_completed(spark, f"{run}/store/span").select(
         "id", "parent_id", "trace_id", "name", "process_id", "start", "end"
     )
 

@@ -436,7 +436,7 @@ class HotColdTable:
             return self.hot
         if cold is not None:
             return cold.drop(*PARTITION_COLS)
-        raise ValueError(f"table {self.table!r} has neither hot nor cold data")
+        raise FileNotFoundError(f"table {self.table!r} has neither hot nor cold data")
 
 
 def write_bucketed(

@@ -3,8 +3,8 @@
 The reference is a hand-rolled micro-batch loop
 (duo/src/grpc/server.rs:27-121): a 1 s tick drains buffers into memory
 batches, a 10 s timer writes an Arrow-IPC WAL, a 60 s timer flushes
-minute-partitioned parquet; span records are upsert-merged by a
-stateful aggregator (duo/src/aggregator.rs:17-39) that withholds spans
+minute-partitioned parquet; span records are upsert-merged by an
+aggregator (duo/src/aggregator.rs:17-39) that withholds spans
 until their close record arrives.
 
 Spark mapping — all of T1-T3's machinery is the Structured Streaming
@@ -13,16 +13,11 @@ runtime itself:
   T1 (1 s tick)      -> trigger(processingTime=...) micro-batches
   T2 (10 s WAL)      -> checkpointLocation write-ahead state (built in)
   T3 (60 s parquet)  -> writeStream.partitionBy(date,hour,minute)
-  T4 (span merge)    -> DEFAULT (round 8): JVM foreachBatch
-                        partial-merge (streaming/merge.py) — one hash
-                        aggregate + versioned open-state merge per
-                        batch, ~36× the per-event path's throughput
-                        (SCALING.md probe 13), deterministic
-                        event-time GC. Opt-in engine="stateful":
-                        applyInPandasWithState keyed by span id with
-                        per-record wall-clock TTL (a deliberate
-                        improvement; the reference buffers open spans
-                        forever).
+  T4 (span merge)    -> JVM foreachBatch partial-merge
+                        (streaming/merge.py) — one hash aggregate +
+                        versioned open-span merge per batch; open spans
+                        are held until their close arrives, as in the
+                        reference
   T5 (memory mode)   -> memory-sink query / refreshed temp view,
                         parquet sink skipped
 """
@@ -39,10 +34,8 @@ from duo_spark.streaming.rollup import (
     streaming_moments_rollup,
     streaming_rollup,
 )
-from duo_spark.streaming.state import complete_spans
 
 __all__ = [
-    "complete_spans",
     "read_rollup",
     "replay_span_records",
     "start_log_pipeline",

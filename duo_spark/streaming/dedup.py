@@ -7,8 +7,8 @@ duplicate has to be dropped on arrival. Structured Streaming's
 content hash and holds the hash in the state store only until the
 watermark passes its event time + the delay, so state is bounded by
 the duplicate-arrival horizon, not the stream's lifetime — the same
-state-vs-lateness contract as the span-completion stage
-(streaming/state.py) and the session windows (streaming/sessions.py).
+state-vs-lateness contract as the session windows
+(streaming/sessions.py).
 
 State is hash-partitioned on the content hash: uniform by
 construction (md5), so no key skew regardless of how hot any one

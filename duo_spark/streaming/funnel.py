@@ -27,7 +27,7 @@ funnel-relevant event count forever):
   emitted chain equals ``operators.funnel.funnel_steps`` with the
   same ``window`` on the final states.
 - ``idle_ttl_ms`` — a processing-time GC for users silent longer than
-  the TTL, mirroring ``streaming/state.py`` span completion: state is
+  the TTL (``GroupStateTimeout.ProcessingTimeTimeout``): state is
   dropped (a returning user restarts their funnel), trading exactness
   under arbitrarily-late re-appearance for bounded total state.
 """
@@ -123,8 +123,7 @@ def make_funnel_update(
     event_age_ms: int | None = None,
 ):
     """Build the applyInPandasWithState update function (module-level
-    factory, like streaming/state.py's make_span_completion_func, so
-    tests can drive the state transition directly with a fake
+    factory, so tests can drive the state transition directly with a fake
     GroupState — the bounded-state property under a 10k-event replay
     is asserted without a 10k-row streaming run)."""
     k = len(steps)
@@ -238,8 +237,7 @@ def streaming_funnel_states(
     ``idle_ttl_ms`` offers the GC alternative: drop state for users
     idle past the TTL. ``idle_ttl_ms`` keeps the micro-batch loop
     alive to fire timeouts, so leave it None for availableNow
-    drain-and-stop replays (same caveat as streaming/state.py) — for
-    replays use ``event_age_ms`` instead: an EVENT-TIME TTL that drops
+    drain-and-stop replays — for replays use ``event_age_ms`` instead: an EVENT-TIME TTL that drops
     a user once the watermark passes their newest stored event by
     ``event_age_ms``. The watermark advances during an availableNow
     drain even though the wall clock effectively doesn't, so

@@ -1,13 +1,13 @@
-"""High-throughput streaming span completion (T4-fast): the
-aggregation tick as a JVM-side foreachBatch partial-merge.
+"""Streaming span completion (T4): the aggregation tick as a
+JVM-side foreachBatch partial-merge — the one span-completion engine
+behind ``pipeline.start_span_pipeline``.
 
-The exact per-event formulation (``streaming/state.py``) pays ~0.7 ms
-of Python per span-id group per micro-batch (applyInPandasWithState
-calls the update function once per group) — measured 2.4k rows/s at
-sf0.1 (SCALING.md probe 13), which caps a single-node ingest at
-telemetry-toy volumes. The reference's own design point is the 1 s
-aggregation tick (duo/src/grpc/server.rs:31-46): records buffer, then
-one merge pass per tick. That shape maps to foreachBatch: each
+A per-event formulation (applyInPandasWithState, one Python update
+call per span-id group per micro-batch) paid ~0.7 ms per group —
+2.4k rows/s at sf0.1, ~36× below this merge (SCALING.md probe 13).
+The reference's own design point is the 1 s aggregation tick
+(duo/src/grpc/server.rs:31-46): records buffer, then one merge pass
+per tick. That shape maps to foreachBatch: each
 micro-batch computes its in-batch merge with ONE hash aggregate
 (whole-stage codegen, map-side combine), then full-outer-merges it
 into the persisted open-span state — no per-group Python anywhere.
@@ -105,8 +105,7 @@ def fast_merge_processor(
     """Build the foreachBatch processor behind
     :func:`streaming_span_merge_fast` — factored out (round 8) so
     ``pipeline.start_span_pipeline`` can run the SAME merge under any
-    trigger and sink arrangement (VERDICT r7 #4: the 36× path is now
-    the pipeline default).
+    trigger and sink arrangement.
 
     ``partition_completed=True`` adds the K1 date/hour/minute
     partition COLUMNS to each completed delta version — as DATA
@@ -224,7 +223,7 @@ def streaming_span_merge_fast(
     started availableNow query; read results with
     :func:`read_completed` / :func:`read_open`.
 
-    ``open_max_age_us`` is the T4 TTL analog for this formulation
+    ``open_max_age_us`` is the event-time bound on open-span state
     (duo/src/aggregator.rs buffers opens forever; SURVEY §3 flags that
     as unbounded): opens whose ``start`` has fallen more than the age
     behind the high-water event time are dropped from the open table —

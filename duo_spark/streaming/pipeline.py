@@ -11,11 +11,13 @@ socket (S6 — any streaming source slots in here; the contract is just
 checkpoint's write-ahead state replaces the hand-rolled WAL (T2 —
 recovery semantics come from the runtime, not custom code), the
 partitioned-parquet streaming sink is T3, and memory mode swaps the
-sink for an in-memory table. Span completion (T4) runs as a stateful
-stage between source and sink.
+sink for an in-memory table. Span completion (T4) is the
+foreachBatch partial-merge of streaming/merge.py, run between source
+and sink.
 
-At scale: the source directory listing shards across executors, state
-is hash-partitioned by span id, and the sink writes one file per
+At scale: the source directory listing shards across executors, the
+span merge is one hash aggregate plus one shuffle join against the
+open-span table per batch, and the log sink writes one file per
 partition dir per micro-batch — the same layout the batch store
 (sources/store.py) reads, so hot streaming output and cold compacted
 history union transparently.
@@ -30,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from duo_spark.schemas import LOG_CORE_SCHEMA, SPAN_SCHEMA
 from duo_spark.sources.store import BLOOM_EXPECTED_NDV, with_partition_cols
-from duo_spark.streaming.state import DEFAULT_TTL_MS, complete_spans
 
 #: scratch root for checkpoints / replay staging (kept inside the repo
 #: tree; gitignored)
@@ -72,17 +73,9 @@ def prune_scratch(max_age_s: float = 6 * 3600) -> int:
     return removed
 
 
-def span_record_stream(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """S6 stand-in: parquet-file-drop source of raw span records.
-    ``max_files_per_trigger`` caps each micro-batch's file intake —
-    the ingest-tick batch size knob (and what splits an availableNow
-    drain into multiple measurable micro-batches)."""
-    reader = spark.readStream.schema(SPAN_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(source_dir)
+def span_record_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """S6 stand-in: parquet-file-drop source of raw span records."""
+    return spark.readStream.schema(SPAN_SCHEMA).parquet(source_dir)
 
 
 def staged_log_schema(spark: SparkSession, source_dir: str):
@@ -125,135 +118,34 @@ def start_span_pipeline(
     out_dir: str | None = None,
     checkpoint_dir: str | None = None,
     trigger_seconds: int = 60,
-    ttl_ms: int | None = DEFAULT_TTL_MS,
     memory_mode: bool = False,
     memory_table: str = "hot_spans",
     available_now: bool = False,
-    max_files_per_trigger: int | None = None,
-    engine: str = "fast",
-    open_max_age_us: int | None = None,
 ):
     """T1+T3+T4(+T5) — the full span ingest job; returns the
     StreamingQuery.
 
-    ``engine`` picks the completion formulation (round 8 — VERDICT r7
-    #4 flipped the default):
-
-    - ``"fast"`` (default): the JVM-side foreachBatch partial-merge
-      (streaming/merge.py) — measured ~36× the stateful path's
-      throughput at sf0.1 (SCALING.md probe 13). Completed spans land
-      as an exactly-once versioned delta log under ``out_dir``
-      (``completed/v=N`` — each version internally in the K1
-      date=/hour=/minute= + bloom layout, so partition pruning and
-      bloom skipping still apply); read with ``merge.read_completed``,
-      fold small files with ``merge.compact_completed``. State GC is
-      ``open_max_age_us`` (deterministic EVENT-time age-out);
-      ``ttl_ms`` does not apply — per-record processing-time TTL is a
-      stateful-path semantic.
-    - ``"stateful"``: the per-event applyInPandasWithState operator
-      (streaming/state.py) with per-record wall-clock ``ttl_ms`` and
-      the ``intact`` flag, writing directly into the flat K1 store
-      layout. Opt into this when those per-record semantics matter
-      more than throughput.
-
-    Shared knobs:
+    Span completion is the JVM-side foreachBatch partial-merge
+    (streaming/merge.py): completed spans land as an exactly-once
+    versioned delta log under ``out_dir`` (``completed/v=N``, each
+    version carrying the K1 date/hour/minute columns as data); read
+    with ``merge.read_completed``, fold small files with
+    ``merge.compact_completed``. Open spans are held until their close
+    arrives, as in the reference (duo/src/aggregator.rs:32-39).
 
     - ``trigger_seconds=60`` mirrors the reference's partition-flush
       cadence (duo/src/grpc/server.rs:92); the 1 s aggregation tick is
       subsumed — completion state updates every micro-batch.
-    - ``memory_mode=True`` (T5) serves completed spans from an
-      in-memory table named ``memory_table`` and never touches the
-      data dir (duo/src/main.rs:60-63: "Never persist data in memory
-      mode"; the fast engine keeps its working state in the gitignored
-      scratch dir — the moral equivalent of the reference's in-memory
-      buffers, wiped with the session).
+    - ``memory_mode=True`` (T5) serves completed spans from a temp view
+      named ``memory_table`` and never touches the data dir
+      (duo/src/main.rs:60-63: "Never persist data in memory mode");
+      the merge keeps its working state in the gitignored scratch dir
+      — the moral equivalent of the reference's in-memory buffers,
+      wiped with the session.
     - ``available_now=True`` drains everything currently in the source
       and stops — the deterministic batch-replay mode used by tests
-      and the correctness gate. Stateful TTL is forced off in this
-      mode: a ProcessingTimeTimeout keeps the micro-batch loop alive
-      to fire future timeouts, so a drain-and-stop run would never
-      terminate.
+      and the correctness gate.
     """
-    if engine == "fast":
-        return _start_fast_span_pipeline(
-            spark,
-            source_dir,
-            out_dir=out_dir,
-            checkpoint_dir=checkpoint_dir,
-            trigger_seconds=trigger_seconds,
-            memory_mode=memory_mode,
-            memory_table=memory_table,
-            available_now=available_now,
-            max_files_per_trigger=max_files_per_trigger,
-            open_max_age_us=open_max_age_us,
-        )
-    if engine != "stateful":
-        raise ValueError(f"engine must be 'fast' or 'stateful', got {engine!r}")
-    if available_now:
-        ttl_ms = None
-    completed = complete_spans(
-        span_record_stream(spark, source_dir, max_files_per_trigger),
-        ttl_ms=ttl_ms,
-    )
-    if not memory_mode:
-        assert out_dir is not None, "out_dir required unless memory_mode"
-        # K1 layout: date=/hour=/minute= + trace_id bloom filter —
-        # identical to the batch PartitionedStore writer, so
-        # HotColdTable reads it
-        completed = with_partition_cols(completed, "start", "minute")
-    writer = completed.writeStream.option(
-        "checkpointLocation", checkpoint_dir or _scratch("ckpt", uuid.uuid4().hex)
-    ).outputMode("append")
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    if memory_mode:
-        return writer.format("memory").queryName(memory_table).start()
-    return (
-        writer.format("parquet")
-        .option("path", out_dir)
-        .option("parquet.bloom.filter.enabled#trace_id", "true")
-        .option(
-            "parquet.bloom.filter.expected.ndv#trace_id",
-            str(BLOOM_EXPECTED_NDV),
-        )
-        .partitionBy("date", "hour", "minute")
-        .start()
-    )
-
-
-def completed_span_schema():
-    """Schema of fast-engine completed spans: the partial-merge fields
-    (SPAN_SCHEMA scalars) + resolved ``tags`` json string."""
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),
-            T.StructField("trace_id", T.LongType(), True),
-            T.StructField("parent_id", T.LongType(), True),
-            T.StructField("name", T.StringType(), True),
-            T.StructField("process_id", T.StringType(), True),
-            T.StructField("start", T.LongType(), True),
-            T.StructField("end", T.LongType(), True),
-            T.StructField("tags", T.StringType(), True),
-        ]
-    )
-
-
-def _start_fast_span_pipeline(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str | None,
-    checkpoint_dir: str | None,
-    trigger_seconds: int,
-    memory_mode: bool,
-    memory_table: str,
-    available_now: bool,
-    max_files_per_trigger: int | None,
-    open_max_age_us: int | None,
-):
     from duo_spark.streaming.merge import fast_merge_processor, read_completed
 
     if memory_mode:
@@ -279,13 +171,10 @@ def _start_fast_span_pipeline(
         partitioned = True
         on_batch = None
     processor = fast_merge_processor(
-        merge_root,
-        open_max_age_us=open_max_age_us,
-        partition_completed=partitioned,
-        on_batch=on_batch,
+        merge_root, partition_completed=partitioned, on_batch=on_batch
     )
     writer = (
-        span_record_stream(spark, source_dir, max_files_per_trigger)
+        span_record_stream(spark, source_dir)
         .writeStream.foreachBatch(processor)
         .option(
             "checkpointLocation",
@@ -297,6 +186,25 @@ def _start_fast_span_pipeline(
     else:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()
+
+
+def completed_span_schema():
+    """Schema of completed spans: the partial-merge fields
+    (SPAN_SCHEMA scalars) + resolved ``tags`` json string."""
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField("trace_id", T.LongType(), True),
+            T.StructField("parent_id", T.LongType(), True),
+            T.StructField("name", T.StringType(), True),
+            T.StructField("process_id", T.StringType(), True),
+            T.StructField("start", T.LongType(), True),
+            T.StructField("end", T.LongType(), True),
+            T.StructField("tags", T.StringType(), True),
+        ]
+    )
 
 
 def start_log_pipeline(
@@ -339,12 +247,7 @@ def start_log_pipeline(
     )
 
 
-def replay_span_records(
-    spark: SparkSession,
-    records: DataFrame,
-    ttl_ms: int | None = None,
-    engine: str = "fast",
-) -> DataFrame:
+def replay_span_records(spark: SparkSession, records: DataFrame) -> DataFrame:
     """Deterministic batch replay THROUGH the real streaming path.
 
     Stages ``records`` as parquet files, runs the span pipeline in
@@ -352,11 +255,6 @@ def replay_span_records(
     completed spans as a DataFrame. Because the completion merge is
     commutative/associative (min/max/key-wise tag merge), the result
     is independent of how the runtime splits files into micro-batches.
-    ``engine`` follows :func:`start_span_pipeline` (default fast;
-    ``ttl_ms`` only applies to "stateful", where it defaults to None —
-    NoTimeout — because a processing-time timeout would keep the
-    availableNow micro-batch loop alive forever waiting to fire, and
-    a bounded replay needs no state GC).
     """
     run_id = uuid.uuid4().hex
     src = _scratch("replay", run_id, "in")
@@ -369,8 +267,6 @@ def replay_span_records(
         memory_table=table,
         available_now=True,
         checkpoint_dir=_scratch("replay", run_id, "ckpt"),
-        ttl_ms=ttl_ms,
-        engine=engine,
     )
     q.awaitTermination()
     return spark.table(table)

@@ -147,7 +147,7 @@ class DuoSubscriber:
     def span(self, name: str, **tags: Any) -> "_SpanContext":
         """Open a child of the thread's current span (fresh trace at a
         root). The OPEN record ships immediately (end=None) so the
-        engine's stateful completion sees in-flight spans, exactly like
+        engine's span completion sees in-flight spans, exactly like
         the reference's NewSpan message."""
         return _SpanContext(self, name, tags)
 

@@ -86,29 +86,3 @@ def test_engine_drain_is_incremental(engine):
     svc = engine.query_service()
     env = svc.list_traces({"service": "web"})
     assert [t["traceID"] for t in env["data"]] == ["2", "1"]
-
-
-def test_engine_stateful_opt_in_end_to_end(spark, tmp_path):
-    """The per-event engine stays wired as an opt-in: drain staged
-    spans through applyInPandasWithState into the flat K1 layout and
-    query them back (intact flag present — the stateful-only field)."""
-    import os
-
-    from duo_spark.engine import DuoEngine
-    from duo_spark.schemas import SPAN_SCHEMA
-
-    BASE = 1_700_000_000_000_000
-    eng = DuoEngine(spark, str(tmp_path / "data"), trigger_seconds=1,
-                    span_engine="stateful")
-    os.makedirs(eng.span_source, exist_ok=True)
-    spark.createDataFrame(
-        [(51, None, 9, "op", "web-0", BASE, BASE + 5, None),
-         (52, 51, 9, "child", "web-0", BASE + 1, None, None)],
-        SPAN_SCHEMA,
-    ).write.mode("append").parquet(eng.span_source)
-    eng.drain()
-    rows = {r.id: r for r in eng.spans().collect()}
-    assert set(rows) == {51}
-    # flat K1 layout on disk (no completed/ delta log)
-    span_root = eng.store.table_path("span")
-    assert any(d.startswith("date=") for d in os.listdir(span_root))

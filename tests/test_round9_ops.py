@@ -353,20 +353,34 @@ def test_t_closeness_null_sensitive_is_a_value(spark):
     assert not r2.t_close and r2.n_violating_classes == 2
 
 
-def test_k_core_driver_peel_matches_distributed(spark, monkeypatch):
+def test_k_core_driver_peel_matches_distributed(spark, monkeypatch, tmp_path):
     """Round 15: the size-gated driver-side numpy peel must return
-    exactly the distributed loop's rows. Force the distributed path by
-    zeroing the cutoff (the estimate gate can never pass) and compare
-    on a random-ish graph with a multi-round cascade."""
+    exactly the distributed loop's rows. The first run forbids the
+    distributed loop's checkpoints, so it can only pass through the
+    numpy peel; the second forces the distributed path by zeroing the
+    cutoff (the estimate gate can never pass). Compared on a
+    random-ish graph with a multi-round cascade. The edges are read
+    from parquet: a frame built from a local list has no size estimate
+    (Long.MaxValue), so it never reaches the numpy peel."""
     import random
 
     from duo_spark.operators import graph as G
 
+    def _no_checkpoint(*_a, **_k):
+        raise AssertionError("distributed k-core loop ran")
+
     rng = random.Random(0xC0DE)
     edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(400)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    fast = {(r.node, r.degree) for r in G.k_core(df, 3).collect()}
+    spark.createDataFrame(edges, "src long, dst long").write.parquet(
+        str(tmp_path / "edges")
+    )
+    df = spark.read.parquet(str(tmp_path / "edges"))
+    with monkeypatch.context() as m:
+        m.setattr(G, "tracked_local_checkpoint", _no_checkpoint)
+        fast = {(r.node, r.degree) for r in G.k_core(df, 8).collect()}
     monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
-    slow = {(r.node, r.degree) for r in G.k_core(df, 3).collect()}
+    slow = {(r.node, r.degree) for r in G.k_core(df, 8).collect()}
     assert fast == slow
-    assert fast  # non-degenerate fixture: the 3-core is non-empty
+    # non-degenerate fixture: the 8-core peels 7 of the 60 nodes over
+    # three rounds
+    assert len(fast) == 53

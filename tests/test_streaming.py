@@ -1,12 +1,11 @@
 """Streaming ingest pipeline (SURVEY §2.9 T1-T5): span completion
-withholding, late-close emission, TTL expiry, batch/streaming parity,
-and the partitioned streaming sink."""
+withholding, late-close emission, open-state GC, batch/streaming
+parity, and the persistent span layout."""
 
 from __future__ import annotations
 
 import json
 import os
-import time
 import uuid
 
 import pytest
@@ -40,23 +39,15 @@ def test_replay_withholds_open_spans_and_merges_closed(spark):
         _rec(3, parent=1, start=BASE + 20, end=BASE + 90),
     ]
     df = spark.createDataFrame(records, SPAN_SCHEMA)
-    out = replay_span_records(spark, df, engine="stateful")
-    rows = {r.id: r for r in out.collect()}
+    rows = {r.id: r for r in replay_span_records(spark, df).collect()}
     assert set(rows) == {1, 3}, "open-without-close must be withheld"
     assert rows[1].end == BASE + 500
     assert json.loads(rows[1].tags) == {"a": "1", "b": "2"}
-    assert rows[1].intact and rows[3].intact
-    # the fast default agrees on membership, scalars, and resolved tags
-    fast = {r.id: r for r in replay_span_records(spark, df).collect()}
-    assert set(fast) == {1, 3}
-    assert fast[1].end == BASE + 500
-    assert json.loads(fast[1].tags) == {"a": "1", "b": "2"}
 
 
-@pytest.mark.parametrize("engine", ["fast", "stateful"])
-def test_streaming_matches_batch_merge(spark, sf_dir, engine):
-    """BOTH streaming formulations and the batch A4 operator must
-    agree on the same record set (same merge rules)."""
+def test_streaming_matches_batch_merge(spark, sf_dir):
+    """The streaming replay and the batch A4 operator must agree on
+    the same record set (same merge rules)."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(400)
     base = li.select(
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("id"),
@@ -85,36 +76,10 @@ def test_streaming_matches_batch_merge(spark, sf_dir, engine):
     }
     stream = {
         r.id: (r.parent_id, r.trace_id, r.name, r.process_id, r.start, r.end)
-        for r in replay_span_records(spark, records, engine=engine).collect()
+        for r in replay_span_records(spark, records).collect()
     }
     assert batch == stream
     assert batch, "fixture must produce completed spans"
-
-
-def test_late_close_emitted_on_later_microbatch(spark, scratch):
-    """Cross-batch state: an open in batch 1 completes when its close
-    arrives in batch 2 (duo/src/aggregator.rs withholding)."""
-    src = os.path.join(scratch, "in")
-    table = f"late_{uuid.uuid4().hex[:8]}"
-    opens = spark.createDataFrame([_rec(7, start=BASE)], SPAN_SCHEMA)
-    opens.write.mode("append").parquet(src)
-    # NoTimeout: blocking drains (processAllAvailable / availableNow)
-    # don't mix with ProcessingTimeTimeout — the timeout keeps the
-    # micro-batch loop permanently busy (see complete_spans docstring)
-    q = start_span_pipeline(
-        spark, src, memory_mode=True, memory_table=table,
-        checkpoint_dir=os.path.join(scratch, "ckpt"), trigger_seconds=1, ttl_ms=None, engine="stateful",
-    )
-    try:
-        q.processAllAvailable()
-        assert spark.table(table).count() == 0
-        closes = spark.createDataFrame([_rec(7, start=BASE, end=BASE + 777)], SPAN_SCHEMA)
-        closes.write.mode("append").parquet(src)
-        q.processAllAvailable()
-        rows = spark.table(table).collect()
-        assert [(r.id, r.end, r.intact) for r in rows] == [(7, BASE + 777, True)]
-    finally:
-        q.stop()
 
 
 def test_tag_merge_split_invariant_across_microbatches(spark, scratch):
@@ -129,7 +94,7 @@ def test_tag_merge_split_invariant_across_microbatches(spark, scratch):
     spark.createDataFrame([late_rec], SPAN_SCHEMA).write.mode("append").parquet(src)
     q = start_span_pipeline(
         spark, src, memory_mode=True, memory_table=table,
-        checkpoint_dir=os.path.join(scratch, "ckpt"), trigger_seconds=1, ttl_ms=None, engine="stateful",
+        checkpoint_dir=os.path.join(scratch, "ckpt"), trigger_seconds=1,
     )
     try:
         q.processAllAvailable()
@@ -144,48 +109,6 @@ def test_tag_merge_split_invariant_across_microbatches(spark, scratch):
         ).collect()
         want = json.loads(batch[0].tags)
         assert got == want == {"k": "winner", "only_late": "x", "only_early": "y"}
-    finally:
-        q.stop()
-
-
-def test_ttl_expires_abandoned_opens(spark, scratch):
-    """T4 TTL (our improvement over the reference's unbounded buffer):
-    an abandoned open is expelled; a close arriving after expiry starts
-    a fresh merge instead of resurrecting the lost open."""
-    src = os.path.join(scratch, "in")
-    table = f"ttl_{uuid.uuid4().hex[:8]}"
-
-    def _poll(predicate, deadline_s=90):
-        t0 = time.time()
-        while time.time() - t0 < deadline_s:
-            if predicate():
-                return True
-            time.sleep(1.0)
-        return False
-
-    spark.createDataFrame([_rec(9, start=BASE)], SPAN_SCHEMA).write.mode("append").parquet(src)
-    # ProcessingTimeTimeout mode: NEVER block on processAllAvailable
-    # (the pending timeout keeps the loop busy) — poll the sink instead
-    q = start_span_pipeline(
-        spark, src, memory_mode=True, memory_table=table,
-        checkpoint_dir=os.path.join(scratch, "ckpt"), trigger_seconds=1, ttl_ms=300, engine="stateful",
-    )
-    try:
-        # feed a completed span; once it lands, batch 1 (with span 9's
-        # open) has necessarily been processed
-        spark.createDataFrame([_rec(10, start=BASE, end=BASE + 5)], SPAN_SCHEMA).write.mode(
-            "append"
-        ).parquet(src)
-        assert _poll(lambda: {r.id for r in spark.table(table).collect()} == {10})
-        time.sleep(1.5)  # let the 300 ms TTL lapse; timeouts fire on later batches
-        # close for the expired span: fresh partial, completes with
-        # close-record data only (name/start from the close record)
-        spark.createDataFrame(
-            [_rec(9, start=BASE + 50, end=BASE + 99, name="late")], SPAN_SCHEMA
-        ).write.mode("append").parquet(src)
-        assert _poll(lambda: 9 in {r.id for r in spark.table(table).collect()})
-        rows = {r.id: r for r in spark.table(table).collect()}
-        assert rows[9].name == "late" and rows[9].start == BASE + 50
     finally:
         q.stop()
 
@@ -209,35 +132,6 @@ def test_log_pipeline_passthrough(spark, scratch):
     assert {(r.process_id, r.level, r.message) for r in back.collect()} == {
         ("web-0", "INFO", "hello"), ("web-1", "ERROR", "boom"),
     }
-
-
-def test_parquet_sink_layout_readable_by_store(spark, scratch):
-    """T3: the streaming parquet sink writes the same
-    date=/hour=/minute= layout the batch store reads (hot/cold union
-    contract)."""
-    from duo_spark.sources.store import PartitionedStore
-
-    src = os.path.join(scratch, "in")
-    out = os.path.join(scratch, "span")
-    recs = [
-        _rec(21, start=BASE, end=BASE + 10),
-        _rec(22, trace=2, start=BASE + 61_000_000, end=BASE + 61_000_500),
-    ]
-    spark.createDataFrame(recs, SPAN_SCHEMA).write.mode("append").parquet(src)
-    q = start_span_pipeline(
-        spark, src, out_dir=out, checkpoint_dir=os.path.join(scratch, "ckpt"),
-        available_now=True, engine="stateful",
-    )
-    q.awaitTermination()
-    datedirs = [d for d in os.listdir(out) if d.startswith("date=")]
-    assert datedirs, f"expected hive layout in {out}"
-    hours = os.listdir(os.path.join(out, datedirs[0]))
-    assert any(h.startswith("hour=") for h in hours)
-    store = PartitionedStore(spark, scratch, granularity="minute")
-    back = store.read("span")
-    assert {r.id for r in back.collect()} == {21, 22}
-    # two spans a minute apart -> two minute partitions
-    assert back.select("minute").distinct().count() == 2
 
 
 def test_streaming_sessions_match_batch(spark, scratch):
@@ -941,25 +835,51 @@ def test_fast_pipeline_empty_completed_batch_readable(spark, scratch):
 
 
 def test_engine_serves_spans_from_fast_store(spark, scratch):
-    """DuoEngine default (span_engine='fast') end-to-end: drain staged
-    records persistently, query spans() back."""
+    """DuoEngine end-to-end: an empty engine answers all 8 routes (each
+    table reads as an empty frame in its schema), then a persistent
+    drain lands versioned completed deltas that spans() reads back."""
+    import glob
+    import urllib.error
+    import urllib.request
+
     from duo_spark.engine import DuoEngine
+
+    def status(url):
+        try:
+            with urllib.request.urlopen(url, timeout=60) as resp:
+                return resp.status
+        except urllib.error.HTTPError as e:
+            return e.code
 
     data_dir = os.path.join(scratch, "data")
     eng = DuoEngine(spark, data_dir, trigger_seconds=1)
-    # empty engine is queryable
-    assert eng.spans().count() == 0
-    src = eng.span_source
-    os.makedirs(src, exist_ok=True)
-    spark.createDataFrame(
-        [_rec(41, start=BASE, end=BASE + 10, tags=json.dumps({"k": "v"})),
-         _rec(42, start=BASE + 20)],
-        SPAN_SCHEMA,
-    ).write.mode("append").parquet(src)
-    eng.drain()
-    rows = {r.id: r for r in eng.spans().collect()}
-    assert set(rows) == {41}
-    assert json.loads(rows[41].tags) == {"k": "v"}
+    try:
+        assert eng.spans().count() == 0
+        assert eng.logs().count() == 0
+        host, port = eng.serve_http()
+        routes = ["/stats", "/api/traces", "/api/traces/1", "/api/services",
+                  "/api/services/web/operations", "/api/logs",
+                  "/api/logs/schema", "/api/logs/stats/level"]
+        got = {r: status(f"http://{host}:{port}{r}") for r in routes}
+        assert got == {r: 200 for r in routes}
+        mem = DuoEngine(spark, os.path.join(scratch, "mem"), memory_mode=True)
+        assert mem.spans().count() == 0 and mem.logs().count() == 0
+        src = eng.span_source
+        os.makedirs(src, exist_ok=True)
+        spark.createDataFrame(
+            [_rec(41, start=BASE, end=BASE + 10, tags=json.dumps({"k": "v"})),
+             _rec(42, start=BASE + 20)],
+            SPAN_SCHEMA,
+        ).write.mode("append").parquet(src)
+        eng.drain()
+        # the persistent path ran: versioned completed deltas on disk
+        span_root = eng.store.table_path("span")
+        assert glob.glob(os.path.join(span_root, "completed", "v=*"))
+        rows = {r.id: r for r in eng.spans().collect()}
+        assert set(rows) == {41}
+        assert json.loads(rows[41].tags) == {"k": "v"}
+    finally:
+        eng.stop()
 
 
 def test_streaming_hll_rollup_bit_identical_to_batch_sketch(spark, scratch, sf_dir):
