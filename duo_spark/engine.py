@@ -22,6 +22,15 @@ the query path reads one consistent source. ``memory_mode=True``
 reproduces T5 exactly: sinks are in-memory tables, nothing persists
 (duo/src/main.rs:60-63).
 
+Query path: ``serve_http`` builds a ``QueryService`` per request, but
+``spans()``/``logs()`` reuse each persistent table's frame until the
+table's store key changes — the span table's listed versions
+(``merge.completed_versions``), the log table's file-sink batch names
+(``PartitionedStore.sink_log``). A request over an unchanged store
+therefore pays a listing, not a schema-inference rebuild; a commit,
+a compaction or a replayed batch changes the key and the next request
+rebuilds. Memory mode has no key: it reads the catalog table afresh.
+
 Batch-replay determinism: ``drain()`` runs the pipelines with
 availableNow over everything staged so far and waits — the mode the
 tests and the correctness gate use; ``start_pipelines()`` runs them
@@ -32,6 +41,7 @@ from __future__ import annotations
 
 import os
 import posixpath
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -79,6 +89,9 @@ class DuoEngine:
         self._server: IngestServer | None = None
         self._http = None
         self._queries: list = []
+        #: table -> (store key, frame) of the last persistent read
+        self._frames: dict[str, tuple[object, DataFrame]] = {}
+        self._frames_lock = threading.Lock()
 
     # ------------------------------------------------------- ingest --
 
@@ -151,22 +164,52 @@ class DuoEngine:
 
     def _table_df(self, table: str, mem_table: str) -> DataFrame:
         """The table's current rows. A table with no rows yet reads as
-        an empty frame in its schema, so an empty engine is queryable."""
-        from duo_spark.streaming.merge import read_completed
+        an empty frame in its schema, so an empty engine is queryable.
 
+        A persistent table's frame is reused until its store key
+        changes (:meth:`_store_key`): the rebuild re-lists the files
+        and re-infers the schema in Spark jobs, while the key is a
+        listing or two. Key check and rebuild share one lock, so
+        concurrent requests after a commit rebuild once. Memory mode
+        reads the catalog table afresh each call (no job): a base frame
+        reused across actions would keep its first plan of the memory
+        sink's data."""
         if self.memory_mode:
             if self.spark.catalog.tableExists(mem_table):
                 return self.spark.table(mem_table)
-        else:
-            try:
-                if table == "span":
-                    return read_completed(
-                        self.spark, self.store.table_path("span")
-                    )
-                return HotColdTable(self.store, table).df()
-            except FileNotFoundError:
-                pass
-        return self.spark.createDataFrame([], _EMPTY_SCHEMAS[table])
+            return self.spark.createDataFrame([], _EMPTY_SCHEMAS[table])
+        with self._frames_lock:
+            key = self._store_key(table)
+            cached = self._frames.get(table)
+            if key is not None and cached is not None and cached[0] == key:
+                return cached[1]
+            df = self._read_table(table)
+            if key is None:
+                self._frames.pop(table, None)
+            else:
+                self._frames[table] = (key, df)
+            return df
+
+    def _store_key(self, table: str):
+        """A value that changes whenever a read of ``table`` would see
+        other files: the span table's listed versions, the log table's
+        file-sink batch names. None (no reuse) for a log table without
+        a sink log."""
+        from duo_spark.streaming.merge import completed_versions
+
+        if table == "span":
+            return completed_versions(self.spark, self.store.table_path("span"))
+        return self.store.sink_log(table)
+
+    def _read_table(self, table: str) -> DataFrame:
+        from duo_spark.streaming.merge import read_completed
+
+        try:
+            if table == "span":
+                return read_completed(self.spark, self.store.table_path("span"))
+            return HotColdTable(self.store, table).df()
+        except FileNotFoundError:
+            return self.spark.createDataFrame([], _EMPTY_SCHEMAS[table])
 
     def spans(self) -> DataFrame:
         return self._table_df("span", self._mem_spans)
@@ -175,7 +218,9 @@ class DuoEngine:
         return self._table_df("log", self._mem_logs)
 
     def query_service(self) -> QueryService:
-        """The HTTP-facing facade over the engine's current tables."""
+        """The HTTP-facing facade over the engine's current tables,
+        built fresh per call (the process registry stays live); the
+        two table frames are reused until the store changes."""
         return QueryService(
             self.spark,
             logs=self.logs(),

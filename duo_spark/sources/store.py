@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import json
 import posixpath
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +69,34 @@ def bloom_options(writer, column: str = "trace_id"):
         f"parquet.bloom.filter.expected.ndv#{column}",
         str(BLOOM_EXPECTED_NDV),
     )
+
+
+#: session conf deciding whether partition values are type-inferred
+#: ("hour=00" read as int 0) or kept as the strings they were written as
+_INFERENCE_CONF = "spark.sql.sources.partitionColumnTypeInference.enabled"
+_inference_lock = threading.Lock()
+
+
+def read_uninferred(spark: SparkSession, *paths: str, **options: str) -> DataFrame:
+    """``spark.read.options(**options).parquet(*paths)`` with
+    partition-value type inference OFF: partition columns come back as
+    the exact strings they were written as ("hour=00" stays "00").
+
+    The switch is a session-wide conf, so get → set → read → restore
+    runs under one module lock: concurrent readers (HTTP handler
+    threads, the operators' thread pools) would otherwise interleave
+    the steps — a read then runs with inference on, and the session
+    can be left with it off for good. Schema and partition discovery
+    happen eagerly inside ``parquet()``, so the conf can be restored
+    right after."""
+    with _inference_lock:
+        conf = spark.conf
+        old = conf.get(_INFERENCE_CONF, "true")
+        conf.set(_INFERENCE_CONF, "false")
+        try:
+            return spark.read.options(**options).parquet(*paths)
+        finally:
+            conf.set(_INFERENCE_CONF, old)
 
 
 def with_partition_cols(df: DataFrame, time_col: str, granularity: str = "minute") -> DataFrame:
@@ -139,19 +168,10 @@ class PartitionedStore:
         return self._read_uninferred(self.table_path(table))
 
     def _read_uninferred(self, *paths: str, base_path: str | None = None) -> DataFrame:
-        conf = self.spark.conf
-        key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        old = conf.get(key, "true")
-        conf.set(key, "false")
-        try:
-            # schema/partition discovery happens eagerly here, so the
-            # conf can be restored right after
-            reader = self.spark.read.option("mergeSchema", "true")
-            if base_path is not None:
-                reader = reader.option("basePath", base_path)
-            return reader.parquet(*paths)
-        finally:
-            conf.set(key, old)
+        options = {"mergeSchema": "true"}
+        if base_path is not None:
+            options["basePath"] = base_path
+        return read_uninferred(self.spark, *paths, **options)
 
     def read_range(
         self, table: str, start_us: int, end_us: int, time_col: str = "time"
@@ -210,6 +230,20 @@ class PartitionedStore:
             if name.startswith("date=") or name.endswith(".parquet"):
                 return True
         return False
+
+    def sink_log(self, table: str) -> tuple[str, ...] | None:
+        """Batch-file names in the table's streaming file-sink log
+        (``_spark_metadata``). When the log exists, Spark's reader lists
+        exactly the files it records, and each committed batch adds a
+        new name, so equal values mean a read sees the same files. None
+        when the table has no sink log (batch-written, or freshly
+        compacted)."""
+        fs, p = self._fs(posixpath.join(self.table_path(table), "_spark_metadata"))
+        if not fs.exists(p):
+            return None
+        # hidden names are checksums and in-flight temp files
+        names = (st.getPath().getName() for st in fs.listStatus(p))
+        return tuple(sorted(n for n in names if not n.startswith(".")))
 
     # -- K3: tiny JSON side files (process registry, merged log schema) --
 

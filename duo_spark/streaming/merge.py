@@ -50,11 +50,19 @@ in-batch merge).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duo_spark.functions.codec import tags_variant
-from duo_spark.streaming.rollup import _latest_id, _prune_versions, _version_ids
+from duo_spark.sources.store import read_uninferred
+from duo_spark.streaming.rollup import (
+    _latest_id,
+    _prune_versions,
+    _version_ids,
+    _version_stamps,
+)
 
 
 def _in_batch_partial(batch: DataFrame) -> DataFrame:
@@ -319,22 +327,6 @@ def _read_wm(spark, out_dir: str, vid: int | None) -> int | None:
     return int(bytes(data).decode("utf-8"))
 
 
-def _read_version(spark, path: str) -> DataFrame:
-    """Read one version dir with partition-value TYPE INFERENCE OFF —
-    partitioned completed versions (fast pipeline, K1 layout inside
-    each version) must yield the same string-typed date/hour/minute
-    columns the batch store reads, and versions written partitioned
-    and unpartitioned must union."""
-    conf = spark.conf
-    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    old = conf.get(key, "true")
-    conf.set(key, "false")
-    try:
-        return spark.read.parquet(path)
-    finally:
-        conf.set(key, old)
-
-
 def _first_completion_wins(parts: list[tuple[DataFrame, int]]) -> DataFrame:
     """Union completed versions and dedup by id keeping the row from
     the LOWEST version — the row merged while the span's open state
@@ -353,6 +345,32 @@ def _first_completion_wins(parts: list[tuple[DataFrame, int]]) -> DataFrame:
     )
 
 
+class CompletedVersions(NamedTuple):
+    """The versions a read of the completed-span table sees."""
+
+    #: newest compacted snapshot id, None before the first compaction
+    snapshot: int | None
+    #: sorted delta version ids above the snapshot
+    deltas: tuple[int, ...]
+    #: modification time of each listed version dir (snapshot first): a
+    #: replayed batch rewrites its own version in place (_publish_dir),
+    #: which changes no id but does change its dir's time
+    stamps: tuple[int, ...]
+
+
+def completed_versions(spark, out_dir: str) -> CompletedVersions:
+    """List the completed-span table: one listing of ``compacted/``
+    and one of ``completed/``, no Spark job. Equal values mean a read
+    sees the same files, so the value doubles as the table's store
+    key (``DuoEngine.spans``)."""
+    snaps = _version_stamps(spark, f"{out_dir}/compacted")
+    snapshot = max(snaps, default=None)
+    listed = _version_stamps(spark, f"{out_dir}/completed")
+    deltas = tuple(sorted(v for v in listed if snapshot is None or v > snapshot))
+    head = () if snapshot is None else (snaps[snapshot],)
+    return CompletedVersions(snapshot, deltas, head + tuple(listed[v] for v in deltas))
+
+
 def read_completed(spark, out_dir: str) -> DataFrame:
     """All spans completed so far: the newest compacted snapshot (if
     :func:`compact_completed` has run) plus every delta version above
@@ -361,19 +379,19 @@ def read_completed(spark, out_dir: str) -> DataFrame:
     and a late duplicate close dedups first-completion-wins (the
     snapshot counts as the earliest version). The dedup is one hash
     aggregate over snapshot+deltas; compaction keeps the snapshot
-    side pre-deduped."""
-    cvid = _latest_id(spark, f"{out_dir}/compacted")
-    deltas = [
-        v for v in _version_ids(spark, f"{out_dir}/completed")
-        if cvid is None or v > cvid
-    ]
+    side pre-deduped.
+
+    Versions read with partition-value type inference off: the K1
+    columns inside a partitioned version come back as the same strings
+    the batch store reads, so partitioned and flat versions union."""
+    versions = completed_versions(spark, out_dir)
     parts: list[tuple[DataFrame, int]] = []
-    if cvid is not None:
+    if versions.snapshot is not None:
         parts.append(
-            (_read_version(spark, f"{out_dir}/compacted/v={cvid}"), -1)
+            (read_uninferred(spark, f"{out_dir}/compacted/v={versions.snapshot}"), -1)
         )
-    for v in sorted(deltas):
-        parts.append((_read_version(spark, f"{out_dir}/completed/v={v}"), v))
+    for v in versions.deltas:
+        parts.append((read_uninferred(spark, f"{out_dir}/completed/v={v}"), v))
     if not parts:
         raise FileNotFoundError(f"no completed-span versions under {out_dir}")
     if len(parts) == 1:
@@ -416,11 +434,7 @@ def compact_completed(spark, out_dir: str, retain_latest: int = 2) -> int | None
     nothing to compact."""
     from duo_spark.streaming.rollup import _fs
 
-    cvid = _latest_id(spark, f"{out_dir}/compacted")
-    deltas = sorted(
-        v for v in _version_ids(spark, f"{out_dir}/completed")
-        if cvid is None or v > cvid
-    )
+    cvid, deltas, _ = completed_versions(spark, out_dir)
     fold = deltas[:-retain_latest] if retain_latest > 0 else deltas
     if not fold:
         # nothing new to fold — but still execute the DEFERRED
@@ -440,10 +454,10 @@ def compact_completed(spark, out_dir: str, retain_latest: int = 2) -> int | None
     parts: list[tuple[DataFrame, int]] = []
     if cvid is not None:
         parts.append(
-            (_read_version(spark, f"{out_dir}/compacted/v={cvid}"), -1)
+            (read_uninferred(spark, f"{out_dir}/compacted/v={cvid}"), -1)
         )
     for v in fold:
-        parts.append((_read_version(spark, f"{out_dir}/completed/v={v}"), v))
+        parts.append((read_uninferred(spark, f"{out_dir}/completed/v={v}"), v))
     merged = _first_completion_wins(parts)
     tmp = f"{out_dir}/compacted/.tmp-{upto}"
     if "date" in merged.columns:

@@ -111,19 +111,24 @@ def _fs(spark, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
-def _version_ids(spark, out_dir: str) -> list[int]:
+def _version_stamps(spark, out_dir: str) -> dict[int, int]:
+    """Version id -> modification time (ms) of its ``v=<id>`` dir."""
     fs, root = _fs(spark, out_dir)
     if not fs.exists(root):
-        return []
-    ids = []
+        return {}
+    stamps = {}
     for st in fs.listStatus(root):
         name = st.getPath().getName()
         if name.startswith("v="):
             try:
-                ids.append(int(name[2:]))
+                stamps[int(name[2:])] = st.getModificationTime()
             except ValueError:
                 continue
-    return sorted(ids)
+    return stamps
+
+
+def _version_ids(spark, out_dir: str) -> list[int]:
+    return sorted(_version_stamps(spark, out_dir))
 
 def _latest_id(spark, out_dir: str, below: int | None = None) -> int | None:
     ids = _version_ids(spark, out_dir)

@@ -61,10 +61,12 @@ def _route(service: QueryService, path: str, params: dict[str, Any]) -> Any:
 class DuoHTTPServer:
     """Serve a QueryService over HTTP on a daemon thread.
 
-    ``service_fn`` is called per request so the handler always sees the
-    engine's CURRENT tables (hot∪cold drifts as micro-batches land);
-    pass ``lambda: engine.query_service()`` for a live engine or a
-    fixed closure for a static snapshot.
+    ``service_fn`` is called per request. ``lambda:
+    engine.query_service()`` gives each request a fresh facade over
+    the engine's table frames, which the engine reuses until its store
+    key changes (a commit, compaction or replay), so every request sees
+    the tables as of its own start; pass a fixed closure for a static
+    snapshot.
     """
 
     def __init__(self, service_fn, host: str = "127.0.0.1", port: int = 0,

@@ -344,3 +344,51 @@ def test_compaction_zorder_same_results(spark, store):
     import pytest
     with pytest.raises(ValueError, match="zorder_by"):
         store.compact("span", to_granularity="date", zorder_by="nope")
+
+
+def test_uninferred_reads_race_free_under_concurrency(spark, store, tmp_path):
+    """Partition-value type inference is a session-wide conf that
+    uninferred reads switch off and restore. Eight threads reading a
+    partitioned table at once (through both users of the switch: the
+    store's table read and the completed-span version read) must each
+    get string date/hour/minute, and the conf must end where it began."""
+    import sys
+    import threading
+
+    from duo_spark.streaming.merge import fast_merge_processor, read_completed
+
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    orig = spark.conf.get(key, "true")
+    spans = _spans(spark, n=4)
+    store.write(spans, "span", time_col="start")
+    merged = str(tmp_path / "merged")
+    fast_merge_processor(merged, partition_completed=True)(spans, 0)
+    readers = [lambda: store.read("span"), lambda: read_completed(spark, merged)]
+    barrier = threading.Barrier(8)
+    types: list[tuple[str, str, str]] = []
+    errors: list[BaseException] = []
+
+    def work(i: int) -> None:
+        try:
+            barrier.wait(timeout=60)
+            for _ in range(16):
+                dtypes = dict(readers[i % 2]().dtypes)
+                types.append(tuple(dtypes[c] for c in ("date", "hour", "minute")))
+        except BaseException as e:  # noqa: BLE001 — surfaced below
+            errors.append(e)
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(types) == 128
+    assert set(types) == {("string", "string", "string")}
+    assert spark.conf.get(key, "true") == orig

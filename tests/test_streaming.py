@@ -882,6 +882,119 @@ def test_engine_serves_spans_from_fast_store(spark, scratch):
         eng.stop()
 
 
+def test_engine_reuses_frames_until_store_changes(spark, scratch):
+    """On an unchanged persistent store a second spans()/logs() call
+    returns the same frame and launches no Spark job; a commit changes
+    the span key and the next call rebuilds."""
+    from duo_spark.engine import DuoEngine
+    from duo_spark.schemas import LOG_CORE_SCHEMA
+
+    sc = spark.sparkContext
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    eng = DuoEngine(spark, os.path.join(scratch, "data"), trigger_seconds=1)
+    os.makedirs(eng.span_source, exist_ok=True)
+    os.makedirs(eng.log_source, exist_ok=True)
+    spark.createDataFrame(
+        [_rec(51, start=BASE, end=BASE + 10)], SPAN_SCHEMA
+    ).write.mode("append").parquet(eng.span_source)
+    spark.createDataFrame(
+        [("web-0", BASE, 1, 51, "INFO", "t", "f.rs", 1, "m")], LOG_CORE_SCHEMA
+    ).write.mode("append").parquet(eng.log_source)
+    eng.drain()
+    g = uuid.uuid4().hex
+    (spans, logs), built = jobs_in(f"build-{g}", lambda: (eng.spans(), eng.logs()))
+    assert built > 0, "the first read must rebuild (schema inference)"
+    (spans2, logs2), reused = jobs_in(f"reuse-{g}", lambda: (eng.spans(), eng.logs()))
+    assert spans2 is spans and logs2 is logs
+    assert reused == 0
+    spark.createDataFrame(
+        [_rec(52, start=BASE + 20, end=BASE + 30)], SPAN_SCHEMA
+    ).write.mode("append").parquet(eng.span_source)
+    eng.drain()
+    spans3 = eng.spans()
+    assert spans3 is not spans
+    assert {r.id for r in spans3.collect()} == {51, 52}
+
+
+def test_engine_http_fresh_after_each_store_change(spark, scratch):
+    """Reused frames never serve a stale store: after a first request,
+    each change shows on the next serve_http request — spans drained
+    later, a log field first sent later, a process registered later and
+    compaction (the frame's old delta versions are deleted). Compaction
+    comes last: a log pipeline restarted after it hides the log table
+    (an open defect, perfbench/NOTES.md)."""
+    import urllib.request
+
+    from duo_spark.engine import DuoEngine
+    from duo_spark.streaming.ingest_server import IngestClient
+
+    eng = DuoEngine(spark, os.path.join(scratch, "data"), trigger_seconds=1)
+    try:
+        ingest = eng.start_ingest()
+
+        def send(ids=(), fields=None, service=None):
+            c = IngestClient(*ingest)
+            try:
+                if service is not None:
+                    c.register_process(service)
+                for i in ids:
+                    c.record_span(id=i, parent_id=None, trace_id=i, name="op",
+                                  process_id="web-0", start=BASE + i,
+                                  end=BASE + i + 5, tags=None)
+                if fields is not None:
+                    c.record_log(process_id="web-0", time=BASE, level="INFO",
+                                 fields=fields)
+            finally:
+                c.close()
+            if ids or fields is not None:
+                eng.drain()
+
+        web = eng.serve_http()
+
+        def get(path):
+            url = f"http://{web[0]}:{web[1]}{path}"
+            with urllib.request.urlopen(url, timeout=120) as resp:
+                return json.loads(resp.read())
+
+        def span_ids():
+            data = get("/api/traces?limit=100")["data"]
+            return {int(s["spanID"]) for t in data for s in t["spans"]}
+
+        def log_fields():
+            return {f["name"] for f in get("/api/logs/schema")}
+
+        send(ids=(1, 2), fields={"message": "a"}, service="web")
+        assert span_ids() == {1, 2}
+        assert "tenant" not in log_fields()
+        assert get("/api/services")["data"] == ["web"]
+
+        send(ids=(3,))
+        assert span_ids() == {1, 2, 3}
+
+        send(fields={"message": "b", "tenant": "acme"})
+        assert "tenant" in log_fields()
+
+        send(service="worker")
+        assert get("/api/services")["data"] == ["web", "worker"]
+
+        before = span_ids()
+        # the second compaction deletes the deltas the first one folded,
+        # so a frame still planned over them would fail its scan
+        eng.compact(retain_latest=1)
+        eng.compact(retain_latest=1)
+        assert span_ids() == before
+    finally:
+        eng.stop()
+
+
 def test_streaming_hll_rollup_bit_identical_to_batch_sketch(spark, scratch, sf_dir):
     """Round 8 (VERDICT r7 #6): the streamed register merge must be
     BIT-identical to sketching the whole table at once, on any batch
@@ -1040,3 +1153,21 @@ def test_fast_merge_processor_replay_is_idempotent(spark, scratch):
     got = {(r.id, r.end) for r in read_completed(spark, out).collect()}
     assert got == {(2, BASE + 50), (1, BASE + 99)}
     assert read_open(spark, out).count() == 0
+
+
+def test_completed_versions_key_changes_on_replay(spark, scratch):
+    """A replayed batch rewrites its own completed version in place: no
+    version id changes, but the listing value (the engine's span store
+    key) must, or a reused frame would scan the replaced files."""
+    from duo_spark.streaming.merge import completed_versions, fast_merge_processor
+
+    out = os.path.join(scratch, "state")
+    proc = fast_merge_processor(out, partition_completed=True)
+    b0 = spark.createDataFrame([_rec(1, start=BASE, end=BASE + 5)], SPAN_SCHEMA)
+    proc(b0, 0)
+    first = completed_versions(spark, out)
+    assert (first.snapshot, first.deltas) == (None, (0,))
+    assert completed_versions(spark, out) == first
+    proc(b0, 0)
+    again = completed_versions(spark, out)
+    assert again.deltas == first.deltas and again != first
