@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from duo_spark.operators.materialize import checkpoint, release
+
 
 def word_freq_table(
     df: DataFrame, text_col: str = "text", min_len: int = 2, max_len: int = 12
@@ -86,26 +88,25 @@ def bpe_train(
     a tokenizer ships. One 1-row collect per iteration (the argmax
     pair) is the only driver traffic.
 
-    The iteration state rotates through ``localCheckpoint(eager=True)``
-    — NOT cache()/unpersist() (round-8 fix, SCALING.md probe 18): a
-    cached rotation leaves each iteration's ANALYZED plan referencing
-    the full projection chain back to the source, and re-analyzing
-    that growing tree every iteration compounds GEOMETRICALLY
+    The iteration state rotates through eager checkpoints, each
+    superseded one released — NOT cache()/unpersist() (round-8 fix,
+    SCALING.md probe 18): a cached rotation leaves each iteration's
+    ANALYZED plan referencing the full projection chain back to the
+    source, and re-analyzing that growing tree every iteration
+    compounds GEOMETRICALLY
     (measured ~1.7× per merge: iteration 18 took 97 s and tens of GB
     of driver heap on a 30-word table). The checkpoint truncates the
     lineage, making per-iteration cost flat (~0.2 s) and k-linear
     total — the difference between k≈15 and tokenizer-scale k.
     ``return_table=False`` (ADVICE r7) returns None as the first
-    element when only the merge list is wanted; the returned table
-    holds no cache a caller must release.
+    element when only the merge list is wanted, and releases the final
+    table too.
 
     Scale note: greedy top-1 still runs one Spark job per merge —
     exact (the oracle contract) but driver-bound at k≈30k.
     :func:`bpe_train_batched` cuts that to ~k/B jobs.
     """
-    cur = words.select("cnt", _spaced(F.col("word")).alias("sym")).localCheckpoint(
-        eager=True
-    )
+    cur = checkpoint(words.select("cnt", _spaced(F.col("word")).alias("sym")))
     merges: list[tuple[int, str, str, int]] = []
     for it in range(1, k + 1):
         pairs = _pair_counts(cur)
@@ -115,10 +116,13 @@ def bpe_train(
         pair, total = top[0]["pair"], int(top[0]["total"])
         left, right = pair.split(" ")
         merges.append((it, left, right, total))
-        cur = cur.select(
+        nxt = checkpoint(cur.select(
             "cnt", merge_pair(F.col("sym"), left, right).alias("sym")
-        ).localCheckpoint(eager=True)
+        ))
+        release(cur)
+        cur = nxt
     if not return_table:
+        release(cur)
         return None, merges
     return cur, merges
 
@@ -168,12 +172,10 @@ def bpe_train_batched(
     accept exactly this trade. When merges don't interact the output
     is PINNED IDENTICAL to :func:`bpe_train` (unit-tested).
 
-    Same return contract and localCheckpoint lineage rotation as
+    Same return contract and checkpoint lineage rotation as
     :func:`bpe_train`.
     """
-    cur = words.select("cnt", _spaced(F.col("word")).alias("sym")).localCheckpoint(
-        eager=True
-    )
+    cur = checkpoint(words.select("cnt", _spaced(F.col("word")).alias("sym")))
     merges: list[tuple[int, str, str, int]] = []
     it = 0
     while it < k:
@@ -205,8 +207,11 @@ def bpe_train_batched(
             it += 1
             merges.append((it, left, right, total))
             sym = merge_pair(sym, left, right)
-        cur = cur.select("cnt", sym.alias("sym")).localCheckpoint(eager=True)
+        nxt = checkpoint(cur.select("cnt", sym.alias("sym")))
+        release(cur)
+        cur = nxt
     if not return_table:
+        release(cur)
         return None, merges
     return cur, merges
 

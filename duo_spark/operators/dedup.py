@@ -26,6 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from duo_spark.operators.materialize import checkpoint
 from duo_spark.operators.util import ensure_parallelism
 
 _LOG = logging.getLogger(__name__)
@@ -283,7 +284,7 @@ def _banded_set_candidates(
         # rows the self-join shuffles anyway (id[, n], band, bucket
         # longs), so the storage footprint is the join input, not the
         # corpus.
-        banded = banded.localCheckpoint(eager=True)
+        banded = checkpoint(banded)
         hot = (
             banded.groupBy("band", "bucket")
             .agg(F.count(F.lit(1)).alias("_bc"))
@@ -419,15 +420,13 @@ def minhash_near_duplicates(
     # otherwise re-run the whole shingle+hash pipeline — plan-level
     # exchange reuse does not fire across these differently-pruned
     # subtrees. The materialized set table is small (distinct sets ×
-    # ~shingle count longs). Retention: the returned lazy plan holds
-    # these checkpointed blocks, so they persist until the caller's
-    # session drops them (clearCache between corpora in a long-lived
-    # service).
-    grp = (
+    # ~shingle count longs). Retention: the returned lazy plan reads
+    # these blocks, so the caller releases them (materialize.scope
+    # around each corpus in a long-lived service).
+    grp = checkpoint(
         sh.groupBy(F.sort_array("_hs").alias("_hs"))
         .agg(F.sort_array(F.collect_list("_id")).alias("_ids"))
         .withColumn("_rid", F.element_at("_ids", 1))
-        .localCheckpoint(eager=True)
     )
     # intra-group pairs: identical sets, jaccard exactly 1.0
     intra = (
@@ -503,9 +502,12 @@ def minhash_index(
     # per output (round 15). The checkpointed table is the sets frame's
     # own payload (~8 bytes per distinct shingle), so the footprint
     # matches what the caller materializes anyway.
-    sh = _hashed_shingles(df, id_col, text_col, shingle_n).localCheckpoint(
-        eager=True
-    )
+    sh = checkpoint(_hashed_shingles(df, id_col, text_col, shingle_n))
+    return _index_frames(sh, num_hashes, bands)
+
+
+def _index_frames(sh: DataFrame, num_hashes: int, bands: int):
+    """(bands_df, sets_df) of :func:`minhash_index` over (_id, _hs)."""
     sets = sh.select("_id", F.sort_array("_hs").alias("_hs"))
     return _band_rows(sh, num_hashes, bands, with_n=True), sets
 
@@ -545,11 +547,9 @@ def incremental_near_duplicates(
     # branches consume them (index probe, self-band l/r, three verify
     # sides) and would each re-run the shingle+hash pipeline otherwise.
     # Batches are small relative to the corpus by contract, so the
-    # checkpoint is bounded; blocks live until the caller's session
-    # drops them (clearCache between batches in a long-lived service).
-    new_sh = _hashed_shingles(new_df, id_col, text_col, shingle_n).localCheckpoint(
-        eager=True
-    )
+    # checkpoint is bounded; the caller releases it (materialize.scope
+    # around each batch in a long-lived service).
+    new_sh = checkpoint(_hashed_shingles(new_df, id_col, text_col, shingle_n))
     new_sets = new_sh.select("_id", F.sort_array("_hs").alias("_hs"))
     new_bands = _band_rows(new_sh, num_hashes, bands, with_n=True)
 
@@ -641,7 +641,7 @@ def ngram_jaccard_pairs(
         # minhash_near_duplicates' grp checkpoint; the exhaustive path
         # below keeps its single lazily-shared subtree, whose
         # self-join sides are one reused exchange)
-        sh = sh.localCheckpoint(eager=True)
+        sh = checkpoint(sh)
     tok = sh.select("_id", "_n", F.explode("_sh").alias("_t"))
     if max_doc_freq is not None:
         # document frequency per shingle, computed with one partial-agg
@@ -890,7 +890,7 @@ def simhash_near_duplicates(
     # per-word hash + 64 majority-vote bit aggregates) without this —
     # the same band-row checkpoint the minhash path already carries;
     # n_blocks rows/doc of (id, sig, block, key) is tiny vs the rescan
-    banded = banded.localCheckpoint(eager=True)
+    banded = checkpoint(banded)
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -1194,12 +1194,11 @@ def containment_pairs(
     if not 0.0 < t <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     sh = _hashed_shingles(df, id_col, text_col, shingle_n)
-    grp = (
+    grp = checkpoint(
         sh.groupBy(F.sort_array("_hs").alias("_hs"))
         .agg(F.sort_array(F.collect_list("_id")).alias("_ids"))
         .withColumn("_rid", F.element_at("_ids", 1))
         .withColumn("_sz", F.size("_hs"))
-        .localCheckpoint(eager=True)
     )
     intra = (
         grp.filter(F.size("_ids") > 1)

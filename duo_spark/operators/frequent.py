@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from duo_spark.operators.materialize import checkpoint
+
 
 def _mg_merge(cnt: dict, values, weights, capacity: int) -> None:
     """Fold (value, weight) pairs into a weighted Misra-Gries summary
@@ -102,9 +104,9 @@ def heavy_hitters(
             }
         )
 
-    summary = vals.mapInPandas(
+    summary = checkpoint(vals.mapInPandas(
         mg, schema=f"_v {vals.schema['_v'].dataType.simpleString()}, _n long"
-    ).localCheckpoint(eager=True)
+    ))
     n = int(summary.agg(F.sum("_n")).first()[0] or 0)
     cands = summary.filter(F.col("_v").isNotNull()).select("_v").distinct()
     return (

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from duo_spark.operators.materialize import checkpoint
 from duo_spark.operators.util import ensure_parallelism
 
 
@@ -82,11 +83,10 @@ def fuzzy_pairs(
         .filter(F.col("_txt").isNotNull())
     )
     # collapse identical strings (skew guard + free distance-0 pairs)
-    grp = (
+    grp = checkpoint(
         base.groupBy("_txt")
         .agg(F.sort_array(F.collect_list("_id")).alias("_ids"))
         .withColumn("_rid", F.element_at("_ids", 1))
-        .localCheckpoint(eager=True)
     )
     intra = (
         grp.filter(F.size("_ids") > 1)

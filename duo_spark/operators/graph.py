@@ -25,12 +25,16 @@ id, so the component label IS the star center.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from duo_spark.operators.util import release_rdd_ids, tracked_local_checkpoint
+from duo_spark.operators.materialize import (
+    checkpoint,
+    fits_driver,
+    persist_count,
+    release,
+    together,
+)
 
 
 def _canonical_edges(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
@@ -109,8 +113,9 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
 SMALL_GRAPH_EDGES = 2_000_000
 
 
-def _driver_union_find(edge_rows: list) -> list[tuple[int, int]]:
-    """Path-compressed union-find by min id; returns (node, component)."""
+def _driver_components(spark, edges) -> DataFrame:
+    """(node, component) of a pandas (src, dst) edge frame by a
+    path-compressed union-find by min id on the driver."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -121,13 +126,14 @@ def _driver_union_find(edge_rows: list) -> list[tuple[int, int]]:
             parent[x], x = root, parent[x]
         return root
 
-    for r in edge_rows:
-        a, b = find(r[0]), find(r[1])
+    for a, b in zip(edges["src"].tolist(), edges["dst"].tolist()):
+        a, b = find(a), find(b)
         if a != b:  # union by min id so the root IS the component label
             if a > b:
                 a, b = b, a
             parent[b] = a
-    return [(n, find(n)) for n in parent]
+    rows = [(n, find(n)) for n in parent]
+    return spark.createDataFrame(rows, "node long, component long")
 
 
 def connected_components(
@@ -135,7 +141,6 @@ def connected_components(
     a_col: str = "a",
     b_col: str = "b",
     max_iterations: int = 20,
-    small_graph_edges: int = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """Resolve a pair graph to components: (node, component) rows.
 
@@ -144,12 +149,13 @@ def connected_components(
     that want singleton rows join back to the full id set (see
     ``dedup.near_dup_clusters``).
 
-    Each round persists its edge set and localCheckpoints to truncate
-    the lineage (an iterative plan would otherwise grow a new join+agg
-    layer per round and recompile from the raw pairs every time).
+    Each round checkpoints its edge set to truncate the lineage (an
+    iterative plan would otherwise grow a new join+agg layer per round
+    and recompile from the raw pairs every time) and releases the
+    round it supersedes; the returned plan reads only the last one.
 
     Hybrid tail: the per-round fingerprint already counts edges, so
-    when the (shrinking) edge set drops under ``small_graph_edges``
+    when the (shrinking) edge set drops under ``SMALL_GRAPH_EDGES``
     the remaining components are resolved with one collect + driver
     union-find instead of more O(log n) shuffle rounds. Dedup pair
     graphs usually start under the cutoff — the distributed loop is
@@ -157,50 +163,34 @@ def connected_components(
     """
     edges = _canonical_edges(pairs, a_col, b_col)
     spark = pairs.sparkSession
-    # Fast path (round 15): when the OPTIMIZER'S size estimate says the
-    # edge set is plausibly under the driver cutoff, probe it with ONE
-    # limit(cutoff+1).collect() action instead of the 3-action
-    # checkpoint → fingerprint → collect sequence (each driver-
-    # synchronized job costs ~50-200 ms of fixed scheduling/AQE
-    # latency; CC runs inside 7 benched queries). The estimate gates
-    # the probe so the 100 TB path is untouched: a big graph skips the
-    # probe entirely (same checkpoint + fingerprint loop as before),
-    # and a mis-estimated big graph only pays one bounded partial
-    # pass (CollectLimit stops at cutoff+1 rows) before falling
-    # through to the unchanged distributed loop. 16 bytes/edge →
-    # 2M edges ≈ 32 MB; the 4x headroom covers estimate noise.
-    try:
-        est_bytes = int(
-            edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # Connect / API drift: skip the probe
-        est_bytes = None
-    if est_bytes is not None and est_bytes <= 64 * small_graph_edges:
-        probe = edges.limit(small_graph_edges + 1).collect()
-        if len(probe) <= small_graph_edges:
-            rows = _driver_union_find(probe)
-            return spark.createDataFrame(rows, "node long, component long")
-    edges = edges.localCheckpoint(eager=True)
+    # Fast path (round 15): a graph under the driver cutoff costs ONE
+    # bounded collect instead of the 3-action checkpoint → fingerprint
+    # → collect sequence (each driver-synchronized job costs ~50-200 ms
+    # of fixed latency; CC runs inside 7 benched queries).
+    small = fits_driver(edges, SMALL_GRAPH_EDGES)
+    if small is not None:
+        return _driver_components(spark, small)
+    edges = checkpoint(edges)
     prev = _fingerprint(edges)
-    if prev[0] <= small_graph_edges:
-        rows = _driver_union_find(edges.collect())
-        edges.unpersist()
-        return spark.createDataFrame(rows, "node long, component long")
+    if prev[0] <= SMALL_GRAPH_EDGES:
+        rows = edges.toPandas()
+        release(edges)
+        return _driver_components(spark, rows)
     for _ in range(max_iterations):
-        nxt = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        nxt = checkpoint(_small_star(_large_star(edges)))
         cur = _fingerprint(nxt)
-        edges.unpersist()
+        release(edges)
         edges = nxt
         if cur == prev:
             break
-        if cur[0] <= small_graph_edges:
+        if cur[0] <= SMALL_GRAPH_EDGES:
             # star rounds preserve every non-singleton node in the edge
             # set (the fixpoint labeling below relies on the same
             # property), so a union-find over the contracted edges
             # yields the final labels directly.
-            rows = _driver_union_find(edges.collect())
-            edges.unpersist()
-            return spark.createDataFrame(rows, "node long, component long")
+            rows = edges.toPandas()
+            release(edges)
+            return _driver_components(spark, rows)
         prev = cur
     else:
         raise RuntimeError(
@@ -252,44 +242,30 @@ def pagerank(
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     if checkpoint_every < 1:
         raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
-    spark = edges.sparkSession
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
-    e, scratch_ids = tracked_local_checkpoint(
+    e = checkpoint(
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"), w.alias("_w"))
     )
-    # round 15, three action trims (results bit-identical — the same
-    # plans run, just materialized with fewer driver barriers):
-    # - trans checkpoints CONCURRENTLY with the node-count job (both
-    #   read only the e checkpoint; guide §2.6);
-    # - nodes persist+count fuses the former checkpoint + count pair
-    #   into one job (the count materializes the cache);
-    # - the initial rank vector is a pure projection of the cached
-    #   nodes table — checkpointing it bought nothing (iteration 1
-    #   reads the cache either way), so its job is gone.
+    # round 15: trans checkpoints CONCURRENTLY with the one-job node
+    # persist+count (both read only e), and the initial rank vector is
+    # a pure projection of the cached nodes (no job of its own)
     outw = e.groupBy("_s").agg(F.sum("_w").alias("_tot"))
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        fut_trans = pool.submit(
-            lambda: tracked_local_checkpoint(
-                e.join(outw, "_s").select(
-                    "_s", "_d", (F.col("_w") / F.col("_tot")).alias("_p")
-                )
-            )
-        )
-        nodes = (
+    (nodes, n), trans = together(
+        lambda: persist_count(
             e.select(F.col("_s").alias("node"))
             .unionByName(e.select(F.col("_d").alias("node")))
             .distinct()
-            .persist()
-        )
-        n = nodes.count()
-        trans, ids = fut_trans.result()
-    finally:
-        pool.shutdown(wait=False)
-    scratch_ids |= ids
+        ),
+        lambda: checkpoint(
+            e.join(outw, "_s").select(
+                "_s", "_d", (F.col("_w") / F.col("_tot")).alias("_p")
+            )
+        ),
+    )
     sources = trans.select(F.col("_s").alias("node")).distinct()
     d = float(damping)
-    pr, pr_ids = nodes.select("node", F.lit(1.0 / n).alias("rank")), set()
+    # pr_ck: the last checkpointed rank vector, released when superseded
+    pr, pr_ck = nodes.select("node", F.lit(1.0 / n).alias("rank")), None
     for it in range(iterations):
         # dangling mass stays IN the plan: a one-row aggregate cross
         # joined onto the update, so each iteration adds no driver
@@ -316,20 +292,15 @@ def pagerank(
             )
         )
         if (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
-            nxt, nxt_ids = tracked_local_checkpoint(nxt)
-            # DataFrame.unpersist would NOT free localCheckpoint blocks —
-            # release the superseded rank vector through its tracked ids
-            release_rdd_ids(spark, pr_ids)
-            pr, pr_ids = nxt, nxt_ids
+            nxt = checkpoint(nxt)
+            release(pr_ck)
+            pr = pr_ck = nxt
         else:
             pr = nxt
-    pr, final_ids = tracked_local_checkpoint(pr)
-    release_rdd_ids(spark, pr_ids)
-    pr_ids = final_ids
+    pr = checkpoint(pr)
     # the returned plan reads only the final checkpointed rank vector;
     # edge/node/transition scratch blocks are no longer reachable
-    release_rdd_ids(spark, scratch_ids)
-    nodes.unpersist(False)
+    release(pr_ck, e, trans, nodes)
     return pr
 
 
@@ -358,7 +329,7 @@ def label_propagation(
     against the (node, label) vector and two partial-aggregated
     groupBys ((node, label) weight sums, then per-node argmax via
     max(struct)) — the same rank-vector join shape as :func:`pagerank`,
-    localCheckpointed per round with tracked-id release.
+    checkpointed per round, each superseded round released.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
@@ -374,17 +345,16 @@ def label_propagation(
     # neutral — per-round job overhead dominates there — but on a real
     # cluster the avoided exchange is the edge list itself.)
     n_part = spark.sparkContext.defaultParallelism
-    und, scratch_ids = tracked_local_checkpoint(
+    und = checkpoint(
         e0.unionByName(
             e0.select(F.col("_d").alias("_s"), F.col("_s").alias("_d"), "_w")
         ).repartition(n_part, F.col("_d"))
     )
-    nodes, ids = tracked_local_checkpoint(und.select(F.col("_s").alias("node")).distinct())
-    scratch_ids |= ids
+    nodes = checkpoint(und.select(F.col("_s").alias("node")).distinct())
     # the initial label vector is a pure projection of the checkpointed
     # node table — round 1 reads those blocks either way, so its former
     # eager checkpoint job is gone (round 15)
-    lab, lab_ids = nodes.select("node", F.col("node").alias("label")), set()
+    lab = nodes.select("node", F.col("node").alias("label"))
     for _ in range(iterations):
         incident = (
             und.join(lab.select(F.col("node").alias("_d"), "label"), "_d")
@@ -402,14 +372,14 @@ def label_propagation(
         # Dropping the join removes one equi-join and the second `lab`
         # consumer per round (round 14; results pinned identical by
         # the LPA oracle gates and tests).
-        nxt, nxt_ids = tracked_local_checkpoint(
+        nxt = checkpoint(
             incident.groupBy("node")
             .agg(F.max(F.struct(F.col("_wt"), (-F.col("label")).alias("_nl"))).alias("_b"))
             .select("node", (-F.col("_b._nl")).alias("label"))
         )
-        release_rdd_ids(spark, lab_ids)
-        lab, lab_ids = nxt, nxt_ids
-    release_rdd_ids(spark, scratch_ids)
+        release(lab)
+        lab = nxt
+    release(und, nodes)
     return lab
 
 
@@ -467,8 +437,9 @@ def triangle_count(
     # ~40 operators / 8 exchanges after (plans/r14/triangle_count_*).
     # The checkpointed table is exactly the (u, v) longs the wedge join
     # shuffles anyway; retention follows the minhash_near_duplicates
-    # convention (blocks live until the caller's session drops them).
-    e = e.localCheckpoint(eager=True)
+    # convention (the returned plan reads them; the caller's scope
+    # releases them).
+    e = checkpoint(e)
     wedges = (
         e.alias("e1")
         .join(e.alias("e2"), F.col("e1.v") == F.col("e2.u"))
@@ -529,56 +500,45 @@ def k_core(
     spark = edges.sparkSession
     fold_fraction = 0.2
     can = _canonical_edges(edges, src, dst)
-    # Bounded driver-side peel (round 15) — the CC hybrid-tail pattern
-    # (SMALL_GRAPH_EDGES cutoff, size-estimate gated so the 100 TB path
-    # is untouched): the k-core is the unique maximal subgraph with
-    # min-degree >= k, independent of peeling order/synchrony, and the
-    # degrees are integers — so a vectorized numpy peel over the
-    # collected canonical edges returns BIT-identical rows to the
-    # distributed rounds while replacing ~3 driver-synchronized jobs
-    # per cascade round with ONE toPandas. A mis-estimated big graph
-    # pays one bounded partial pass (limit stops at cutoff+1) and
-    # falls through to the unchanged distributed loop.
-    try:
-        est_bytes = int(
-            can._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # Connect / API drift: skip the probe
-        est_bytes = None
-    if est_bytes is not None and est_bytes <= 64 * SMALL_GRAPH_EDGES:
-        pdf = can.limit(SMALL_GRAPH_EDGES + 1).toPandas()
-        if len(pdf) <= SMALL_GRAPH_EDGES:
-            import numpy as np
-            import pandas as pd
+    # Bounded driver-side peel (round 15) — the CC hybrid-tail gate: the
+    # k-core is the unique maximal subgraph with min-degree >= k,
+    # independent of peeling order/synchrony, and the degrees are
+    # integers — so a vectorized numpy peel over the collected
+    # canonical edges returns BIT-identical rows to the distributed
+    # rounds while replacing ~3 driver-synchronized jobs per cascade
+    # round with ONE collect.
+    pdf = fits_driver(can, SMALL_GRAPH_EDGES)
+    if pdf is not None:
+        import numpy as np
+        import pandas as pd
 
-            e_src = pdf["src"].to_numpy()
-            e_dst = pdf["dst"].to_numpy()
-            nodes, inv = np.unique(
-                np.concatenate([e_src, e_dst]), return_inverse=True
+        e_src = pdf["src"].to_numpy()
+        e_dst = pdf["dst"].to_numpy()
+        nodes, inv = np.unique(
+            np.concatenate([e_src, e_dst]), return_inverse=True
+        )
+        si, di = inv[: len(e_src)], inv[len(e_src):]
+        alive = np.ones(len(nodes), dtype=bool)
+        e_alive = np.ones(len(e_src), dtype=bool)
+        deg = np.bincount(si, minlength=len(nodes)) + np.bincount(
+            di, minlength=len(nodes)
+        )
+        while True:
+            drop = alive & (deg < k)
+            if not drop.any():
+                break
+            alive &= ~drop
+            e_alive &= alive[si] & alive[di]
+            deg = np.bincount(si[e_alive], minlength=len(nodes)) + np.bincount(
+                di[e_alive], minlength=len(nodes)
             )
-            si, di = inv[: len(e_src)], inv[len(e_src):]
-            alive = np.ones(len(nodes), dtype=bool)
-            e_alive = np.ones(len(e_src), dtype=bool)
-            deg = np.bincount(si, minlength=len(nodes)) + np.bincount(
-                di, minlength=len(nodes)
-            )
-            while True:
-                drop = alive & (deg < k)
-                if not drop.any():
-                    break
-                alive &= ~drop
-                e_alive &= alive[si] & alive[di]
-                deg = np.bincount(si[e_alive], minlength=len(nodes)) + np.bincount(
-                    di[e_alive], minlength=len(nodes)
-                )
-            out = pd.DataFrame(
-                {"node": nodes[alive], "degree": deg[alive]}
-            ).astype({"node": "int64", "degree": "int64"})
-            return spark.createDataFrame(out, "node long, degree long")
-    und = _symmetric(can)
-    cur, cur_ids = tracked_local_checkpoint(und)
+        out = pd.DataFrame(
+            {"node": nodes[alive], "degree": deg[alive]}
+        ).astype({"node": "int64", "degree": "int64"})
+        return spark.createDataFrame(out, "node long, degree long")
+    cur = checkpoint(_symmetric(can))
     n0 = None
-    removed, removed_ids = None, set()
+    removed = None
     for _ in range(max_rounds):
         alive = cur
         if removed is not None:
@@ -589,7 +549,7 @@ def k_core(
                 F.broadcast(removed.withColumnRenamed("node", "dst")),
                 "dst", "left_anti",
             )
-        deg, deg_ids = tracked_local_checkpoint(
+        deg = checkpoint(
             alive.groupBy(F.col("src").alias("node")).agg(
                 F.count(F.lit(1)).alias("degree")
             )
@@ -605,18 +565,18 @@ def k_core(
         if row["s"] == row["t"]:
             # fixpoint: every surviving node already has degree >= k.
             # deg is checkpointed, so the edge blocks can be released.
-            release_rdd_ids(spark, cur_ids | removed_ids)
+            release(cur, removed)
             return deg
         drops = deg.filter(F.col("degree") < k).select("node")
-        nxt_removed, nxt_removed_ids = tracked_local_checkpoint(
+        nxt_removed = checkpoint(
             drops if removed is None else removed.unionByName(drops)
         )
-        release_rdd_ids(spark, removed_ids | deg_ids)
-        removed, removed_ids = nxt_removed, nxt_removed_ids
+        release(removed, deg)
+        removed = nxt_removed
         if n0 and (n0 - row["s"]) >= fold_fraction * n0:
             # removed set too big to keep broadcasting: fold it into
             # the edge list once and reset the delta
-            folded, folded_ids = tracked_local_checkpoint(
+            folded = checkpoint(
                 cur.join(
                     removed.withColumnRenamed("node", "src"),
                     "src", "left_anti",
@@ -625,9 +585,8 @@ def k_core(
                     "dst", "left_anti",
                 )
             )
-            release_rdd_ids(spark, cur_ids | removed_ids)
-            cur, cur_ids = folded, folded_ids
-            removed, removed_ids = None, set()
+            release(cur, removed)
+            cur, removed = folded, None
             n0 = row["s"]
     raise RuntimeError(
         f"k_core did not converge within {max_rounds} rounds"

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from duo_spark.operators.materialize import checkpoint
 from duo_spark.operators.util import floor_div_expr
 
 #: max (partition, key) chunk-offset entries inlined into the plan as
@@ -116,7 +117,7 @@ def overlap_pairs(
     # both self-join sides re-derive the spans lineage (scans, unions,
     # timestamp codecs) without this; one checkpoint of the narrow
     # 4-column projection makes it a single pass
-    base = spans.select(*cols).localCheckpoint(eager=True)
+    base = checkpoint(spans.select(*cols))
     out = interval_join(
         base, base, on=key, l_start=start, l_end=end, r_start=start, r_end=end,
         bucket_width=bucket_width,
@@ -212,14 +213,13 @@ def max_concurrency(
     # round-trip injective, so grouping by the string never merges
     # two distinct keys.
     _NULL_KEY = "\x00null"
-    d = (
+    d = checkpoint(
         ev.repartitionByRange(n, F.col(key), F.col("_t"), F.col("_d").desc())
         .sortWithinPartitions(F.col(key), F.col("_t"), F.col("_d").desc())
         .withColumn("_pid", F.spark_partition_id())
         .withColumn(
             "_kstr", F.coalesce(F.col(key).cast("string"), F.lit(_NULL_KEY))
         )
-        .localCheckpoint(eager=True)
     )
     chunk_totals = (
         d.groupBy("_pid", "_kstr").agg(F.sum("_d").alias("_tot")).collect()

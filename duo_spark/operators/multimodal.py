@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from duo_spark.operators.materialize import checkpoint
+
 #: media row: payload + typed metadata (mirrors a typical lakehouse layout)
 MEDIA_SCHEMA = T.StructType(
     [
@@ -2022,10 +2024,9 @@ def duplicate_frames(
     # checkpoint keeps only (media_id, frame_md5) — the binary frame
     # payload is dropped BEFORE materialization, so the stored table
     # is ~40 bytes/frame regardless of frame size.
-    fr = (
+    fr = checkpoint(
         sample_frames(media, frame_bytes, stride, max_frames, with_hash=True)
         .select("media_id", "frame_md5")
-        .localCheckpoint(eager=True)
     )
     dup = (
         fr.groupBy("frame_md5")
@@ -2304,8 +2305,10 @@ def dhash_near_dup(
         ),
     ).otherwise(F.col(hash_col))
     posted = (
-        hashes.select(F.col(id_col).alias("_id"), checked_hash.alias("_h"))
-        .localCheckpoint(eager=False)
+        checkpoint(
+            hashes.select(F.col(id_col).alias("_id"), checked_hash.alias("_h")),
+            eager=False,
+        )
         .select("_id", "_h", F.explode(segs).alias("_s"))
         .select("_id", "_h", F.col("_s.band").alias("_band"),
                 F.col("_s.val").alias("_val"))

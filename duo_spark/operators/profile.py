@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from duo_spark.operators.materialize import checkpoint
+
 
 def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Long-form column profile: one row per column with
@@ -213,10 +215,9 @@ def column_mi(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     the corpus groupBy six times). Nothing after the first shuffle
     exceeds |A x B| rows.
     """
-    j = (
+    j = checkpoint(
         df.groupBy(F.col(col_a).alias("_a"), F.col(col_b).alias("_b"))
         .agg(F.count(F.lit(1)).alias("_c"))
-        .localCheckpoint(eager=True)
     )
     ma = j.groupBy(F.col("_a").alias("_am")).agg(F.sum("_c").alias("_ca"))
     mb = j.groupBy(F.col("_b").alias("_bm")).agg(F.sum("_c").alias("_cb"))

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from duo_spark.operators.materialize import checkpoint
+
 
 def with_running_total(
     df: DataFrame,
@@ -43,11 +45,10 @@ def with_running_total(
     whole upstream plan twice.
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    d = (
+    d = checkpoint(
         df.repartitionByRange(n, F.col(order_col))
         .sortWithinPartitions(order_col)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     totals = {
         int(r["_pid"]): int(r["_t"])
@@ -186,11 +187,10 @@ def keyed_row_number(
     be partitioner-dependent across reruns.
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    d = (
+    d = checkpoint(
         df.repartitionByRange(n, F.col(key), *order_cols)
         .sortWithinPartitions(F.col(key), *order_cols)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     counts = d.groupBy("_pid", key).agg(F.count(F.lit(1)).alias("_c")).collect()
     seen: dict = {}

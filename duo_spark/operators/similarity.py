@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from duo_spark.operators.materialize import checkpoint
 from duo_spark.operators.util import ensure_parallelism
 
 
@@ -342,11 +343,11 @@ def _exact_pairs_blocked(
     matrix (n·dim·8 bytes): the documented bounded-baseline contract —
     the LSH method is the scale path.
 
-    The result is materialized EAGERLY (localCheckpoint) so the matrix
+    The result is materialized EAGERLY (checkpoint) so the matrix
     broadcast can be destroyed before returning — a service loop
     calling this per corpus would otherwise pin one matrix broadcast
     per call for the session lifetime. The returned plan's checkpoint
-    blocks are the caller's to release (checkpoint_scope), like every
+    blocks are the caller's to release (materialize.scope), like every
     other eager operator here. Ids keep their native (orderable) type;
     `<` matches the previous join form's semantics.
     """
@@ -417,7 +418,7 @@ def _exact_pairs_blocked(
                     }
                 )
 
-    out = src.mapInPandas(gen, out_schema).localCheckpoint(eager=True)
+    out = checkpoint(src.mapInPandas(gen, out_schema))
     bc.destroy()
     return out
 
@@ -760,9 +761,9 @@ def semantic_dedup(
     )
     # the assignment feeds two branches (pair generation, final
     # labeling); checkpoint so the pandas-UDF matmul runs once. Same
-    # retention trade-off as dedup.py's candidate table: the block
-    # lives until the session drops it.
-    assigned = assigned.localCheckpoint(eager=True)
+    # retention trade-off as dedup.py's candidate table: the caller's
+    # scope releases the block.
+    assigned = checkpoint(assigned)
     pairs = _within_cell_pairs(assigned, float(threshold), id_col)
     from duo_spark.operators.graph import connected_components
 

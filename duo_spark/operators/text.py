@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from duo_spark.operators.materialize import checkpoint
+
 #: tiny per-language stopword marker sets for the n-gram heuristic
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "en": ("the", "and", "of", "to", "a"),
@@ -337,15 +339,12 @@ def unigram_lm_score(
     # the (small) vocab table and the scoring join reuses it, so the
     # raw token stream is scanned exactly twice (vocab build + scoring)
     # instead of four times. Retention: the checkpointed blocks are
-    # referenced by the RETURNED lazy plan, so they cannot be
-    # unpersisted here; they live until the caller's session drops
-    # them (spark.catalog.clearCache() / session stop). Long-lived
-    # services re-scoring many corpora should materialize the result
-    # and clear the cache between calls.
-    vocab = (
+    # referenced by the RETURNED lazy plan, so they cannot be released
+    # here; long-lived services re-scoring many corpora materialize
+    # each result inside a materialize.scope.
+    vocab = checkpoint(
         toks.groupBy("_t")
         .agg(F.count(F.lit(1)).alias("_c"))
-        .localCheckpoint(eager=True)
     )
     total = float(vocab.agg(F.sum("_c")).first()[0])
     return (
@@ -568,9 +567,9 @@ def collocation_lift(
     # bigram build both read the materialized token arrays (the
     # bigram_lm_score checkpoint convention) — without this each side's
     # corpus scan re-runs split(trim(text)) per row
-    toks_arr = df.select(
+    toks_arr = checkpoint(df.select(
         F.split(F.trim(F.col(text_col)), r"\s+").alias("_ts")
-    ).localCheckpoint(eager=True)
+    ))
     toks = toks_arr.select(F.explode("_ts").alias("_w"))
     uni = toks.groupBy("_w").agg(F.count(F.lit(1)).alias("_c"))
     n_uni = uni.agg(F.sum("_c").alias("_n_uni"))
@@ -689,9 +688,9 @@ def bigram_lm_score(
     # (id, tokens) makes the regex run a single corpus pass; the
     # downstream explodes are cheap array codegen, and the >=2 filter
     # now reads the materialized array instead of re-running the regex.
-    toks_all = df.select(
+    toks_all = checkpoint(df.select(
         F.col(id_col).alias("_id"), search_tokens(text_col).alias("_ts")
-    ).localCheckpoint(eager=True)
+    ))
     toks = toks_all.filter(F.size("_ts") >= 2)
     pairs = toks.select(
         "_id",
@@ -712,11 +711,10 @@ def bigram_lm_score(
     # REGRESSION (+0.2s on bigram_lm/ccnet_buckets at sf0.1): the
     # cached columnar scan feeding the big scoring join costs more
     # than the saved job. Kept as the checkpoint.)
-    uni = (
+    uni = checkpoint(
         toks_all.select(F.explode("_ts").alias("_w1"))
         .groupBy("_w1")
         .agg(F.count(F.lit(1)).alias("_c1"))
-        .localCheckpoint(eager=True)
     )
     v = uni.count()
     bi = pairs.groupBy("_w1", "_w2").agg(F.count(F.lit(1)).alias("_c2"))
@@ -874,10 +872,9 @@ def zipf_slope(
     toks = df.select(
         F.explode(tokens(F.col(text_col))).alias("_w")
     ).filter(F.col("_w") != "")
-    tf = (
+    tf = checkpoint(
         toks.groupBy("_w")
         .agg(F.count(F.lit(1)).alias("_f"))
-        .localCheckpoint(eager=True)
     )
     totals = tf.agg(
         F.sum("_f").alias("n_tokens"), F.count(F.lit(1)).alias("n_types")
@@ -1173,10 +1170,13 @@ def ngram_diversity(
         # through the same aggregate, and the <= len(ns)·m-row result
         # is lazily checkpointed so its two consumers (totals,
         # estimate) never re-run the explode (round-12 review fix)
-        sk = hll_sketch(
-            grams.select("n", gh.alias("_gh")), ["n"], "_gh", m,
-            count_col="_cnt",
-        ).localCheckpoint(eager=False)
+        sk = checkpoint(
+            hll_sketch(
+                grams.select("n", gh.alias("_gh")), ["n"], "_gh", m,
+                count_col="_cnt",
+            ),
+            eager=False,
+        )
         est = hll_estimate(
             sk.select("n", "bucket", "register"), ["n"], m,
             small_correct=True,
@@ -1246,7 +1246,7 @@ def sentence_dedup(
     # probe; without a checkpoint the split+normalize regex pipeline
     # executes once per consumer (different exchanges — partial-agg vs
     # raw occurrence rows — so AQE cannot reuse them)
-    sents = split_sentences(df, id_col, text_col).withColumn(
+    sents = checkpoint(split_sentences(df, id_col, text_col).withColumn(
         "_nrm",
         F.trim(
             F.regexp_replace(
@@ -1255,7 +1255,7 @@ def sentence_dedup(
                 " ",
             )
         ),
-    ).localCheckpoint(eager=True)
+    ))
     pos = F.struct(
         F.col(id_col).alias("_d"), F.col("sentence_idx").alias("_i")
     )
@@ -1383,10 +1383,8 @@ def ccnet_buckets(
     # output join; checkpoint the 3-column frame once so the full
     # bigram-LM plan (explode + two count aggregates + two big joins)
     # doesn't execute twice
-    scored = (
-        df.select(id_col, lang_col)
-        .join(scores, id_col, "left")
-        .localCheckpoint(eager=False)
+    scored = checkpoint(
+        df.select(id_col, lang_col).join(scores, id_col, "left"), eager=False
     )
     th = (
         scored.filter(F.col("bigram_lm").isNotNull())

@@ -27,10 +27,15 @@ Scale notes:
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from duo_spark.operators.materialize import (
+    checkpoint,
+    persist_count,
+    release,
+    together,
+)
 
 DEFAULT_TRACE_LIMIT = 20  # duo/src/web/services.rs:11
 
@@ -257,49 +262,44 @@ def span_depths(spans: DataFrame, max_depth: int = 16) -> DataFrame:
     coalesce them to a sentinel depth; an id recorded with parents at
     DIFFERENT depths (corrupt graph) keeps one row per depth.
     """
-    # the two seed tables are independent — build them concurrently
-    # (guide §2.6), halving the fixed latency of the two eager jobs
-    pool = ThreadPoolExecutor(max_workers=2)
-    try:
-        fut_children = pool.submit(
-            lambda: spans.filter(F.col("parent_id").isNotNull())
-            .select("id", "parent_id")
-            .localCheckpoint(eager=True)
-        )
-        frontier = (
-            spans.filter(F.col("parent_id").isNull())
-            .select("id", F.lit(0).alias("depth"))
-            .distinct()
-            .persist()
-        )
-        frontier.count()
-        children = fut_children.result()
-    finally:
-        pool.shutdown(wait=False)
-    levels = [frontier]
+    return _bfs_levels(
+        spans,
+        max_depth,
+        root=["id", F.lit(0).alias("depth")],
+        child=["id", "parent_id"],
+        step=lambda children, frontier, d: children.join(
+            frontier.select(F.col("id").alias("parent_id")), "parent_id"
+        ).select("id", F.lit(d).alias("depth")),
+    )
+
+
+def _bfs_levels(spans, max_depth, root, child, step) -> DataFrame:
+    """Union of the BFS levels over the parent links: level 0 is the
+    ``root`` columns of the roots, level d the distinct rows of
+    ``step(children, level d-1, d)``, where ``children`` is the
+    ``child`` columns of the non-root spans. Stops at the first empty
+    level or after ``max_depth`` levels."""
+    # the two seed tables are independent — build them concurrently,
+    # halving the fixed latency of the two eager jobs
+    (frontier, _), children = together(
+        lambda: persist_count(
+            spans.filter(F.col("parent_id").isNull()).select(*root).distinct()
+        ),
+        lambda: checkpoint(
+            spans.filter(F.col("parent_id").isNotNull()).select(*child)
+        ),
+    )
+    out = frontier
     for d in range(1, max_depth + 1):
-        # persist + count fuses the old localCheckpoint + isEmpty pair
-        # into ONE driver-synchronized job per level (the count both
-        # materializes the level and answers the early-exit test);
+        # ONE driver-synchronized job per level: the count both
+        # materializes the level and answers the early-exit test;
         # lineage stays effectively flat because each level reads the
-        # previous level's in-memory blocks, and max_depth bounds the
-        # logical chain
-        nxt = (
-            children.join(
-                frontier.select(F.col("id").alias("parent_id")), "parent_id"
-            )
-            .select("id", F.lit(d).alias("depth"))
-            .distinct()
-            .persist()
-        )
-        if nxt.count() == 0:
-            nxt.unpersist(False)
+        # previous level's in-memory blocks, and max_depth bounds it
+        nxt, n = persist_count(step(children, frontier, d).distinct())
+        if n == 0:
+            release(nxt)
             break
-        levels.append(nxt)
-        frontier = nxt
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
+        out, frontier = out.unionByName(nxt), nxt
     return out
 
 
@@ -449,49 +449,19 @@ def service_paths(spans: DataFrame, max_depth: int = 8) -> DataFrame:
     depth. Spans not reaching a root within ``max_depth`` are absent;
     duplicate span ids keep one row per distinct (path, depth).
     """
-    # same two fusions as span_depths (round 15): concurrent seed
-    # builds, and persist+count folding each level's materialization
-    # and early-exit test into one job
-    pool = ThreadPoolExecutor(max_workers=2)
-    try:
-        fut_children = pool.submit(
-            lambda: spans.filter(F.col("parent_id").isNotNull())
-            .select("id", "parent_id", F.col("process_id").alias("_svc"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = (
-            spans.filter(F.col("parent_id").isNull())
-            .select("id", F.col("process_id").alias("path"), F.lit(0).alias("depth"))
-            .distinct()
-            .persist()
-        )
-        frontier.count()
-        children = fut_children.result()
-    finally:
-        pool.shutdown(wait=False)
-    levels = [frontier]
-    for d in range(1, max_depth + 1):
-        nxt = (
-            children.join(
-                frontier.select(F.col("id").alias("parent_id"), "path"), "parent_id"
-            )
-            .select(
-                "id",
-                F.concat_ws(">", "path", "_svc").alias("path"),
-                F.lit(d).alias("depth"),
-            )
-            .distinct()
-            .persist()
-        )
-        if nxt.count() == 0:
-            nxt.unpersist(False)
-            break
-        levels.append(nxt)
-        frontier = nxt
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+    return _bfs_levels(
+        spans,
+        max_depth,
+        root=["id", F.col("process_id").alias("path"), F.lit(0).alias("depth")],
+        child=["id", "parent_id", F.col("process_id").alias("_svc")],
+        step=lambda children, frontier, d: children.join(
+            frontier.select(F.col("id").alias("parent_id"), "path"), "parent_id"
+        ).select(
+            "id",
+            F.concat_ws(">", "path", "_svc").alias("path"),
+            F.lit(d).alias("depth"),
+        ),
+    )
 
 
 def top_service_paths(spans: DataFrame, k: int = 20, max_depth: int = 8) -> DataFrame:

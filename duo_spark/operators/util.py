@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from duo_spark.operators.materialize import estimated_bytes
+
 #: per-core bytes below which a compute-heavy input counts as "narrow":
 #: 8 MB/core is far under the 128 MB scan-split default, so the check
 #: only fires on inputs that would scan as a handful of partitions.
@@ -21,22 +23,16 @@ def ensure_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     split them. At real scale inputs are big and this is a no-op; on
     small inputs the sub-ms shuffle buys full-width execution.
 
-    The smallness test reads the optimizer's logical size estimate
-    (file-size sum for scans) — pure plan metadata. The previous form
-    asked ``df.rdd.getNumPartitions()``, which forces physical
-    planning + RDD DAG construction per call (~25 ms extra per fresh
-    DataFrame, measurable in a hot service loop); logical stats are
-    available right after analysis. Falls back to the partition-count
-    check where the JVM plan is unreachable (Spark Connect).
+    The smallness test reads the optimizer's size estimate — pure plan
+    metadata, where ``df.rdd.getNumPartitions()`` would force physical
+    planning per call (~25 ms per fresh DataFrame). A frame without an
+    estimate is left as is.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        est_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # Connect / API drift: fall back to the RDD check
-        if df.rdd.getNumPartitions() < max(2.0, target * min_fraction):
-            return df.repartition(target)
-        return df
-    if est_bytes < target * _SMALL_INPUT_BYTES_PER_CORE * min_fraction * 2:
+    est_bytes = estimated_bytes(df)
+    if est_bytes is not None and (
+        est_bytes < target * _SMALL_INPUT_BYTES_PER_CORE * min_fraction * 2
+    ):
         return df.repartition(target)
     return df
 
@@ -53,91 +49,6 @@ def floor_div_expr(expr: str, divisor: int) -> str:
     if divisor <= 0:
         raise ValueError(f"divisor must be positive, got {divisor}")
     return f"(({expr}) - pmod(({expr}), {divisor})) div {divisor}"
-
-
-def persistent_rdd_ids(spark) -> set[int]:
-    """Ids of RDDs currently holding storage (cached relations AND
-    eager localCheckpoints — the blocks several operators materialize
-    for plan reuse).
-
-    One py4j round trip (keys serialized as a string) instead of one
-    per persistent RDD: iterative operators snapshot this map twice
-    per tracked checkpoint, so the per-entry iterator form added a
-    py4j call pair per live block per snapshot (round 15)."""
-    keys = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().mkString(",")
-    return {int(k) for k in keys.split(",") if k}
-
-
-def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """Eager localCheckpoint that also reports which RDD ids gained
-    storage, so iterative operators can free a superseded snapshot.
-
-    ``DataFrame.unpersist`` only clears cacheManager entries — it does
-    NOT release localCheckpoint RDD blocks, so an iterative algorithm
-    that checkpoints per round (pagerank's rank vector) would otherwise
-    accumulate every round's blocks in executor storage for the session
-    lifetime. Pair with :func:`release_rdd_ids` when the snapshot is
-    superseded. The id diff attributes any block persisted between the
-    two snapshots to this checkpoint — exact for the single-driver
-    service loop this engine runs; concurrent jobs in the same session
-    could be over-released (they would recompute, not corrupt).
-    """
-    spark = df.sparkSession
-    before = persistent_rdd_ids(spark)
-    out = df.localCheckpoint(eager=True)
-    return out, persistent_rdd_ids(spark) - before
-
-
-def release_rdd_ids(spark, ids: set[int]) -> None:
-    """Non-blocking unpersist of the given RDD ids (no-op for ids that
-    already vanished)."""
-    if not ids:
-        return
-    sc = spark.sparkContext._jsc.sc()
-    it = sc.getPersistentRDDs().iterator()
-    while it.hasNext():
-        t = it.next()
-        if int(t._1()) in ids:
-            t._2().unpersist(False)
-
-
-class checkpoint_scope:
-    """Context manager releasing the checkpoint/cache blocks created
-    inside it — the retention answer for long-lived services.
-
-    Several operators eagerly localCheckpoint intermediates (minhash
-    set tables, CC edge rounds, LM vocabularies, running-sum inputs)
-    because multiple plan branches reuse them. The blocks are owned by
-    the RETURNED lazy plans, so the operators cannot free them; in a
-    service that runs corpus after corpus they accumulate in executor
-    storage. Wrap each unit of work::
-
-        with checkpoint_scope(spark):
-            result = minhash_near_duplicates(...)
-            result.write.parquet(...)      # materialize INSIDE the scope
-
-    On exit, every RDD that gained storage inside the scope is
-    unpersisted (non-blocking). Results must be materialized before
-    exit — after it, their plans would recompute from source. Scopes
-    nest (inner exits release only inner blocks); blocks persisted
-    before entry are untouched.
-    """
-
-    def __init__(self, spark):
-        self.spark = spark
-        self._before: set[int] = set()
-
-    def __enter__(self):
-        self._before = persistent_rdd_ids(self.spark)
-        return self
-
-    def __exit__(self, *exc) -> None:
-        sc = self.spark.sparkContext._jsc.sc()
-        it = sc.getPersistentRDDs().iterator()
-        while it.hasNext():
-            t = it.next()
-            if int(t._1()) not in self._before:
-                t._2().unpersist(False)
 
 
 def md5_uniform(key, seed: int, salt: str):

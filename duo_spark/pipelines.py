@@ -24,14 +24,13 @@ count over a column-pruned plan.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duo_spark.operators import dedup as _dedup
 from duo_spark.operators import graph as _graph
 from duo_spark.operators import text as _text
+from duo_spark.operators.materialize import checkpoint, together
 
 
 def curate_documents(
@@ -95,123 +94,122 @@ def curate_documents(
     # text rewritten to its deduped form; eager-checkpointed so the
     # sentence-keyed aggregate (one shuffle) never re-executes under
     # the downstream stage counts ---
-    # Independent eager actions run CONCURRENTLY on a 2-thread pool
-    # (guide §2.6: Spark happily runs several jobs at once; actions are
-    # only sequential because driver code calls them sequentially).
-    # Each funnel invocation is a chain of ~10 driver-synchronized jobs
-    # whose fixed latency (~50-200 ms each) dominates at small inputs
-    # and whose tails leave the cluster idle at large ones; pairing the
-    # independent ones (input count ∥ survivor checkpoint, stage-count
-    # aggregate ∥ exact-dedup checkpoint, n4 count ∥ LSH set-collapse)
-    # back-fills those gaps without touching what any stage computes.
-    pool = ThreadPoolExecutor(max_workers=2)
-    try:
-        lead_rows: list[tuple[str, int, int, int]] = []
-        if sentence_dedup:
-            fut_pre = pool.submit(docs.count)
+    # Independent eager actions run CONCURRENTLY (together): each funnel
+    # is a chain of ~10 driver-synchronized jobs whose fixed latency
+    # dominates at small inputs; pairing the independent ones (input
+    # count ∥ survivor checkpoint, stage-count aggregate ∥ exact-dedup
+    # checkpoint, n4 count ∥ LSH set-collapse) back-fills those gaps
+    # without touching what any stage computes.
+    lead_rows: list[tuple[str, int, int, int]] = []
+    if sentence_dedup:
+        raw = docs
+
+        def _sentence_deduped() -> DataFrame:
             sd = _text.sentence_dedup(
-                docs, id_col, text_col, max_doc_freq=sentence_max_doc_freq
+                raw, id_col, text_col, max_doc_freq=sentence_max_doc_freq
             )
             cols = [
                 F.col("text_dedup").alias(text_col) if c == text_col else F.col(c)
-                for c in docs.columns
+                for c in raw.columns
             ]
-            docs = (
-                docs.drop(text_col)
+            return checkpoint(
+                raw.drop(text_col)
                 .join(
                     sd.filter(F.col("n_kept") > 0).select(id_col, "text_dedup"),
                     id_col,
                 )
                 .select(cols)
-                .localCheckpoint(eager=True)
             )
-            n_post = docs.count()
-            n_pre = fut_pre.result()
-            lead_rows = [("sentence_dedup", n_pre, n_post, n_pre - n_post)]
 
-        # --- per-document predicate stages: one annotated projection,
-        # every flag a pure Column (no joins, rides the scan) ---
-        q = _text.quality_score(docs, text_col)
-        lang = _text.add_lang_id(q, text_col)
-        flags = lang.select(
-            *docs.columns,
-            (F.col("quality_score") >= min_quality).alias("_q_ok"),
-            F.col("lang_guess").isin(list(langs)).alias("_l_ok"),
-            (F.size(_text.blocklist_hits(F.col(text_col), blocklist)) == 0).alias(
-                "_b_ok"
+        n_pre, docs = together(raw.count, _sentence_deduped)
+        n_post = docs.count()
+        lead_rows = [("sentence_dedup", n_pre, n_post, n_pre - n_post)]
+
+    # --- per-document predicate stages: one annotated projection,
+    # every flag a pure Column (no joins, rides the scan) ---
+    q = _text.quality_score(docs, text_col)
+    lang = _text.add_lang_id(q, text_col)
+    flags = lang.select(
+        *docs.columns,
+        (F.col("quality_score") >= min_quality).alias("_q_ok"),
+        F.col("lang_guess").isin(list(langs)).alias("_l_ok"),
+        (F.size(_text.blocklist_hits(F.col(text_col), blocklist)) == 0).alias(
+            "_b_ok"
+        ),
+    )
+
+    # the text-predicate chain (tokenization + array folds is the
+    # per-row cost) executes exactly ONCE: materialize the
+    # quality-stage survivors WITH the remaining flag columns, then
+    # derive the n1/n2/n3 counts from the checkpoint with a cheap
+    # in-memory aggregate instead of a second full-chain pass (the
+    # round-14 form ran the chain twice — once for the counts
+    # aggregate over all rows, once to checkpoint the three-predicate
+    # survivors). n0 never needed the chain at all: it is a plain
+    # column-pruned count of the input (or the sentence-dedup stage's
+    # already-computed rows_out). The _q_ok filter sits BELOW the
+    # lang/blocklist projections after pushdown, so quality-failing
+    # rows skip the lang fold entirely — strictly less per-row work
+    # than the old all-rows counts pass. Trade: the checkpoint holds
+    # quality survivors (a superset of the old s3 table) — one extra
+    # flag-filter scan of in-memory blocks downstream, in exchange
+    # for dropping a full corpus tokenization pass.
+    s1, n0 = together(
+        lambda: checkpoint(flags.filter(F.col("_q_ok")).drop("_q_ok")),
+        (lambda: lead_rows[0][2]) if sentence_dedup else docs.count,
+    )
+    s3 = s1.filter(F.col("_l_ok") & F.col("_b_ok")).select(docs.columns)
+
+    # --- set-dependent dedup stages over the checkpointed survivors ---
+    norm = _dedup.normalize_text(F.col(text_col))
+    winners = (
+        s3.groupBy(norm.alias("_norm"))
+        .agg(F.min(id_col).alias(id_col))
+        .select(id_col)
+    )
+    # the stage-count aggregate and the exact-dedup checkpoint both
+    # read only the s1 checkpoint blocks — run them concurrently
+    s4, counts = together(
+        lambda: checkpoint(s3.join(winners, id_col, "left_semi")),
+        lambda: s1.agg(
+            F.count(F.lit(1)).alias("n1"),
+            F.sum(F.col("_l_ok").cast("long")).alias("n2"),
+            F.sum((F.col("_l_ok") & F.col("_b_ok")).cast("long")).alias("n3"),
+        ).collect()[0],
+    )
+
+    # n4 reads only the s4 checkpoint; the near-dup candidate build
+    # (LSH set collapse + banding) starts from the same blocks — overlap.
+    # Cluster-representative removal: every non-minimum member of a
+    # connected component drops (never a doc whose only duplicates
+    # were themselves removed — the A~B~C chain keeps A AND C's
+    # representative semantics consistent with dedup_clusters)
+    comps, n4 = together(
+        lambda: _graph.connected_components(
+            _dedup.minhash_near_duplicates(
+                s4, id_col, text_col, threshold=near_dup_threshold
             ),
-        )
+            a_col="id_a",
+            b_col="id_b",
+        ),
+        s4.count,
+    )
+    losers = (
+        comps.filter(F.col("node") != F.col("component"))
+        .select(F.col("node").alias(id_col))
+    )
+    s5 = s4.join(losers, id_col, "left_anti")
+    n5 = s5.count()
 
-        # the text-predicate chain (tokenization + array folds is the
-        # per-row cost) executes exactly ONCE: materialize the
-        # quality-stage survivors WITH the remaining flag columns, then
-        # derive the n1/n2/n3 counts from the checkpoint with a cheap
-        # in-memory aggregate instead of a second full-chain pass (the
-        # round-14 form ran the chain twice — once for the counts
-        # aggregate over all rows, once to checkpoint the three-predicate
-        # survivors). n0 never needed the chain at all: it is a plain
-        # column-pruned count of the input (or the sentence-dedup stage's
-        # already-computed rows_out). The _q_ok filter sits BELOW the
-        # lang/blocklist projections after pushdown, so quality-failing
-        # rows skip the lang fold entirely — strictly less per-row work
-        # than the old all-rows counts pass. Trade: the checkpoint holds
-        # quality survivors (a superset of the old s3 table) — one extra
-        # flag-filter scan of in-memory blocks downstream, in exchange
-        # for dropping a full corpus tokenization pass.
-        fut_n0 = None if sentence_dedup else pool.submit(docs.count)
-        s1 = flags.filter(F.col("_q_ok")).drop("_q_ok").localCheckpoint(eager=True)
-        n0 = lead_rows[0][2] if sentence_dedup else fut_n0.result()
-        # the stage-count aggregate and the exact-dedup checkpoint both
-        # read only the s1 checkpoint blocks — run them concurrently
-        fut_counts = pool.submit(
-            lambda: s1.agg(
-                F.count(F.lit(1)).alias("n1"),
-                F.sum(F.col("_l_ok").cast("long")).alias("n2"),
-                F.sum((F.col("_l_ok") & F.col("_b_ok")).cast("long")).alias("n3"),
-            ).collect()[0]
-        )
-        s3 = s1.filter(F.col("_l_ok") & F.col("_b_ok")).select(docs.columns)
-
-        # --- set-dependent dedup stages over the checkpointed survivors ---
-        norm = _dedup.normalize_text(F.col(text_col))
-        winners = (
-            s3.groupBy(norm.alias("_norm"))
-            .agg(F.min(id_col).alias(id_col))
-            .select(id_col)
-        )
-        s4 = s3.join(winners, id_col, "left_semi").localCheckpoint(eager=True)
-        counts = fut_counts.result()
-        # n4 reads only the s4 checkpoint; the near-dup candidate build
-        # (LSH set collapse + banding) starts from the same blocks — overlap
-        fut_n4 = pool.submit(s4.count)
-
-        pairs = _dedup.minhash_near_duplicates(
-            s4, id_col, text_col, threshold=near_dup_threshold
-        )
-        # cluster-representative removal: every non-minimum member of a
-        # connected component drops (never a doc whose only duplicates
-        # were themselves removed — the A~B~C chain keeps A AND C's
-        # representative semantics consistent with dedup_clusters)
-        comps = _graph.connected_components(pairs, a_col="id_a", b_col="id_b")
-        losers = (
-            comps.filter(F.col("node") != F.col("component"))
-            .select(F.col("node").alias(id_col))
-        )
-        s5 = s4.join(losers, id_col, "left_anti")
-        n4 = fut_n4.result()
-        n5 = s5.count()
-
-        n1, n2, n3 = counts["n1"], counts["n2"], counts["n3"]
-        funnel_rows = lead_rows + [
-            ("quality", n0, n1, n0 - n1),
-            ("language", n1, n2, n1 - n2),
-            ("blocklist", n2, n3, n2 - n3),
-            ("exact_dedup", n3, n4, n3 - n4),
-            ("near_dedup", n4, n5, n4 - n5),
-        ]
-        funnel = docs.sparkSession.createDataFrame(
-            funnel_rows, "stage string, rows_in long, rows_out long, removed long"
-        )
-    finally:
-        pool.shutdown(wait=False)
+    n1, n2, n3 = counts["n1"], counts["n2"], counts["n3"]
+    funnel_rows = lead_rows + [
+        ("quality", n0, n1, n0 - n1),
+        ("language", n1, n2, n1 - n2),
+        ("blocklist", n2, n3, n2 - n3),
+        ("exact_dedup", n3, n4, n3 - n4),
+        ("near_dedup", n4, n5, n4 - n5),
+    ]
+    funnel = docs.sparkSession.createDataFrame(
+        funnel_rows, "stage string, rows_in long, rows_out long, removed long"
+    )
     return {"kept": s5, "funnel": funnel}

@@ -28,6 +28,7 @@ from duo_spark.functions import codec as codec_fns
 from duo_spark.functions import time as time_fns
 from duo_spark.operators import dedup, similarity, text
 from duo_spark.operators.logs import field_stats, search_logs
+from duo_spark.operators.materialize import checkpoint, together
 from duo_spark.operators.spans import merge_span_records
 from duo_spark.operators.traces import (
     correlate_span_logs,
@@ -1173,9 +1174,9 @@ def q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fingerprint table feeds three consumers (both self-join sides
     # + the n_fp aggregate); checkpoint the small (doc_id, fp) rows once
     # so the md5-4gram + window-minima codegen runs one corpus pass
-    fps = text.winnowing_fingerprints(
+    fps = checkpoint(text.winnowing_fingerprints(
         docs, "doc_id", "text", k=4, w=5
-    ).localCheckpoint(eager=True)
+    ))
     matches = (
         fps.alias("A")
         .join(fps.alias("B"), "fp")
@@ -4083,9 +4084,9 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # makes the regex a single corpus pass (the bigram_lm_score /
     # collocation_lift convention); both downstream explodes are cheap
     # array codegen over the checkpointed rows.
-    toks_arr = _docs(spark, sf_dir).select(
+    toks_arr = checkpoint(_docs(spark, sf_dir).select(
         F.split(F.trim(F.col("text")), r"\s+").alias("_ts")
-    ).localCheckpoint(eager=True)
+    ))
     toks = F.col("_ts")
     bigrams = F.when(
         F.size(toks) >= 2,
@@ -4155,13 +4156,10 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the operator's contract is a PREBUILT (parquet-resident) index;
     # materialize it so the in-query build isn't re-run per plan
     # branch. The two checkpoints are independent reads of the index
-    # build's shared shingle table — run them concurrently (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fb = _pool.submit(lambda: bands_df.localCheckpoint(eager=True))
-        sets_df = sets_df.localCheckpoint(eager=True)
-        bands_df = _fb.result()
+    # build's shared shingle table — run them concurrently
+    sets_df, bands_df = together(
+        lambda: checkpoint(sets_df), lambda: checkpoint(bands_df)
+    )
     pairs = dedup.incremental_near_duplicates(
         bands_df, sets_df, batch, "doc_id", "text", threshold=0.5
     )
@@ -5394,23 +5392,17 @@ def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the three per-key profiles are independent pipelines (each runs
     # its own checkpoint + offsets-collect pair inside
     # with_running_total) — build them concurrently so the six eager
-    # jobs overlap instead of serializing (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(
-                lambda d=d, k=k, lbl=lbl: key_skew_profile(d, k).withColumn(
-                    "key", F.lit(lbl)
-                )
-            )
-            for d, k, lbl in (
-                (ev, "user_id", "events.user_id"),
-                (orders, "o_custkey", "orders.o_custkey"),
-                (li, "l_suppkey", "lineitem.l_suppkey"),
-            )
-        ]
-        parts = [f.result() for f in futs]
+    # jobs overlap instead of serializing
+    parts = together(*(
+        lambda d=d, k=k, lbl=lbl: key_skew_profile(d, k).withColumn(
+            "key", F.lit(lbl)
+        )
+        for d, k, lbl in (
+            (ev, "user_id", "events.user_id"),
+            (orders, "o_custkey", "orders.o_custkey"),
+            (li, "l_suppkey", "lineitem.l_suppkey"),
+        )
+    ))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -5509,9 +5501,8 @@ def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     # ONE corpus aggregate shared by train and encode (vocab-sized
-    # checkpoint; retention: released with the session cache, the
-    # lm_score policy)
-    words = word_freq_table(docs, "text").localCheckpoint(eager=True)
+    # checkpoint; retention: the caller's scope, the lm_score policy)
+    words = checkpoint(word_freq_table(docs, "text"))
     _none, merges = bpe_train(words, k=3, return_table=False)
     vocab = bpe_encode(docs, merges, "text", words=words)
     return vocab.orderBy(F.desc("n"), F.asc("token")).limit(20)
@@ -5677,7 +5668,7 @@ def q_cms_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # four consumers (sketch, top-5, hour list, exact window counts)
     # each re-scan events without this; one checkpoint of the narrow
     # (user_id, hr) projection makes it a single corpus pass
-    ev = ev.localCheckpoint(eager=True)
+    ev = checkpoint(ev)
     sk = cms_sketch(ev, "user_id", w=W, d=D, group_cols=["hr"])
     top = (
         ev.groupBy("user_id")
@@ -6207,7 +6198,7 @@ def q_hll_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three consumers (hourly sketch, hour list, exact window counts)
     # each re-scan events without this — same single-pass checkpoint
     # as cms_sliding
-    ev = ev.localCheckpoint(eager=True)
+    ev = checkpoint(ev)
     hourly = hll_sketch(ev, ["hr"], "user_id", m=256)
     hours = ev.select("hr").distinct()
     sk = hourly.select(

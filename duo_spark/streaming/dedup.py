@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from duo_spark.operators.dedup import normalize_text
+from duo_spark.operators.dedup import _hashed_shingles, _index_frames, normalize_text
+from duo_spark.operators.materialize import scope
 
 
 def streaming_dedup_exact(
@@ -86,58 +87,62 @@ def streaming_incremental_near_dup(
     only partially-written batch id is the one being replayed.
     Idempotent without a transactional sink.
 
+    Each batch runs in its own ``materialize.scope``: its shingle
+    checkpoints are released once its writes are done.
+
     Returns the started StreamingQuery (caller awaits/stops).
     """
     from duo_spark.operators.dedup import incremental_near_duplicates, minhash_index
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        empty_bands, empty_sets = minhash_index(
-            batch.limit(0), id_col, text_col, num_hashes, bands, shingle_n
-        )
-        # clean first-batch probe via the Hadoop FS (any scheme) — a
-        # read-then-catch would log a WARN stack trace per batch
-        jpath = spark._jvm.org.apache.hadoop.fs.Path
-        bands_path = jpath(f"{index_dir}/bands")
-        sets_path = jpath(f"{index_dir}/sets")
-        fs = bands_path.getFileSystem(spark._jsc.hadoopConfiguration())
+        with scope():
+            spark = batch.sparkSession
+            empty_bands, empty_sets = _empty_index(
+                batch, id_col, text_col, num_hashes, bands, shingle_n
+            )
+            # clean first-batch probe via the Hadoop FS (any scheme) — a
+            # read-then-catch would log a WARN stack trace per batch
+            jpath = spark._jvm.org.apache.hadoop.fs.Path
+            bands_path = jpath(f"{index_dir}/bands")
+            sets_path = jpath(f"{index_dir}/sets")
+            fs = bands_path.getFileSystem(spark._jsc.hadoopConfiguration())
 
-        def with_batch(schema):  # fresh copy — StructType.add mutates
-            return T.StructType(
-                list(schema.fields) + [T.StructField("batch", T.LongType())]
-            )
+            def with_batch(schema):  # fresh copy — StructType.add mutates
+                return T.StructType(
+                    list(schema.fields) + [T.StructField("batch", T.LongType())]
+                )
 
-        # both dirs must exist (a crash between the bands and sets
-        # writes of the FIRST batch leaves bands present, sets absent),
-        # and batch < batch_id: a replayed batch must not probe its own
-        # index rows (they'd re-emit every batch-internal pair in both
-        # orientations), and the only batch id that can hold a torn
-        # bands-without-sets write IS the replayed one
-        if fs.exists(bands_path) and fs.exists(sets_path):
-            idx_bands = (
-                spark.read.schema(with_batch(empty_bands.schema))
-                .parquet(f"{index_dir}/bands")
-                .filter(F.col("batch") < batch_id)
-                .drop("batch")
+            # both dirs must exist (a crash between the bands and sets
+            # writes of the FIRST batch leaves bands present, sets absent),
+            # and batch < batch_id: a replayed batch must not probe its own
+            # index rows (they'd re-emit every batch-internal pair in both
+            # orientations), and the only batch id that can hold a torn
+            # bands-without-sets write IS the replayed one
+            if fs.exists(bands_path) and fs.exists(sets_path):
+                idx_bands = (
+                    spark.read.schema(with_batch(empty_bands.schema))
+                    .parquet(f"{index_dir}/bands")
+                    .filter(F.col("batch") < batch_id)
+                    .drop("batch")
+                )
+                idx_sets = (
+                    spark.read.schema(with_batch(empty_sets.schema))
+                    .parquet(f"{index_dir}/sets")
+                    .filter(F.col("batch") < batch_id)
+                    .drop("batch")
+                )
+            else:
+                idx_bands, idx_sets = empty_bands, empty_sets
+            pairs = incremental_near_duplicates(
+                idx_bands, idx_sets, batch, id_col, text_col,
+                threshold, num_hashes, bands, shingle_n,
             )
-            idx_sets = (
-                spark.read.schema(with_batch(empty_sets.schema))
-                .parquet(f"{index_dir}/sets")
-                .filter(F.col("batch") < batch_id)
-                .drop("batch")
+            pairs.write.mode("overwrite").parquet(f"{pairs_dir}/batch={batch_id}")
+            b_bands, b_sets = minhash_index(
+                batch, id_col, text_col, num_hashes, bands, shingle_n
             )
-        else:
-            idx_bands, idx_sets = empty_bands, empty_sets
-        pairs = incremental_near_duplicates(
-            idx_bands, idx_sets, batch, id_col, text_col,
-            threshold, num_hashes, bands, shingle_n,
-        )
-        pairs.write.mode("overwrite").parquet(f"{pairs_dir}/batch={batch_id}")
-        b_bands, b_sets = minhash_index(
-            batch, id_col, text_col, num_hashes, bands, shingle_n
-        )
-        b_bands.write.mode("overwrite").parquet(f"{index_dir}/bands/batch={batch_id}")
-        b_sets.write.mode("overwrite").parquet(f"{index_dir}/sets/batch={batch_id}")
+            b_bands.write.mode("overwrite").parquet(f"{index_dir}/bands/batch={batch_id}")
+            b_sets.write.mode("overwrite").parquet(f"{index_dir}/sets/batch={batch_id}")
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -145,3 +150,11 @@ def streaming_incremental_near_dup(
         .trigger(availableNow=True)
         .start()
     )
+
+
+def _empty_index(batch, id_col, text_col, num_hashes, bands, shingle_n):
+    """Empty ``(bands_df, sets_df)`` in the index's schemas (the first
+    batch's index; the schemas the stored index is read with), planned
+    lazily over ``batch.limit(0)``: no Spark job."""
+    sh = _hashed_shingles(batch.limit(0), id_col, text_col, shingle_n)
+    return _index_frames(sh, num_hashes, bands)

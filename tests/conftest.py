@@ -32,6 +32,36 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture(scope="session")
+def persistent_ids(spark):
+    """Callable: ids of the RDDs currently holding storage (cached
+    frames and checkpoints)."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def ids() -> set[int]:
+        keys = jsc.getPersistentRDDs().keySet().mkString(",")
+        return {int(k) for k in keys.split(",") if k}
+
+    return ids
+
+
+@pytest.fixture(scope="session")
+def plan_rdd_ids():
+    """Callable: ids of the checkpoint RDDs a frame's logical plan reads
+    (its LogicalRDD leaves)."""
+
+    def ids(df) -> set[int]:
+        it = df._jdf.queryExecution().logical().collectLeaves().iterator()
+        out = set()
+        while it.hasNext():
+            leaf = it.next()
+            if leaf.nodeName() == "LogicalRDD":
+                out.add(int(leaf.rdd().id()))
+        return out
+
+    return ids
+
+
 def _gen_spans_logs(n_traces: int = 40, seed: int = 7):
     """Deterministic span/log fixture shaped like the reference's data
     (FIXTURES.md §A): span trees of 1-6 spans, logs attached to spans,

@@ -8,6 +8,7 @@ import random
 from pyspark.sql import functions as F
 
 from duo_spark.operators import dedup
+from duo_spark.operators import graph as G
 from duo_spark.operators.graph import connected_components
 
 
@@ -28,47 +29,85 @@ def _union_find(edges: list[tuple[int, int]]) -> dict[int, int]:
     return {n: find(n) for n in parent}
 
 
-def _cc(
-    spark, edges: list[tuple[int, int]], small_graph_edges: int = 2_000_000
-) -> dict[int, int]:
+def _cc(spark, edges: list[tuple[int, int]]) -> dict[int, int]:
     df = spark.createDataFrame(edges or [(0, 0)], "a long, b long")
     if not edges:
         df = df.filter(F.lit(False))
-    got = connected_components(df, "a", "b", small_graph_edges=small_graph_edges)
+    got = connected_components(df, "a", "b")
     return {r.node: r.component for r in got.collect()}
 
 
-def test_cc_chain(spark):
+def test_cc_chain(spark, monkeypatch):
     # a long chain is the worst case for naive propagation; force the
     # distributed star loop (cutoff 0 disables the driver fast path)
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
     edges = [(i, i + 1) for i in range(1, 30)]
-    assert _cc(spark, edges, small_graph_edges=0) == _union_find(edges)
+    assert _cc(spark, edges) == _union_find(edges)
 
 
-def test_cc_multiple_components_and_cycles(spark):
+def test_cc_multiple_components_and_cycles(spark, monkeypatch):
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
     edges = [(1, 2), (2, 3), (3, 1), (10, 11), (12, 11), (20, 21), (21, 22), (22, 20), (7, 7)]
     want = _union_find([(a, b) for a, b in edges if a != b])
-    assert _cc(spark, edges, small_graph_edges=0) == want
+    assert _cc(spark, edges) == want
 
 
-def test_cc_random_graph_matches_union_find(spark):
+def test_cc_random_graph_matches_union_find(spark, monkeypatch):
     rng = random.Random(13)
     nodes = list(range(100))
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(120)]
     edges = [(a, b) for a, b in edges if a != b]
     # distributed loop and driver union-find fast path must agree
-    assert _cc(spark, edges, small_graph_edges=0) == _union_find(edges)
+    with monkeypatch.context() as m:
+        m.setattr(G, "SMALL_GRAPH_EDGES", 0)
+        assert _cc(spark, edges) == _union_find(edges)
     assert _cc(spark, edges) == _union_find(edges)
 
 
-def test_cc_mid_loop_handoff_matches(spark):
+def test_cc_mid_loop_handoff_matches(spark, monkeypatch):
     # cutoff sits between the raw edge count (two 20-cliques = 380) and
     # the star-contracted count (→ ~38), so the loop runs distributed
     # rounds first and then hands the shrunken graph to the driver
     # union-find mid-loop
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 100)
     edges = [(a, b) for a in range(1, 21) for b in range(a + 1, 21)]
     edges += [(a, b) for a in range(100, 120) for b in range(a + 1, 120)]
-    assert _cc(spark, edges, small_graph_edges=100) == _union_find(edges)
+    assert _cc(spark, edges) == _union_find(edges)
+
+
+def test_iterative_operators_keep_only_blocks_their_result_reads(
+    spark, monkeypatch, persistent_ids, plan_rdd_ids
+):
+    """Outside any scope, a multi-round CC and a bpe_train run release
+    every superseded round: the only blocks they leave are the ones
+    their returned plan reads (CC: the final star edge set; bpe: the
+    final symbolized table; none when the table is not returned)."""
+    from duo_spark.operators.bpe import bpe_train
+
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)  # distributed rounds
+    chains = [(i, i + 1) for i in range(1, 301)]
+    chains += [(i, i + 1) for i in range(1001, 1301)]
+    df = spark.createDataFrame(chains, "a long, b long")
+    before = persistent_ids()
+    labels = connected_components(df, "a", "b")
+    reads = plan_rdd_ids(labels)
+    assert len(reads) == 1  # the distributed loop ran
+    assert persistent_ids() - before == reads
+    got = {r.node: r.component for r in labels.collect()}
+    assert got == _union_find(chains)
+
+    words = spark.createDataFrame(
+        [("lower", 5), ("lowest", 2), ("newer", 6), ("wider", 3)],
+        "word string, cnt long",
+    )
+    before = persistent_ids()
+    table, merges = bpe_train(words, k=4)
+    assert len(merges) == 4
+    assert persistent_ids() - before == plan_rdd_ids(table)
+    assert len(plan_rdd_ids(table)) == 1
+    before = persistent_ids()
+    _none, merges = bpe_train(words, k=4, return_table=False)
+    assert persistent_ids() - before == set()
 
 
 def test_cc_empty(spark):

@@ -13,6 +13,7 @@ import math
 import duckdb
 import pytest
 
+from duo_spark.operators.materialize import scope
 from duo_spark.queries import QUERIES
 
 TABLES = (
@@ -50,8 +51,15 @@ def _rows(df_pandas):
 
 
 @pytest.mark.parametrize(("name", "fn", "sql"), ORACLE_CASES, ids=[c[0] for c in ORACLE_CASES])
-def test_oracle_parity(spark, duck, sf_dir, name, fn, sql):
-    got = fn(spark, sf_dir).toPandas()
+def test_oracle_parity(spark, duck, sf_dir, persistent_ids, name, fn, sql):
+    before = persistent_ids()
+    with scope():
+        got = fn(spark, sf_dir).toPandas()
+        # only ids created inside the scope: earlier tests' non-blocking
+        # releases make the full set racy
+        created = persistent_ids() - before
+    leaked = created & persistent_ids()
+    assert not leaked, f"{name}: blocks outlived their scope: {sorted(leaked)}"
     want = duck.execute(sql).df()
     assert sorted(got.columns) == sorted(want.columns), (
         f"{name}: columns {sorted(got.columns)} != {sorted(want.columns)}"

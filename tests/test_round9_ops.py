@@ -376,7 +376,7 @@ def test_k_core_driver_peel_matches_distributed(spark, monkeypatch, tmp_path):
     )
     df = spark.read.parquet(str(tmp_path / "edges"))
     with monkeypatch.context() as m:
-        m.setattr(G, "tracked_local_checkpoint", _no_checkpoint)
+        m.setattr(G, "checkpoint", _no_checkpoint)
         fast = {(r.node, r.degree) for r in G.k_core(df, 8).collect()}
     monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
     slow = {(r.node, r.degree) for r in G.k_core(df, 8).collect()}

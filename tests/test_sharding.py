@@ -166,37 +166,34 @@ def test_pack_sequences_validates_params(spark):
 
 
 # ---------------------------------------------------------------------
-# checkpoint_scope (operators/util.py) — service retention hygiene
+# materialize.scope — service retention hygiene
 # ---------------------------------------------------------------------
 
-def test_checkpoint_scope_releases_blocks(spark):
+def test_checkpoint_scope_releases_blocks(spark, persistent_ids):
     """Blocks checkpointed inside the scope are gone after exit;
     pre-existing blocks survive; results materialized inside stay
     correct."""
-    from pyspark.sql import functions as F
     from duo_spark.operators import dedup
-    from duo_spark.operators.util import checkpoint_scope, persistent_rdd_ids
+    from duo_spark.operators.materialize import checkpoint, release, scope
 
-    outer = (spark.range(10).localCheckpoint(eager=True))
-    base = persistent_rdd_ids(spark)
+    outer = checkpoint(spark.range(10))
+    base = persistent_ids()
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta {i % 3}") for i in range(60)],
         "doc_id long, text string")
-    with checkpoint_scope(spark):
+    with scope():
         pairs = dedup.minhash_near_duplicates(docs, "doc_id", "text", threshold=0.5)
         got = pairs.count()
-        inside = persistent_rdd_ids(spark)
         # compare only ids CREATED inside the scope: earlier tests'
-        # non-blocking unpersist(False) can asynchronously drop ids out
-        # of `base` between snapshots, so a strict-superset check on the
+        # non-blocking releases can asynchronously drop ids out of
+        # `base` between snapshots, so a strict-superset check on the
         # full set is racy (flaked in the round-4 full-suite run)
-        created = inside - base
+        created = persistent_ids() - base
         assert created                            # something was pinned
-    after = persistent_rdd_ids(spark)
-    assert not (after & created)                  # …and released
+    assert not (persistent_ids() & created)       # …and released
     assert outer.count() == 10                    # pre-existing block intact
     assert got > 0
-    outer.unpersist()
+    release(outer)
 
 
 # ---------------------------------------------------------------------

@@ -336,6 +336,42 @@ def test_streaming_incremental_dedup_equals_batch(spark, tmp_path, docs_small=No
     assert got == want and len(got) > 0
 
 
+def test_streaming_incremental_dedup_releases_batch_blocks(
+    spark, tmp_path, sf_dir, persistent_ids
+):
+    """Each micro-batch runs in its own scope: after N batches no RDD
+    persisted during the stream is still held, and the empty-index
+    schema probe is planned lazily (0 Spark jobs)."""
+    from duo_spark.streaming.dedup import _empty_index, streaming_incremental_near_dup
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    src = str(tmp_path / "in")
+    for k in (0, 1, 2):
+        docs.filter(F.col("doc_id") % 3 == k).coalesce(1) \
+            .write.mode("append").parquet(src)
+    stream = (spark.readStream.schema("doc_id long, text string")
+              .option("maxFilesPerTrigger", "1").parquet(src))
+    before = persistent_ids()
+    q = streaming_incremental_near_dup(
+        stream, "doc_id", "text",
+        index_dir=str(tmp_path / "idx"), pairs_dir=str(tmp_path / "pairs"),
+        checkpoint_dir=str(tmp_path / "ckpt"), threshold=0.5)
+    q.awaitTermination()
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 3
+    assert persistent_ids() - before == set()
+    assert spark.read.parquet(str(tmp_path / "pairs")).count() > 0
+
+    sc = spark.sparkContext
+    sc.setJobGroup("empty-index-probe", "schema probe")
+    try:
+        bands_df, sets_df = _empty_index(docs, "doc_id", "text", 64, 16, 3)
+        names = (bands_df.schema.fieldNames(), sets_df.schema.fieldNames())
+    finally:
+        sc._jsc.sc().clearJobGroup()
+    assert names == (["_id", "_n", "band", "bucket"], ["_id", "_hs"])
+    assert list(sc.statusTracker().getJobIdsForGroup("empty-index-probe")) == []
+
+
 def test_streaming_enrich_static_rebroadcast(spark, tmp_path):
     """Stream-static left join: every batch sees the dimension;
     unmatched stream rows keep NULLs; plan never shuffles the stream."""
