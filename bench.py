@@ -18,6 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from duo_spark.operators.materialize import scope  # noqa: E402
 from duo_spark.queries import QUERIES  # noqa: E402
 from duo_spark.session import get_spark  # noqa: E402
 
@@ -298,8 +299,13 @@ BENCH_EXCLUDED = {
 }
 
 
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def _run(fn, spark, sf_dir: str) -> None:
+    """Build and force one query (noop sink: full execution, no driver
+    materialization) inside its own ``materialize.scope()``, so the
+    blocks it checkpoints or persists are freed before the next run
+    and no run reads another's cached levels."""
+    with scope():
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
 
 def _cpu_ticks() -> tuple[int, int] | None:
@@ -376,7 +382,7 @@ def main() -> None:
     warm_dir = "/root/testdata/sf0.001"
     for name in BENCH_QUERIES:
         try:
-            _force(QUERIES[name][0](spark, warm_dir))
+            _run(QUERIES[name][0], spark, warm_dir)
         except Exception as e:  # noqa: BLE001 — warmup must never kill the run
             print(f"warmup {name} failed: {e}", file=sys.stderr)
     # drop warmup debris (broadcast refs, cached relations) before
@@ -414,7 +420,7 @@ def main() -> None:
         for _ in range(RUNS):
             t0 = time.perf_counter()
             try:
-                _force(fn(spark, sf_dir))
+                _run(fn, spark, sf_dir)
                 samples.append(time.perf_counter() - t0)
             except Exception as e:  # noqa: BLE001
                 errors[name] = f"{type(e).__name__}: {str(e).splitlines()[0][:200]}"

@@ -29,7 +29,12 @@ table's store key changes — the span table's listed versions
 (``PartitionedStore.sink_log``). A request over an unchanged store
 therefore pays a listing, not a schema-inference rebuild; a commit,
 a compaction or a replayed batch changes the key and the next request
-rebuilds. Memory mode has no key: it reads the catalog table afresh.
+rebuilds. The trace routes read one more frame, ``traces()``: every
+span with its correlated logs, persisted once per (span key, log key)
+by the first trace request after a change, so ``/api/traces/:id`` is
+a ``trace_id`` filter over it and ``/api/traces`` a ``filter_traces``.
+Memory mode has no key: it reads the catalog tables afresh and
+correlates per request.
 
 Batch-replay determinism: ``drain()`` runs the pipelines with
 availableNow over everything staged so far and waits — the mode the
@@ -47,6 +52,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from duo_spark.ingest import ProcessRegistry
+from duo_spark.operators.materialize import persist_count, release
+from duo_spark.operators.traces import correlate_span_logs
 from duo_spark.schemas import LOG_CORE_SCHEMA
 from duo_spark.sources.logschema import LogSchemaRegistry
 from duo_spark.sources.store import HotColdTable, PartitionedStore
@@ -89,7 +96,8 @@ class DuoEngine:
         self._server: IngestServer | None = None
         self._http = None
         self._queries: list = []
-        #: table -> (store key, frame) of the last persistent read
+        #: table -> (store key, frame) of the last persistent read;
+        #: "trace" holds the persisted trace-ready frame (:meth:`traces`)
         self._frames: dict[str, tuple[object, DataFrame]] = {}
         self._frames_lock = threading.Lock()
 
@@ -179,16 +187,21 @@ class DuoEngine:
                 return self.spark.table(mem_table)
             return self.spark.createDataFrame([], _EMPTY_SCHEMAS[table])
         with self._frames_lock:
-            key = self._store_key(table)
-            cached = self._frames.get(table)
-            if key is not None and cached is not None and cached[0] == key:
-                return cached[1]
-            df = self._read_table(table)
-            if key is None:
-                self._frames.pop(table, None)
-            else:
-                self._frames[table] = (key, df)
-            return df
+            return self._current(table)[1]
+
+    def _current(self, table: str) -> tuple[object, DataFrame]:
+        """(store key, frame) of a persistent table, rebuilt when the key
+        changed. The caller holds ``_frames_lock``."""
+        key = self._store_key(table)
+        cached = self._frames.get(table)
+        if key is not None and cached is not None and cached[0] == key:
+            return cached
+        df = self._read_table(table)
+        if key is None:
+            self._frames.pop(table, None)
+        else:
+            self._frames[table] = (key, df)
+        return key, df
 
     def _store_key(self, table: str):
         """A value that changes whenever a read of ``table`` would see
@@ -217,15 +230,52 @@ class DuoEngine:
     def logs(self) -> DataFrame:
         return self._table_df("log", self._mem_logs)
 
+    def traces(self) -> DataFrame:
+        """The trace-ready frame: ``correlate_span_logs(spans(), logs())``,
+        one row per span with its log rollup and error flag, which the
+        trace routes filter.
+
+        A persistent store keeps one such frame per (span key, log key):
+        the first call after either key changes builds it under
+        ``_frames_lock`` with :func:`persist_count`, releasing the
+        previous one, so the engine owns at most one. ``persist()``
+        stores it at Spark's MEMORY_AND_DISK level, so the block manager
+        bounds its memory and spills the rest; no size gate applies.
+        Without a key (memory mode, or a log table with no sink log) the
+        same frame is returned as a plain, unpersisted plan."""
+        if self.memory_mode:
+            return correlate_span_logs(self.spans(), self.logs())
+        with self._frames_lock:
+            (span_key, spans), (log_key, logs) = self._current("span"), self._current("log")
+            key = None if log_key is None else (span_key, log_key)
+            cached = self._frames.get("trace")
+            if key is not None and cached is not None and cached[0] == key:
+                return cached[1]
+            self._release_traces()
+            df = correlate_span_logs(spans, logs)
+            if key is not None:
+                df, _ = persist_count(df)
+                self._frames["trace"] = (key, df)
+            return df
+
+    def _release_traces(self) -> None:
+        """Free the persisted trace frame, if any. The caller holds
+        ``_frames_lock``."""
+        old = self._frames.pop("trace", None)
+        if old is not None:
+            release(old[1])
+
     def query_service(self) -> QueryService:
         """The HTTP-facing facade over the engine's current tables,
         built fresh per call (the process registry stays live); the
-        two table frames are reused until the store changes."""
+        two table frames are reused until the store changes, and the
+        trace frame is built only when a trace route asks for it."""
         return QueryService(
             self.spark,
             logs=self.logs(),
             spans=self.spans(),
             processes=self.process_registry.processes(),
+            trace_frame=self.traces,
         )
 
     def serve_http(self, host: str = "127.0.0.1", port: int = 0, request_hook=None):
@@ -279,3 +329,5 @@ class DuoEngine:
         for q in self._queries:
             q.stop()
         self._queries = []
+        with self._frames_lock:
+            self._release_traces()

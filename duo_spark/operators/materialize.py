@@ -50,9 +50,10 @@ def persist_count(df: DataFrame) -> tuple[DataFrame, int]:
 def release(*dfs: DataFrame | None) -> None:
     """Non-blocking release of frames made by :func:`checkpoint` or
     :func:`persist_count` (None and released frames are no-ops). A
-    checkpoint unpersists its own RDD (``DataFrame.unpersist`` would
-    free nothing); a cached frame drops its cache entry. A released
-    frame leaves the open scope, which then holds only live frames.
+    checkpoint frees its own RDD's blocks (``DataFrame.unpersist``
+    would free nothing); a cached frame drops its cache entry. A
+    released frame leaves the open scope, which then holds only live
+    frames.
 
     Reading a released checkpoint RAISES: its lineage was cut, so the
     blocks cannot be recomputed. A released cached frame recomputes."""
@@ -64,9 +65,14 @@ def release(*dfs: DataFrame | None) -> None:
             owned.pop(id(df), None)
         plan = df._jdf.queryExecution().logical()
         if plan.nodeName() == "LogicalRDD":
-            rdd = plan.rdd()
-            if rdd.getStorageLevel().isValid():  # NONE once released
-                rdd.unpersist(False)
+            # SparkContext.unpersistRDD, not RDD.unpersist: the latter
+            # logs a "locally checkpointed ... cannot be recomputed"
+            # WARN per checkpoint. It leaves the RDD's storage level
+            # set, so a released checkpoint is one no longer listed.
+            sc = df.sparkSession.sparkContext._jsc.sc()
+            rdd_id = plan.rdd().id()
+            if sc.getPersistentRDDs().contains(rdd_id):
+                sc.unpersistRDD(rdd_id, False)
         else:
             df.unpersist(False)
 

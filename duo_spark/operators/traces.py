@@ -189,15 +189,6 @@ def distinct_operations(spans: DataFrame, service: str | None = None) -> DataFra
     return out.select("name").distinct()
 
 
-def get_trace_by_id(spans: DataFrame, logs: DataFrame, trace_id: int) -> DataFrame:
-    """`/api/traces/:id` — spans of one trace enriched with logs
-    (duo/src/web/services.rs:96-130). Equality predicate on trace_id
-    reaches the parquet scan (bloom filter + row-group pruning)."""
-    tspans = spans.filter(F.col("trace_id") == F.lit(trace_id))
-    tlogs = logs.filter(F.col("trace_id") == F.lit(trace_id))
-    return correlate_span_logs(tspans, tlogs)
-
-
 def enrich_process(df: DataFrame, processes: DataFrame) -> DataFrame:
     """J4 — broadcast-join the tiny process registry
     (duo/src/memory.rs:90-100). The registry's ``tags`` column is

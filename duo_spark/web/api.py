@@ -36,7 +36,7 @@ Lenient-binding rules reproduced:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Mapping
+from typing import Any, Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -108,12 +108,18 @@ class QueryService:
 
     ``processes`` is the process.json registry content:
     pid -> {"id", "service_name", "tags"} (duo/src/memory.rs:141-148).
+
+    ``trace_frame()`` returns the trace-ready frame the trace routes
+    filter: every span with its correlated logs (``DuoEngine.traces``
+    keeps one per store version). Without it each trace request
+    correlates ``spans`` with ``logs`` itself.
     """
 
     spark: SparkSession
     logs: DataFrame
     spans: DataFrame
     processes: dict[str, dict[str, Any]] = field(default_factory=dict)
+    trace_frame: Callable[[], DataFrame] | None = None
 
     # ------------------------------------------------------------ logs --
 
@@ -187,7 +193,7 @@ class QueryService:
         """GET /api/traces (duo/src/web/trace.rs:36-41 ->
         services.rs:13-94) — full Jaeger envelope."""
         admitted = trace_ops.filter_traces(
-            self.spans,
+            self._traces(),
             service=params.get("service"),
             operation=params.get("operation") or None,
             start_us=_opt_us(params.get("start")),
@@ -205,16 +211,20 @@ class QueryService:
         tid = _opt_int(trace_id)
         if tid is None:
             raise NotFound(f"trace {trace_id} not found")
-        tspans = self.spans.filter(self.spans["trace_id"] == tid)
-        return self._shape_traces(tspans)
+        traces = self._traces()
+        return self._shape_traces(traces.filter(traces["trace_id"] == tid))
 
-    def _shape_traces(self, admitted_spans: DataFrame) -> dict[str, Any]:
-        """Shared tail of the two trace endpoints: fetch the admitted
-        traces' logs (J3), correlate per span (J1+A3), then group the
-        BOUNDED result driver-side and serialize (services.rs:78-93).
+    def _traces(self) -> DataFrame:
+        """Spans with their correlated logs (J1+A3): a log joins its
+        span by ``span_id`` alone, whatever its own ``trace_id``."""
+        if self.trace_frame is not None:
+            return self.trace_frame()
+        return trace_ops.correlate_span_logs(self.spans, self.logs)
+
+    def _shape_traces(self, enriched: DataFrame) -> dict[str, Any]:
+        """Shared tail of the two trace endpoints: group the BOUNDED
+        admitted spans driver-side and serialize (services.rs:78-93).
         """
-        tlogs = trace_ops.logs_for_traces(self.logs, admitted_spans)
-        enriched = trace_ops.correlate_span_logs(admitted_spans, tlogs)
         by_trace: dict[int, list[dict[str, Any]]] = {}
         core = ("time", "level", "message", "target", "file", "line")
         for row in enriched.collect():

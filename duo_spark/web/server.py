@@ -63,10 +63,10 @@ class DuoHTTPServer:
 
     ``service_fn`` is called per request. ``lambda:
     engine.query_service()`` gives each request a fresh facade over
-    the engine's table frames, which the engine reuses until its store
-    key changes (a commit, compaction or replay), so every request sees
-    the tables as of its own start; pass a fixed closure for a static
-    snapshot.
+    the engine's table frames and trace frame, which the engine reuses
+    until its store key changes (a commit, compaction or replay), so
+    every request sees the current store; pass a fixed closure for a
+    static snapshot.
     """
 
     def __init__(self, service_fn, host: str = "127.0.0.1", port: int = 0,

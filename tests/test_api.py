@@ -140,6 +140,55 @@ def test_get_trace_golden(svc):
         svc.get_trace("not-a-u64")
 
 
+def test_get_trace_returns_only_the_asked_trace(spark, spans_df, logs_df):
+    """Every span /api/traces/:id returns carries the asked trace id,
+    and the trace's whole span set comes back."""
+    from pyspark.sql import functions as F
+
+    svc = QueryService(spark, logs=logs_df, spans=spans_df)
+    tid = spans_df.select("trace_id").first()["trace_id"]
+    data = svc.get_trace(tid)["data"]
+    assert [t["traceID"] for t in data] == [str(tid)]
+    got = {int(s["spanID"]) for s in data[0]["spans"]}
+    assert all(s["traceID"] == str(tid) for s in data[0]["spans"])
+    want = {r.id for r in spans_df.filter(F.col("trace_id") == tid).collect()}
+    assert got == want
+
+
+def test_span_logs_join_by_span_id_alone(spark):
+    """A log joins its span by span_id whatever its own trace_id says
+    (DEVIATIONS #25): both trace routes show it, and list_traces does
+    not depend on which other traces are admitted."""
+    spans = spark.createDataFrame(
+        [
+            (10, None, 1, "GET /", "web-0", BASE, BASE + 1000, None),
+            (20, None, 2, "GET /x", "web-0", BASE + 5000, BASE + 5400, None),
+        ],
+        SPAN_SCHEMA,
+    )
+    logs = spark.createDataFrame(
+        [
+            ("web-0", BASE + 50, 1, 10, "INFO", "http", None, None, "own"),
+            # span 10's log, stamped with trace 2's id
+            ("web-0", BASE + 60, 2, 10, "ERROR", "http", None, None, "stray"),
+        ],
+        LOG_CORE_SCHEMA,
+    )
+    svc = QueryService(spark, logs=logs, spans=spans, processes=PROCESSES)
+
+    def messages(env, tid):
+        (trace,) = [t for t in env["data"] if t["traceID"] == str(tid)]
+        (span,) = trace["spans"]
+        return sorted(f["value"] for lg in span["logs"] for f in lg["fields"]
+                      if f["key"] == "message")
+
+    alone = svc.list_traces({"start": str(BASE), "end": str(BASE + 10)})
+    assert [t["traceID"] for t in alone["data"]] == ["1"]
+    for env in (svc.get_trace(1), alone, svc.list_traces({})):
+        assert messages(env, 1) == ["own", "stray"]
+    assert messages(svc.list_traces({}), 2) == []
+
+
 def test_services_and_operations(svc):
     assert svc.services()["data"] == ["api", "web"]
     assert svc.operations("web")["data"] == ["GET /", "GET /x"]

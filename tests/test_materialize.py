@@ -51,7 +51,19 @@ def test_released_frames_leave_the_scope(spark, persistent_ids):
         release(a)
         release(a)
         assert list(s._owned.values()) == [b]
-        assert a._jdf.queryExecution().logical().rdd().getStorageLevel().isValid() is False
+        assert a._jdf.queryExecution().logical().rdd().id() not in persistent_ids()
+    assert not (persistent_ids() - before)
+
+
+def test_bench_runs_free_their_blocks(spark, sf_dir, persistent_ids):
+    """bench.py runs each query in its own scope: a trace_waterfall run
+    (persisted and checkpointed BFS levels) leaves no block behind, so
+    the next run cannot read the last one's cache."""
+    import bench
+    from duo_spark.queries import QUERIES
+
+    before = persistent_ids()
+    bench._run(QUERIES["trace_waterfall"][0], spark, sf_dir)
     assert not (persistent_ids() - before)
 
 

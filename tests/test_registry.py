@@ -171,7 +171,6 @@ OPERATOR_GATE_WAIVERS = {
     "media_stats": "approx-percentile twin of gated multimodal_stats",
     "scd2_merge": "incremental twin of gated scd2_history build",
     "assemble_traces": "API-layer trace assembly (web/serialize path)",
-    "get_trace_by_id": "API-layer point lookup (web/serialize path)",
     # real-codec hooks: the decode path is gated through
     # audio_stats/image_stats; these are the extract_features hooks
     "decode_image": "hook form; decode_bmp/png gated via image_stats",

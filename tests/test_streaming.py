@@ -28,6 +28,18 @@ def scratch():
     return _scratch("test", uuid.uuid4().hex)
 
 
+def _jobs_in(spark, fn):
+    """(fn(), the number of Spark jobs it started) — counted in a fresh
+    job group."""
+    sc, group = spark.sparkContext, uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_replay_withholds_open_spans_and_merges_closed(spark):
     records = [
         # span 1: open then close, tags from both records merge
@@ -925,16 +937,6 @@ def test_engine_reuses_frames_until_store_changes(spark, scratch):
     from duo_spark.engine import DuoEngine
     from duo_spark.schemas import LOG_CORE_SCHEMA
 
-    sc = spark.sparkContext
-
-    def jobs_in(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
     eng = DuoEngine(spark, os.path.join(scratch, "data"), trigger_seconds=1)
     os.makedirs(eng.span_source, exist_ok=True)
     os.makedirs(eng.log_source, exist_ok=True)
@@ -945,10 +947,9 @@ def test_engine_reuses_frames_until_store_changes(spark, scratch):
         [("web-0", BASE, 1, 51, "INFO", "t", "f.rs", 1, "m")], LOG_CORE_SCHEMA
     ).write.mode("append").parquet(eng.log_source)
     eng.drain()
-    g = uuid.uuid4().hex
-    (spans, logs), built = jobs_in(f"build-{g}", lambda: (eng.spans(), eng.logs()))
+    (spans, logs), built = _jobs_in(spark, lambda: (eng.spans(), eng.logs()))
     assert built > 0, "the first read must rebuild (schema inference)"
-    (spans2, logs2), reused = jobs_in(f"reuse-{g}", lambda: (eng.spans(), eng.logs()))
+    (spans2, logs2), reused = _jobs_in(spark, lambda: (eng.spans(), eng.logs()))
     assert spans2 is spans and logs2 is logs
     assert reused == 0
     spark.createDataFrame(
@@ -958,6 +959,55 @@ def test_engine_reuses_frames_until_store_changes(spark, scratch):
     spans3 = eng.spans()
     assert spans3 is not spans
     assert {r.id for r in spans3.collect()} == {51, 52}
+
+
+def test_engine_trace_routes_filter_one_trace_frame(spark, scratch, persistent_ids):
+    """On an unchanged persistent store the trace routes filter the
+    engine's one persisted trace frame: get_trace starts at most 1 Spark
+    job, list_traces at most 2. A span and log drained later show on
+    the next get_trace; the engine never holds more than one trace
+    frame, and stop() frees it."""
+    from duo_spark.engine import DuoEngine
+    from duo_spark.schemas import LOG_CORE_SCHEMA
+
+    def load(spans, logs):
+        spark.createDataFrame(spans, SPAN_SCHEMA).write.mode("append").parquet(eng.span_source)
+        spark.createDataFrame(logs, LOG_CORE_SCHEMA).write.mode("append").parquet(eng.log_source)
+        eng.drain()
+
+    def span_logs(env):
+        return {int(s["spanID"]): [f["value"] for lg in s["logs"] for f in lg["fields"]
+                                   if f["key"] == "message"]
+                for t in env["data"] for s in t["spans"]}
+
+    before = persistent_ids()
+    eng = DuoEngine(spark, os.path.join(scratch, "data"), trigger_seconds=1)
+    try:
+        os.makedirs(eng.span_source, exist_ok=True)
+        os.makedirs(eng.log_source, exist_ok=True)
+        load([_rec(61, trace=61, start=BASE, end=BASE + 50),
+              _rec(62, parent=61, trace=61, start=BASE + 5, end=BASE + 9)],
+             [("web-0", BASE + 6, 61, 62, "INFO", "t", "f.rs", 1, "first")])
+        assert span_logs(eng.query_service().get_trace(61)) == {61: [], 62: ["first"]}
+        assert len(persistent_ids() - before) == 1
+        env, got_jobs = _jobs_in(spark, lambda: eng.query_service().get_trace(61))
+        assert got_jobs <= 1
+        assert span_logs(env) == {61: [], 62: ["first"]}
+        env, list_jobs = _jobs_in(spark, lambda: eng.query_service().list_traces({}))
+        assert list_jobs <= 2
+        assert [t["traceID"] for t in env["data"]] == ["61"]
+
+        load([_rec(63, parent=61, trace=61, start=BASE + 20, end=BASE + 30)],
+             [("web-0", BASE + 21, 61, 63, "WARN", "t", "f.rs", 2, "later")])
+        env = eng.query_service().get_trace(61)
+        assert span_logs(env) == {61: [], 62: ["first"], 63: ["later"]}
+        assert len(persistent_ids() - before) == 1
+        load([_rec(71, trace=71, start=BASE + 90, end=BASE + 99)], [])
+        assert [t["traceID"] for t in eng.query_service().list_traces({})["data"]] == ["71", "61"]
+        assert len(persistent_ids() - before) == 1
+    finally:
+        eng.stop()
+    assert not (persistent_ids() - before)
 
 
 def test_engine_http_fresh_after_each_store_change(spark, scratch):

@@ -10,7 +10,6 @@ from duo_spark.operators.traces import (
     distinct_operations,
     enrich_process,
     filter_traces,
-    get_trace_by_id,
     logs_for_traces,
     select_root_spans,
 )
@@ -113,12 +112,6 @@ def test_assemble_traces(spans_df, logs_df):
     starts = [s["start"] for s in spans]
     assert starts == sorted(starts)  # waterfall order
     assert row["trace_start"] == min(starts)
-
-
-def test_get_trace_by_id(spans_df, logs_df):
-    tid = spans_df.select("trace_id").first()["trace_id"]
-    rows = get_trace_by_id(spans_df, logs_df, tid).collect()
-    assert rows and all(r["trace_id"] == tid for r in rows)
 
 
 def test_distinct_operations(spans_df):
