@@ -7,34 +7,36 @@ Boots and owns the full stack:
       -> staged parquet records
     span/log streaming pipelines      duo/src/grpc/server.rs:27-121
       -> foreachBatch span completion (T4, streaming/merge.py)
-      -> partitioned parquet sink (T3) or memory tables (T5)
+      -> versioned delta tables (T3) or scratch + temp views (T5)
     PartitionedStore + registries     duo/src/memory.rs, schema.rs
     QueryService                      duo/src/web/mod.rs:72-82
 
 Design note (deviation, documented): the reference triple-buffers —
 in-memory Arrow batches + 10 s IPC WAL + 60 s parquet flush — and
-serves queries from memory ∪ parquet. Here every micro-batch commits
-straight to the checkpointed parquet sink: the checkpoint IS the WAL
-(exactly-once replay), freshness is the trigger cadence (seconds, not
-60 s), and `PartitionedStore.compact()` absorbs the small-file cost
-that cadence implies. One durability mechanism instead of three, and
-the query path reads one consistent source. ``memory_mode=True``
-reproduces T5 exactly: sinks are in-memory tables, nothing persists
-(duo/src/main.rs:60-63).
+serves queries from memory ∪ parquet. Here every micro-batch of either
+table commits straight to one storage layout, a versioned delta log
+(``completed/v=N``, published atomically; spans after the completion
+merge, logs as they come): the checkpoint IS the WAL (exactly-once
+replay: a replayed batch overwrites its own version), freshness is the
+trigger cadence (seconds, not 60 s), and ``compact()`` folds old
+deltas into minute-partitioned snapshots. One durability mechanism
+instead of three, and the query path reads one consistent source.
+``memory_mode=True`` reproduces T5: the same tables live under the
+scratch root and are served as temp views, nothing persists under
+the data dir (duo/src/main.rs:60-63).
 
 Query path: ``serve_http`` builds a ``QueryService`` per request, but
 ``spans()``/``logs()`` reuse each persistent table's frame until the
-table's store key changes — the span table's listed versions
-(``merge.completed_versions``), the log table's file-sink batch names
-(``PartitionedStore.sink_log``). A request over an unchanged store
-therefore pays a listing, not a schema-inference rebuild; a commit,
-a compaction or a replayed batch changes the key and the next request
-rebuilds. The trace routes read one more frame, ``traces()``: every
-span with its correlated logs, persisted once per (span key, log key)
-by the first trace request after a change, so ``/api/traces/:id`` is
-a ``trace_id`` filter over it and ``/api/traces`` a ``filter_traces``.
-Memory mode has no key: it reads the catalog tables afresh and
-correlates per request.
+table's store key — its listed versions (``merge.completed_versions``)
+— changes. A request over an unchanged store therefore pays two
+listings, not a schema-inference rebuild; a commit, a compaction or a
+replayed batch changes the key and the next request rebuilds. The
+trace routes read one more frame, ``traces()``: every span with its
+correlated logs, persisted once per (span key, log key) by the first
+trace request after a change, so ``/api/traces/:id`` is a
+``trace_id`` filter over it and ``/api/traces`` a ``filter_traces``.
+Memory mode has no key: it reads the temp views afresh and correlates
+per request.
 
 Batch-replay determinism: ``drain()`` runs the pipelines with
 availableNow over everything staged so far and waits — the mode the
@@ -55,8 +57,8 @@ from duo_spark.ingest import ProcessRegistry
 from duo_spark.operators.materialize import persist_count, release
 from duo_spark.operators.traces import correlate_span_logs
 from duo_spark.schemas import LOG_CORE_SCHEMA
-from duo_spark.sources.logschema import LogSchemaRegistry
-from duo_spark.sources.store import HotColdTable, PartitionedStore
+from duo_spark.sources.store import PARTITION_COLS, PartitionedStore
+from duo_spark.streaming import merge
 from duo_spark.streaming.ingest_server import IngestServer
 from duo_spark.streaming.pipeline import (
     _scratch,
@@ -78,19 +80,17 @@ class DuoEngine:
         spark: SparkSession,
         data_dir: str,
         memory_mode: bool = False,
-        granularity: str = "minute",
         trigger_seconds: int = 5,
     ):
         self.spark = spark
         self.data_dir = data_dir
         self.memory_mode = memory_mode
         self.trigger_seconds = trigger_seconds
-        self.store = PartitionedStore(spark, data_dir, granularity=granularity)
+        self.store = PartitionedStore(spark, data_dir)
         self.process_registry = ProcessRegistry(self.store)
-        self.log_schema_registry = LogSchemaRegistry(self.store)
         run = uuid.uuid4().hex[:8]
-        self._mem_spans = f"duo_hot_spans_{run}"
-        self._mem_logs = f"duo_hot_logs_{run}"
+        #: table -> memory-mode temp view name
+        self._mem = {"span": f"duo_hot_spans_{run}", "log": f"duo_hot_logs_{run}"}
         self.span_source = posixpath.join(data_dir, "ingest", "span")
         self.log_source = posixpath.join(data_dir, "ingest", "log")
         self._server: IngestServer | None = None
@@ -117,35 +117,28 @@ class DuoEngine:
         ).start()
         return self._server.address
 
-    def _pipeline_kwargs(self, table: str, mem_table: str, available_now: bool) -> dict:
+    def _start(self, table: str, source: str, available_now: bool):
+        """Start ``table``'s pipeline over ``source``; returns the query."""
         if self.memory_mode:
-            # Spark's memory sink cannot recover a checkpoint, and T5
-            # persists nothing anyway: every run replays the full
-            # staging dir into a fresh checkpoint, rebuilding the
-            # in-memory table from scratch (duo/src/main.rs:60-63).
+            # T5 persists nothing: every run replays the full staging
+            # dir into a fresh checkpoint, rebuilding the in-memory
+            # table from scratch (duo/src/main.rs:60-63)
             ckpt = _scratch("engine-mem-ckpt", uuid.uuid4().hex)
+            sink = dict(memory_mode=True, memory_table=self._mem[table])
         else:
             ckpt = posixpath.join(self.data_dir, "checkpoints", table)
-        kwargs = dict(
-            checkpoint_dir=ckpt,
-            available_now=available_now,
-            trigger_seconds=self.trigger_seconds,
+            sink = dict(out_dir=self.store.table_path(table))
+        starter = start_span_pipeline if table == "span" else start_log_pipeline
+        return starter(
+            self.spark, source, checkpoint_dir=ckpt, available_now=available_now,
+            trigger_seconds=self.trigger_seconds, **sink,
         )
-        if self.memory_mode:
-            kwargs.update(memory_mode=True, memory_table=mem_table)
-        else:
-            kwargs.update(out_dir=self.store.table_path(table))
-        return kwargs
 
     def start_pipelines(self) -> None:
         """Continuous micro-batch ingest (the real server's mode)."""
         self._queries = [
-            start_span_pipeline(
-                self.spark, self.span_source, **self._pipeline_kwargs("span", self._mem_spans, False)
-            ),
-            start_log_pipeline(
-                self.spark, self.log_source, **self._pipeline_kwargs("log", self._mem_logs, False)
-            ),
+            self._start("span", self.span_source, False),
+            self._start("log", self.log_source, False),
         ]
 
     def drain(self) -> None:
@@ -156,79 +149,62 @@ class DuoEngine:
         if self._server is not None:
             self._server.quiesce()
             self._server.flush()
-        for source, table, mem in (
-            (self.span_source, "span", self._mem_spans),
-            (self.log_source, "log", self._mem_logs),
-        ):
+        for table, source in (("span", self.span_source), ("log", self.log_source)):
             if not os.path.isdir(source) or not any(
                 f.endswith(".parquet") for f in os.listdir(source)
             ):
                 continue
-            starter = start_span_pipeline if table == "span" else start_log_pipeline
-            q = starter(self.spark, source, **self._pipeline_kwargs(table, mem, True))
-            q.awaitTermination()
+            self._start(table, source, True).awaitTermination()
 
     # -------------------------------------------------------- query --
 
-    def _table_df(self, table: str, mem_table: str) -> DataFrame:
+    def _table_df(self, table: str) -> DataFrame:
         """The table's current rows. A table with no rows yet reads as
         an empty frame in its schema, so an empty engine is queryable.
 
         A persistent table's frame is reused until its store key
-        changes (:meth:`_store_key`): the rebuild re-lists the files
-        and re-infers the schema in Spark jobs, while the key is a
-        listing or two. Key check and rebuild share one lock, so
-        concurrent requests after a commit rebuild once. Memory mode
-        reads the catalog table afresh each call (no job): a base frame
-        reused across actions would keep its first plan of the memory
-        sink's data."""
+        changes (:meth:`_current`): the rebuild re-lists the files
+        and re-infers the schema in Spark jobs, while the key is two
+        listings. Key check and rebuild share one lock, so concurrent
+        requests after a commit rebuild once. Memory mode reads the
+        temp view afresh each call (no job): the pipeline re-points it
+        after every batch."""
         if self.memory_mode:
-            if self.spark.catalog.tableExists(mem_table):
-                return self.spark.table(mem_table)
+            if self.spark.catalog.tableExists(self._mem[table]):
+                return self.spark.table(self._mem[table])
             return self.spark.createDataFrame([], _EMPTY_SCHEMAS[table])
         with self._frames_lock:
             return self._current(table)[1]
 
     def _current(self, table: str) -> tuple[object, DataFrame]:
         """(store key, frame) of a persistent table, rebuilt when the key
-        changed. The caller holds ``_frames_lock``."""
-        key = self._store_key(table)
+        changed. The key is the table's listed versions
+        (``merge.completed_versions``): it changes whenever a read would
+        see other files. The caller holds ``_frames_lock``."""
+        key = merge.completed_versions(self.spark, self.store.table_path(table))
         cached = self._frames.get(table)
-        if key is not None and cached is not None and cached[0] == key:
+        if cached is not None and cached[0] == key:
             return cached
-        df = self._read_table(table)
-        if key is None:
-            self._frames.pop(table, None)
-        else:
-            self._frames[table] = (key, df)
-        return key, df
-
-    def _store_key(self, table: str):
-        """A value that changes whenever a read of ``table`` would see
-        other files: the span table's listed versions, the log table's
-        file-sink batch names. None (no reuse) for a log table without
-        a sink log."""
-        from duo_spark.streaming.merge import completed_versions
-
-        if table == "span":
-            return completed_versions(self.spark, self.store.table_path("span"))
-        return self.store.sink_log(table)
+        self._frames[table] = (key, self._read_table(table))
+        return self._frames[table]
 
     def _read_table(self, table: str) -> DataFrame:
-        from duo_spark.streaming.merge import read_completed
-
+        """A persistent table's rows. Spans dedup first-completion-wins;
+        logs keep their own columns, the K1 partition columns their
+        versions carry for compaction dropped."""
+        path = self.store.table_path(table)
         try:
             if table == "span":
-                return read_completed(self.spark, self.store.table_path("span"))
-            return HotColdTable(self.store, table).df()
+                return merge.read_completed(self.spark, path)
+            return merge.read_completed(self.spark, path, dedup=False).drop(*PARTITION_COLS)
         except FileNotFoundError:
             return self.spark.createDataFrame([], _EMPTY_SCHEMAS[table])
 
     def spans(self) -> DataFrame:
-        return self._table_df("span", self._mem_spans)
+        return self._table_df("span")
 
     def logs(self) -> DataFrame:
-        return self._table_df("log", self._mem_logs)
+        return self._table_df("log")
 
     def traces(self) -> DataFrame:
         """The trace-ready frame: ``correlate_span_logs(spans(), logs())``,
@@ -241,21 +217,19 @@ class DuoEngine:
         previous one, so the engine owns at most one. ``persist()``
         stores it at Spark's MEMORY_AND_DISK level, so the block manager
         bounds its memory and spills the rest; no size gate applies.
-        Without a key (memory mode, or a log table with no sink log) the
-        same frame is returned as a plain, unpersisted plan."""
+        Memory mode has no key: the same frame is returned as a plain,
+        unpersisted plan."""
         if self.memory_mode:
             return correlate_span_logs(self.spans(), self.logs())
         with self._frames_lock:
             (span_key, spans), (log_key, logs) = self._current("span"), self._current("log")
-            key = None if log_key is None else (span_key, log_key)
+            key = (span_key, log_key)
             cached = self._frames.get("trace")
-            if key is not None and cached is not None and cached[0] == key:
+            if cached is not None and cached[0] == key:
                 return cached[1]
             self._release_traces()
-            df = correlate_span_logs(spans, logs)
-            if key is not None:
-                df, _ = persist_count(df)
-                self._frames["trace"] = (key, df)
+            df, _ = persist_count(correlate_span_logs(spans, logs))
+            self._frames["trace"] = (key, df)
             return df
 
     def _release_traces(self) -> None:
@@ -296,26 +270,24 @@ class DuoEngine:
     # ---------------------------------------------------- maintenance --
 
     def compact(self, retain_latest: int = 2) -> None:
-        """Fold small files across both tables' layouts (round 8):
-        the span table's completed delta log compacts via
-        ``merge.compact_completed`` (a 60 s tick writes ~1,440 tiny
-        delta dirs/day; the versioned snapshot fold is crash-safe),
-        and the log table's minute partitions fold to hour files via
-        ``PartitionedStore.compact``. Memory mode has nothing on disk
-        to compact. Safe to run while pipelines are live: both folds
-        only touch versions/partitions no in-flight batch can rewrite."""
+        """Fold small files in both tables (round 8): each table's delta
+        log folds into a minute-partitioned, bloom-filtered snapshot
+        via ``merge.compact_completed`` (a 60 s tick writes ~1,440 tiny
+        delta dirs/day per table), keeping the newest ``retain_latest``
+        deltas out of it. The fold is crash-safe and deletes only what
+        the previous snapshot already superseded, so it is safe while
+        pipelines are live or restart after it. A table with nothing
+        ingested yet is left as it is; memory mode has nothing on disk
+        to compact."""
         if self.memory_mode:
             return
-        from duo_spark.streaming.merge import compact_completed
-
-        # no-ops gracefully when nothing has been ingested yet
-        compact_completed(
-            self.spark,
-            self.store.table_path("span"),
-            retain_latest=retain_latest,
-        )
-        if self.store.exists("log"):
-            self.store.compact("log", to_granularity="hour")
+        for table in ("span", "log"):
+            merge.compact_completed(
+                self.spark,
+                self.store.table_path(table),
+                retain_latest=retain_latest,
+                dedup=table == "span",
+            )
 
     # --------------------------------------------------------- stop --
 

@@ -303,9 +303,9 @@ def epoch_allocation(
     reports the shortfall implicitly (Σ alloc < budget).
 
     One aggregate to |sources| rows, then window math over that tiny
-    frame (bounded by the source cardinality, not the corpus — the
-    single-partition window is fine at any data scale). ``token_col``
-    None counts documents instead of summing tokens.
+    frame in one explicit partition (bounded by the source
+    cardinality, not the corpus, so fine at any data scale).
+    ``token_col`` None counts documents instead of summing tokens.
 
     Output per source: ``(stratum, n_tokens, cap, alloc, epochs)``,
     floats rounded to 6.
@@ -320,19 +320,25 @@ def epoch_allocation(
         F.sum(F.col(token_col)) if token_col is not None
         else F.count(F.lit(1))
     )
+    # `_one` (0 on every row) is the windows' partition key: the frame
+    # holds one row per source, so a single partition is the bound, and
+    # an aggregate column, unlike a literal, is not optimized away
     per = df.groupBy(F.col(strata_col).alias("stratum")).agg(
-        tok.cast("double").alias("_n")
+        tok.cast("double").alias("_n"), F.min(F.lit(0)).alias("_one")
     )
     per = per.select(
         "stratum",
         "_n",
+        "_one",
         F.pow("_n", float(alpha)).alias("_w"),
         (F.col("_n") * F.lit(float(max_epochs))).alias("_cap"),
     )
-    order = Window.orderBy(F.col("_cap") / F.col("_w"), F.col("stratum"))
+    order = Window.partitionBy("_one").orderBy(
+        F.col("_cap") / F.col("_w"), F.col("stratum")
+    )
     suffix = order.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     ranked = per.select(
-        "stratum", "_n", "_w", "_cap",
+        "stratum", "_n", "_one", "_w", "_cap",
         (F.sum("_cap").over(order) - F.col("_cap")).alias("_cap_before"),
         # explicit suffix frame: both engines then sum the SAME terms
         # in the SAME order, so the float quotient replays bit-exactly

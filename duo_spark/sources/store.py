@@ -231,20 +231,6 @@ class PartitionedStore:
                 return True
         return False
 
-    def sink_log(self, table: str) -> tuple[str, ...] | None:
-        """Batch-file names in the table's streaming file-sink log
-        (``_spark_metadata``). When the log exists, Spark's reader lists
-        exactly the files it records, and each committed batch adds a
-        new name, so equal values mean a read sees the same files. None
-        when the table has no sink log (batch-written, or freshly
-        compacted)."""
-        fs, p = self._fs(posixpath.join(self.table_path(table), "_spark_metadata"))
-        if not fs.exists(p):
-            return None
-        # hidden names are checksums and in-flight temp files
-        names = (st.getPath().getName() for st in fs.listStatus(p))
-        return tuple(sorted(n for n in names if not n.startswith(".")))
-
     # -- K3: tiny JSON side files (process registry, merged log schema) --
 
     def write_json(self, rel_path: str, payload: object) -> None:

@@ -12,14 +12,15 @@ runtime itself:
 
   T1 (1 s tick)      -> trigger(processingTime=...) micro-batches
   T2 (10 s WAL)      -> checkpointLocation write-ahead state (built in)
-  T3 (60 s parquet)  -> writeStream.partitionBy(date,hour,minute)
+  T3 (60 s parquet)  -> foreachBatch versioned delta log per table,
+                        folded into date/hour/minute snapshots
   T4 (span merge)    -> JVM foreachBatch partial-merge
                         (streaming/merge.py) — one hash aggregate +
                         versioned open-span merge per batch; open spans
                         are held until their close arrives, as in the
                         reference
-  T5 (memory mode)   -> memory-sink query / refreshed temp view,
-                        parquet sink skipped
+  T5 (memory mode)   -> the same tables under the scratch root,
+                        served as refreshed temp views
 """
 
 from duo_spark.streaming.pipeline import (

@@ -40,6 +40,12 @@ State layout under ``out_dir``:
   completed/v=<batch_id>  the spans COMPLETED by batch b (a delta log;
                           replays overwrite their own version, so the
                           union over versions is exactly-once)
+  compacted/v=<batch_id>  snapshot of every delta up to b
+                          (:func:`compact_completed`)
+
+The log table uses the same ``completed``/``compacted`` layout, read
+and folded by the same functions: each log batch is one delta
+(:func:`log_append_processor`), with no open table and no dedup.
 
 At scale the open table is O(open spans) like the state store, but it
 lives in parquet and merges via one shuffle per batch; completed
@@ -191,17 +197,7 @@ def fast_merge_processor(
             from duo_spark.sources.store import with_partition_cols
 
             done = with_partition_cols(done, "start", "minute")
-        # stage under hidden .tmp dirs, then atomically rename: a
-        # concurrent reader can never list a half-written version
-        # (round-13 soak, probe 41)
-        done.write.mode("overwrite").parquet(
-            f"{out_dir}/completed/.tmp-{batch_id}"
-        )
-        _publish_dir(
-            spark,
-            f"{out_dir}/completed/.tmp-{batch_id}",
-            f"{out_dir}/completed/v={batch_id}",
-        )
+        _publish_version(spark, done, f"{out_dir}/completed", batch_id)
         still_open.write.mode("overwrite").parquet(
             f"{out_dir}/open/.tmp-{batch_id}"
         )
@@ -248,6 +244,35 @@ def streaming_span_merge_fast(
         .trigger(availableNow=True)
         .start()
     )
+
+
+def log_append_processor(
+    out_dir: str, partition_completed: bool = False, on_batch=None
+):
+    """The foreachBatch processor behind ``pipeline.start_log_pipeline``:
+    logs need no completion merge, so each batch is published as-is as
+    the delta ``completed/v=<batch_id>`` (a replay overwrites its own
+    version). Options as :func:`fast_merge_processor`'s; the K1 columns
+    derive from the log ``time``."""
+
+    def process(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        if partition_completed:
+            from duo_spark.sources.store import with_partition_cols
+
+            batch = with_partition_cols(batch, "time", "minute")
+        _publish_version(spark, batch, f"{out_dir}/completed", batch_id)
+        if on_batch is not None:
+            on_batch(spark, batch_id)
+
+    return process
+
+
+def _publish_version(spark, df: DataFrame, root: str, batch_id: int) -> None:
+    """Write ``df`` as version ``root/v=<batch_id>``, staged under a
+    hidden ``.tmp`` dir and published atomically (:func:`_publish_dir`)."""
+    df.write.mode("overwrite").parquet(f"{root}/.tmp-{batch_id}")
+    _publish_dir(spark, f"{root}/.tmp-{batch_id}", f"{root}/v={batch_id}")
 
 
 def _publish_dir(spark, tmp: str, dest: str) -> None:
@@ -345,8 +370,21 @@ def _first_completion_wins(parts: list[tuple[DataFrame, int]]) -> DataFrame:
     )
 
 
+def _combine(parts: list[tuple[DataFrame, int]], dedup: bool) -> DataFrame:
+    """One frame over the listed versions: first-completion-wins for
+    spans; for logs (``dedup=False``) a by-name union that fills a
+    user field a version predates with null (log schema drift)."""
+    if dedup:
+        return _first_completion_wins(parts)
+    out = parts[0][0]
+    for df, _ in parts[1:]:
+        out = out.unionByName(df, allowMissingColumns=True)
+    return out
+
+
 class CompletedVersions(NamedTuple):
-    """The versions a read of the completed-span table sees."""
+    """The versions a read of a versioned table (completed spans, or
+    logs) sees."""
 
     #: newest compacted snapshot id, None before the first compaction
     snapshot: int | None
@@ -359,10 +397,10 @@ class CompletedVersions(NamedTuple):
 
 
 def completed_versions(spark, out_dir: str) -> CompletedVersions:
-    """List the completed-span table: one listing of ``compacted/``
-    and one of ``completed/``, no Spark job. Equal values mean a read
-    sees the same files, so the value doubles as the table's store
-    key (``DuoEngine.spans``)."""
+    """List a versioned table: one listing of ``compacted/`` and one
+    of ``completed/``, no Spark job. Equal values mean a read sees the
+    same files, so the value doubles as the table's store key
+    (``DuoEngine.spans``/``logs``)."""
     snaps = _version_stamps(spark, f"{out_dir}/compacted")
     snapshot = max(snaps, default=None)
     listed = _version_stamps(spark, f"{out_dir}/completed")
@@ -371,7 +409,7 @@ def completed_versions(spark, out_dir: str) -> CompletedVersions:
     return CompletedVersions(snapshot, deltas, head + tuple(listed[v] for v in deltas))
 
 
-def read_completed(spark, out_dir: str) -> DataFrame:
+def read_completed(spark, out_dir: str, *, dedup: bool = True) -> DataFrame:
     """All spans completed so far: the newest compacted snapshot (if
     :func:`compact_completed` has run) plus every delta version above
     it — exactly-once: a replayed batch overwrites its own version,
@@ -379,7 +417,9 @@ def read_completed(spark, out_dir: str) -> DataFrame:
     and a late duplicate close dedups first-completion-wins (the
     snapshot counts as the earliest version). The dedup is one hash
     aggregate over snapshot+deltas; compaction keeps the snapshot
-    side pre-deduped.
+    side pre-deduped. ``dedup=False`` reads the log table, whose rows
+    have no id to dedup: the versions are unioned by name
+    (:func:`_combine`).
 
     Versions read with partition-value type inference off: the K1
     columns inside a partitioned version come back as the same strings
@@ -399,13 +439,16 @@ def read_completed(spark, out_dir: str) -> DataFrame:
         # ids are unique by construction): the dedup is the identity —
         # skip its shuffle and return the bare scan
         return parts[0][0]
-    return _first_completion_wins(parts)
+    return _combine(parts, dedup)
 
 
-def compact_completed(spark, out_dir: str, retain_latest: int = 2) -> int | None:
+def compact_completed(
+    spark, out_dir: str, retain_latest: int = 2, *, dedup: bool = True
+) -> int | None:
     """Fold old completed-delta versions into one snapshot — the
     small-files fix for long-running ingest (a 60 s tick writes ~1,440
     tiny delta dirs/day; scans degrade with file count, not data).
+    ``dedup`` is :func:`read_completed`'s: False folds the log table.
 
     Keeps the newest ``retain_latest`` deltas out of the snapshot:
     only batches at/after the last committed checkpoint can ever be
@@ -436,65 +479,53 @@ def compact_completed(spark, out_dir: str, retain_latest: int = 2) -> int | None
 
     cvid, deltas, _ = completed_versions(spark, out_dir)
     fold = deltas[:-retain_latest] if retain_latest > 0 else deltas
-    if not fold:
-        # nothing new to fold — but still execute the DEFERRED
-        # deletion from the previous cycle (state the current
-        # snapshot already supersedes has now had its full reader
-        # grace): old deltas <= cvid and snapshots older than cvid
+    upto = fold[-1] if fold else None
+    fs = _fs(spark, out_dir)[0]
+    if fold:
+        parts: list[tuple[DataFrame, int]] = []
         if cvid is not None:
-            fs0 = _fs(spark, out_dir)[0]
-            for v in _version_ids(spark, f"{out_dir}/completed"):
-                if v <= cvid:
-                    fs0.delete(
-                        _fs(spark, f"{out_dir}/completed/v={v}")[1], True
-                    )
-            _prune_versions(spark, f"{out_dir}/compacted", keep=(cvid,))
-        return None
-    upto = fold[-1]
-    parts: list[tuple[DataFrame, int]] = []
-    if cvid is not None:
-        parts.append(
-            (read_uninferred(spark, f"{out_dir}/compacted/v={cvid}"), -1)
-        )
-    for v in fold:
-        parts.append((read_uninferred(spark, f"{out_dir}/completed/v={v}"), v))
-    merged = _first_completion_wins(parts)
-    tmp = f"{out_dir}/compacted/.tmp-{upto}"
-    if "date" in merged.columns:
-        # deltas from the persistent fast pipeline carry the K1
-        # partition columns as data — the snapshot is where the
-        # directory fan-out is PAID (once, not per micro-batch; round-8
-        # probe 19): a real partitioned + bloom-sized layout that
-        # time-windowed readers prune, repartitioned so each dir gets
-        # one file per compaction
-        from duo_spark.sources.store import bloom_options
+            parts.append(
+                (read_uninferred(spark, f"{out_dir}/compacted/v={cvid}"), -1)
+            )
+        for v in fold:
+            parts.append((read_uninferred(spark, f"{out_dir}/completed/v={v}"), v))
+        merged = _combine(parts, dedup)
+        tmp = f"{out_dir}/compacted/.tmp-{upto}"
+        if "date" in merged.columns:
+            # deltas from the persistent pipelines carry the K1
+            # partition columns as data — the snapshot is where the
+            # directory fan-out is PAID (once, not per micro-batch;
+            # round-8 probe 19): a real partitioned + bloom-sized layout
+            # that time-windowed readers prune, repartitioned so each
+            # dir gets one file per compaction
+            from duo_spark.sources.store import bloom_options
 
-        part_cols = [c for c in ("date", "hour", "minute") if c in merged.columns]
-        bloom_options(
-            merged.repartition(*[F.col(c) for c in part_cols])
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-        ).parquet(tmp)
-    else:
-        merged.write.mode("overwrite").parquet(tmp)
-    fs, tmp_path = _fs(spark, tmp)
-    if not fs.rename(tmp_path, _fs(spark, f"{out_dir}/compacted/v={upto}")[1]):
-        # Hadoop rename signals failure by RETURNING FALSE (dest
-        # already exists from a racing compaction, or an fs error) —
-        # proceeding would delete state the new snapshot never
-        # captured. Leave everything (old snapshot + all deltas)
-        # intact and surface the failure.
-        fs.delete(tmp_path, True)
-        raise RuntimeError(
-            f"compact_completed: rename {tmp} -> v={upto} failed; "
-            "no versions were deleted (racing compaction?)"
-        )
-    # deferred deletion (reader grace, one full compaction cycle):
-    # keep the previous snapshot and the deltas it did NOT supersede;
-    # drop only state the PREVIOUS snapshot already covered
-    keep = (upto,) if cvid is None else (upto, cvid)
-    _prune_versions(spark, f"{out_dir}/compacted", keep=keep)
+            part_cols = [c for c in ("date", "hour", "minute") if c in merged.columns]
+            bloom_options(
+                merged.repartition(*[F.col(c) for c in part_cols])
+                .write.mode("overwrite")
+                .partitionBy(*part_cols)
+            ).parquet(tmp)
+        else:
+            merged.write.mode("overwrite").parquet(tmp)
+        tmp_path = _fs(spark, tmp)[1]
+        if not fs.rename(tmp_path, _fs(spark, f"{out_dir}/compacted/v={upto}")[1]):
+            # Hadoop rename signals failure by RETURNING FALSE (dest
+            # already exists from a racing compaction, or an fs error)
+            # — proceeding would delete state the new snapshot never
+            # captured. Leave everything (old snapshot + all deltas)
+            # intact and surface the failure.
+            fs.delete(tmp_path, True)
+            raise RuntimeError(
+                f"compact_completed: rename {tmp} -> v={upto} failed; "
+                "no versions were deleted (racing compaction?)"
+            )
+    # deferred deletion (reader grace, one full compaction cycle), also
+    # when nothing new was folded: keep the newest two snapshots and
+    # the deltas the previous one did NOT supersede; drop only state
+    # the PREVIOUS snapshot already covered
     if cvid is not None:
+        _prune_versions(spark, f"{out_dir}/compacted", keep=(cvid, upto))
         for v in _version_ids(spark, f"{out_dir}/completed"):
             if v <= cvid:
                 fs.delete(_fs(spark, f"{out_dir}/completed/v={v}")[1], True)

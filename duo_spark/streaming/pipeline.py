@@ -9,18 +9,18 @@ Spark-first restatement: a file-drop directory stands in for the gRPC
 socket (S6 — any streaming source slots in here; the contract is just
 "rows in SPAN/LOG schema"), the micro-batch trigger is T1, the
 checkpoint's write-ahead state replaces the hand-rolled WAL (T2 —
-recovery semantics come from the runtime, not custom code), the
-partitioned-parquet streaming sink is T3, and memory mode swaps the
-sink for an in-memory table. Span completion (T4) is the
-foreachBatch partial-merge of streaming/merge.py, run between source
-and sink.
+recovery semantics come from the runtime, not custom code), and both
+tables are one foreachBatch write into a versioned delta log (T3,
+streaming/merge.py). The span batch first runs the partial-merge span
+completion (T4); a log batch is written as it comes. Memory mode (T5)
+keeps the same tables under the scratch root and serves temp views.
 
 At scale: the source directory listing shards across executors, the
 span merge is one hash aggregate plus one shuffle join against the
-open-span table per batch, and the log sink writes one file per
-partition dir per micro-batch — the same layout the batch store
-(sources/store.py) reads, so hot streaming output and cold compacted
-history union transparently.
+open-span table per batch, and each batch of either table lands as
+one flat delta version; ``merge.compact_completed`` pays the
+date/hour/minute directory fan-out once per fold, into the
+partitioned, bloom-filtered snapshot that time-windowed readers prune.
 """
 
 from __future__ import annotations
@@ -31,7 +31,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from duo_spark.schemas import LOG_CORE_SCHEMA, SPAN_SCHEMA
-from duo_spark.sources.store import BLOOM_EXPECTED_NDV, with_partition_cols
 
 #: scratch root for checkpoints / replay staging (kept inside the repo
 #: tree; gitignored)
@@ -112,6 +111,48 @@ def log_record_stream(
     return spark.readStream.schema(schema or LOG_CORE_SCHEMA).parquet(source_dir)
 
 
+def _start_versioned(
+    spark: SparkSession,
+    stream: DataFrame,
+    make_processor,
+    read,
+    empty_schema,
+    out_dir: str | None,
+    checkpoint_dir: str | None,
+    trigger_seconds: int,
+    memory_mode: bool,
+    memory_table: str,
+    available_now: bool,
+):
+    """Start ``stream`` into a versioned delta table through the
+    foreachBatch processor ``make_processor(root, ...)``. Memory mode
+    keeps the table under the scratch root and serves ``read(spark,
+    root)`` as the temp view ``memory_table``, refreshed every batch."""
+    if memory_mode:
+        root = _scratch("mem-merge", uuid.uuid4().hex)
+
+        def _refresh(_s, _batch_id):
+            # register on the OUTER session: foreachBatch hands its
+            # processor a cloned session whose temp views the caller
+            # never sees
+            read(spark, root).createOrReplaceTempView(memory_table)
+
+        # zero-batch runs (empty source) must still resolve the table
+        spark.createDataFrame([], empty_schema).createOrReplaceTempView(memory_table)
+        processor = make_processor(root, on_batch=_refresh)
+    else:
+        assert out_dir is not None, "out_dir required unless memory_mode"
+        processor = make_processor(out_dir, partition_completed=True)
+    writer = stream.writeStream.foreachBatch(processor).option(
+        "checkpointLocation", checkpoint_dir or _scratch("ckpt", uuid.uuid4().hex)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
+
+
 def start_span_pipeline(
     spark: SparkSession,
     source_dir: str,
@@ -148,44 +189,11 @@ def start_span_pipeline(
     """
     from duo_spark.streaming.merge import fast_merge_processor, read_completed
 
-    if memory_mode:
-        merge_root = _scratch("mem-merge", uuid.uuid4().hex)
-        partitioned = False
-
-        def _refresh(_s, _batch_id):
-            # register on the OUTER session: foreachBatch hands its
-            # processor a cloned session whose temp views the caller
-            # never sees
-            read_completed(spark, merge_root).createOrReplaceTempView(
-                memory_table
-            )
-
-        # zero-batch runs (empty source) must still resolve the table
-        spark.createDataFrame(
-            [], completed_span_schema()
-        ).createOrReplaceTempView(memory_table)
-        on_batch = _refresh
-    else:
-        assert out_dir is not None, "out_dir required unless memory_mode"
-        merge_root = out_dir
-        partitioned = True
-        on_batch = None
-    processor = fast_merge_processor(
-        merge_root, partition_completed=partitioned, on_batch=on_batch
+    return _start_versioned(
+        spark, span_record_stream(spark, source_dir), fast_merge_processor,
+        read_completed, completed_span_schema(), out_dir, checkpoint_dir,
+        trigger_seconds, memory_mode, memory_table, available_now,
     )
-    writer = (
-        span_record_stream(spark, source_dir)
-        .writeStream.foreachBatch(processor)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or _scratch("ckpt", uuid.uuid4().hex),
-        )
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def completed_span_schema():
@@ -217,33 +225,21 @@ def start_log_pipeline(
     memory_table: str = "hot_logs",
     available_now: bool = False,
 ):
-    """Log ingest: stateless passthrough (logs need no completion
-    merge) into the partitioned sink — T1/T3/T5 for the log table.
-    The source schema is the drift-merged one (staged_log_schema), so
-    flattened user-field columns flow through to the sink."""
+    """Log ingest (T1/T3/T5 for the log table); returns the
+    StreamingQuery. Each batch is one delta in the span table's layout
+    (``merge.log_append_processor``); read the table with
+    ``merge.read_completed(dedup=False)``. The source schema is the
+    drift-merged one (staged_log_schema), so flattened user-field
+    columns flow through. Options as :func:`start_span_pipeline`."""
+    from functools import partial
+
+    from duo_spark.streaming.merge import log_append_processor, read_completed
+
     logs = log_record_stream(spark, source_dir, staged_log_schema(spark, source_dir))
-    if not memory_mode:
-        assert out_dir is not None, "out_dir required unless memory_mode"
-        logs = with_partition_cols(logs, "time", "minute")
-    writer = logs.writeStream.option(
-        "checkpointLocation", checkpoint_dir or _scratch("ckpt", uuid.uuid4().hex)
-    ).outputMode("append")
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    if memory_mode:
-        return writer.format("memory").queryName(memory_table).start()
-    return (
-        writer.format("parquet")
-        .option("path", out_dir)
-        .option("parquet.bloom.filter.enabled#trace_id", "true")
-        .option(
-            "parquet.bloom.filter.expected.ndv#trace_id",
-            str(BLOOM_EXPECTED_NDV),
-        )
-        .partitionBy("date", "hour", "minute")
-        .start()
+    return _start_versioned(
+        spark, logs, log_append_processor, partial(read_completed, dedup=False),
+        logs.schema, out_dir, checkpoint_dir, trigger_seconds, memory_mode,
+        memory_table, available_now,
     )
 
 

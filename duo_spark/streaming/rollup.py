@@ -22,6 +22,7 @@ holds two versions on disk.
 
 from __future__ import annotations
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -107,7 +108,10 @@ def streaming_rollup(
 
 
 def _fs(spark, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    # the class by name: resolving ``spark._jvm.org.apache...`` costs a
+    # py4j round trip per package hop (~2 ms), paid on every store-key
+    # listing of every HTTP request
+    jpath = JavaClass("org.apache.hadoop.fs.Path", spark._jvm._gateway_client)(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 

@@ -20,7 +20,6 @@ def engine(spark, request):
         spark,
         _scratch("engine", uuid.uuid4().hex),
         memory_mode=request.param,
-        granularity="hour",
     )
     yield eng
     eng.stop()

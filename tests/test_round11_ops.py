@@ -258,6 +258,38 @@ def test_epoch_allocation_water_filling(spark):
         epoch_allocation(df, "source", "toks", budget=1, max_epochs=0)
 
 
+def _executed_nodes(plan):
+    """Every node of an executed physical plan, through AQE's wrapper
+    and its query stages."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _executed_nodes(plan.executedPlan())
+        return
+    yield plan
+    if name.endswith("QueryStageExec"):
+        yield from _executed_nodes(plan.plan())
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _executed_nodes(children.apply(i))
+
+
+def test_epoch_allocation_windows_are_partitioned(spark):
+    """The water-filling windows run over one row per source in one
+    explicit partition: no executed Window lacks a partition spec
+    (which Spark warns about as "No Partition Defined")."""
+    from duo_spark.operators.sampling import epoch_allocation
+
+    df = spark.createDataFrame(
+        [("tiny", 10), ("small", 40), ("big", 1000)], "source string, toks long"
+    )
+    out = epoch_allocation(df, "source", "toks", budget=500, max_epochs=2.0)
+    assert len(out.collect()) == 3
+    windows = [n for n in _executed_nodes(out._jdf.queryExecution().executedPlan())
+               if n.getClass().getSimpleName() == "WindowExec"]
+    assert windows
+    assert all(not w.partitionSpec().isEmpty() for w in windows)
+
+
 def test_image_dhash_containers_agree_and_detect_gradients(spark):
     from duo_spark.operators.multimodal import (
         decode_rgb,

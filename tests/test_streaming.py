@@ -126,9 +126,11 @@ def test_tag_merge_split_invariant_across_microbatches(spark, scratch):
 
 
 def test_log_pipeline_passthrough(spark, scratch):
-    """Log ingest is stateless: rows flow source->sink unchanged."""
+    """Log ingest is stateless: rows flow source->table unchanged, read
+    back through the versioned-table reader."""
     from duo_spark.schemas import LOG_CORE_SCHEMA
     from duo_spark.streaming import start_log_pipeline
+    from duo_spark.streaming.merge import read_completed
 
     src = os.path.join(scratch, "in")
     out = os.path.join(scratch, "log")
@@ -140,7 +142,7 @@ def test_log_pipeline_passthrough(spark, scratch):
         available_now=True,
     )
     q.awaitTermination()
-    back = spark.read.parquet(out)
+    back = read_completed(spark, out, dedup=False)
     assert {(r.process_id, r.level, r.message) for r in back.collect()} == {
         ("web-0", "INFO", "hello"), ("web-1", "ERROR", "boom"),
     }
@@ -966,7 +968,7 @@ def test_engine_trace_routes_filter_one_trace_frame(spark, scratch, persistent_i
     engine's one persisted trace frame: get_trace starts at most 1 Spark
     job, list_traces at most 2. A span and log drained later show on
     the next get_trace; the engine never holds more than one trace
-    frame, and stop() frees it."""
+    frame, a compacted store keeps it persisted, and stop() frees it."""
     from duo_spark.engine import DuoEngine
     from duo_spark.schemas import LOG_CORE_SCHEMA
 
@@ -1005,6 +1007,16 @@ def test_engine_trace_routes_filter_one_trace_frame(spark, scratch, persistent_i
         load([_rec(71, trace=71, start=BASE + 90, end=BASE + 99)], [])
         assert [t["traceID"] for t in eng.query_service().list_traces({})["data"]] == ["71", "61"]
         assert len(persistent_ids() - before) == 1
+
+        # a compacted store keeps a key, so the frame persists there too
+        eng.compact(retain_latest=1)
+        eng.compact(retain_latest=1)
+        want = {61: [], 62: ["first"], 63: ["later"]}
+        assert span_logs(eng.query_service().get_trace(61)) == want
+        env, got_jobs = _jobs_in(spark, lambda: eng.query_service().get_trace(61))
+        assert got_jobs <= 1
+        assert span_logs(env) == want
+        assert len(persistent_ids() - before) == 1
     finally:
         eng.stop()
     assert not (persistent_ids() - before)
@@ -1013,10 +1025,9 @@ def test_engine_trace_routes_filter_one_trace_frame(spark, scratch, persistent_i
 def test_engine_http_fresh_after_each_store_change(spark, scratch):
     """Reused frames never serve a stale store: after a first request,
     each change shows on the next serve_http request — spans drained
-    later, a log field first sent later, a process registered later and
-    compaction (the frame's old delta versions are deleted). Compaction
-    comes last: a log pipeline restarted after it hides the log table
-    (an open defect, perfbench/NOTES.md)."""
+    later, a log field first sent later, a process registered later,
+    compaction (the frame's old delta versions are deleted) and a log
+    field first sent after the compaction."""
     import urllib.request
 
     from duo_spark.engine import DuoEngine
@@ -1077,6 +1088,79 @@ def test_engine_http_fresh_after_each_store_change(spark, scratch):
         eng.compact(retain_latest=1)
         eng.compact(retain_latest=1)
         assert span_ids() == before
+
+        # schema drift across the fold: the snapshot predates the field
+        send(fields={"message": "c", "region": "eu"})
+        assert {"tenant", "region"} <= log_fields()
+        assert {lg["message"] for lg in get("/api/logs?limit=100")} == {"a", "b", "c"}
+    finally:
+        eng.stop()
+
+
+def test_engine_routes_answer_after_compact_and_restart(spark, scratch):
+    """Compaction then a pipeline restart (perfbench/NOTES.md defect 2):
+    all 8 routes answer 200, the rows from before the compaction are
+    intact, and a span and a log processed after it show in
+    /api/traces/:id and /api/logs."""
+    import urllib.error
+    import urllib.request
+
+    from duo_spark.engine import DuoEngine
+    from duo_spark.streaming.ingest_server import IngestClient
+
+    eng = DuoEngine(spark, os.path.join(scratch, "data"), trigger_seconds=1)
+    try:
+        ingest = eng.start_ingest()
+
+        def send(span_id, message):
+            c = IngestClient(*ingest)
+            try:
+                if span_id == 1:
+                    c.register_process("web")
+                c.record_span(id=span_id, parent_id=None, trace_id=span_id, name="op",
+                              process_id="web-0", start=BASE + span_id,
+                              end=BASE + span_id + 5, tags=None)
+                c.record_log(process_id="web-0", time=BASE + span_id, trace_id=span_id,
+                             span_id=span_id, level="INFO", message=message)
+            finally:
+                c.close()
+
+        for i in (1, 2, 3):
+            send(i, f"m{i}")
+            eng.drain()
+        counts = (eng.spans().count(), eng.logs().count())
+        assert counts == (3, 3)
+        eng.compact(retain_latest=1)
+        eng.compact(retain_latest=1)
+        eng.start_pipelines()
+        web = eng.serve_http()
+
+        def get(path):
+            url = f"http://{web[0]}:{web[1]}{path}"
+            try:
+                with urllib.request.urlopen(url, timeout=120) as resp:
+                    return resp.status, json.loads(resp.read())
+            except urllib.error.HTTPError as e:
+                return e.code, None
+
+        routes = ["/stats", "/api/traces", "/api/traces/1", "/api/services",
+                  "/api/services/web/operations", "/api/logs",
+                  "/api/logs/schema", "/api/logs/stats/level"]
+        got = {r: get(r)[0] for r in routes}
+        assert got == {r: 200 for r in routes}
+        assert (eng.spans().count(), eng.logs().count()) == counts
+
+        send(9, "after")
+        eng._server.flush()
+        for q in eng._queries:
+            q.processAllAvailable()
+        status, env = get("/api/traces/9")
+        assert status == 200
+        assert [s["spanID"] for t in env["data"] for s in t["spans"]] == ["9"]
+        status, logs = get("/api/logs?limit=100")
+        assert status == 200
+        assert {lg["message"] for lg in logs} == {"m1", "m2", "m3", "after"}
+        assert (eng.spans().count(), eng.logs().count()) == (4, 4)
     finally:
         eng.stop()
 

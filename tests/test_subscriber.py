@@ -21,7 +21,7 @@ from duo_spark.subscriber import DuoSubscriber
 def engine(spark):
     eng = DuoEngine(
         spark, _scratch("sub-engine", uuid.uuid4().hex),
-        memory_mode=True, granularity="hour",
+        memory_mode=True,
     )
     yield eng
     eng.stop()
