@@ -25,18 +25,23 @@ instead of three, and the query path reads one consistent source.
 scratch root and are served as temp views, nothing persists under
 the data dir (duo/src/main.rs:60-63).
 
-Query path: ``serve_http`` builds a ``QueryService`` per request, but
-``spans()``/``logs()`` reuse each persistent table's frame until the
-table's store key — its listed versions (``merge.completed_versions``)
-— changes. A request over an unchanged store therefore pays two
-listings, not a schema-inference rebuild; a commit, a compaction or a
-replayed batch changes the key and the next request rebuilds. The
-trace routes read one more frame, ``traces()``: every span with its
-correlated logs, persisted once per (span key, log key) by the first
-trace request after a change, so ``/api/traces/:id`` is a
+Query path: the routes read one **generation** per store version
+(:class:`Generation`), the way the reference answers every route from
+in-memory Arrow batches planned over as table leaves. Each table's
+frame is checkpointed once per store key — its listed versions
+(``merge.completed_versions``) — in one partition when it fits one
+file split, so the aggregate routes plan no exchange. The trace-ready
+frame (every span with its correlated logs) is checkpointed over those
+two by the first trace request, so ``/api/traces/:id`` is a
 ``trace_id`` filter over it and ``/api/traces`` a ``filter_traces``.
-Memory mode has no key: it reads the temp views afresh and correlates
-per request.
+A commit, a compaction or a replayed batch changes a key; the next
+request builds the next generation, keeping the frame of a table whose
+key did not change. ``serve_http`` builds a ``QueryService`` per
+request that leases the current generation for the request's dispatch:
+one listing per table, no job on an unchanged store. A superseded
+generation is released once no request leases it, and ``stop()``
+releases everything. Memory mode has no key: it reads the temp views
+afresh and correlates per request.
 
 Batch-replay determinism: ``drain()`` runs the pipelines with
 availableNow over everything staged so far and waits — the mode the
@@ -46,6 +51,7 @@ continuously on a processing-time trigger like the real server.
 
 from __future__ import annotations
 
+import contextvars
 import os
 import posixpath
 import threading
@@ -54,7 +60,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from duo_spark.ingest import ProcessRegistry
-from duo_spark.operators.materialize import persist_count, release
+from duo_spark.operators.materialize import checkpoint, estimated_bytes, release
 from duo_spark.operators.traces import correlate_span_logs
 from duo_spark.schemas import LOG_CORE_SCHEMA
 from duo_spark.sources.store import PARTITION_COLS, PartitionedStore
@@ -70,6 +76,45 @@ from duo_spark.web.api import QueryService
 
 #: what each table reads as before its first rows land
 _EMPTY_SCHEMAS = {"span": completed_span_schema(), "log": LOG_CORE_SCHEMA}
+
+
+def _pinned(df: DataFrame) -> DataFrame:
+    """``checkpoint(df)`` owned by the engine, never by a caller's open
+    ``materialize.scope()``, whose exit would release a frame that later
+    requests read."""
+    return contextvars.Context().run(checkpoint, df)
+
+
+class Generation:
+    """One store version's frames, checkpointed: the span and log
+    tables and, built by the first trace request that asks, the
+    trace-ready frame over them. The checkpoints are ``LogicalRDD``
+    leaves, so a route plans over in-memory blocks, not over the
+    parquet scan and dedup that produced them.
+
+    Read a generation only under a lease (:meth:`DuoEngine.query_service`):
+    the engine releases a superseded generation once its last lease
+    ends, and reading a released checkpoint raises."""
+
+    def __init__(self, key: tuple, spans: DataFrame, logs: DataFrame):
+        #: (span key, log key)
+        self.key = key
+        self.spans = spans
+        self.logs = logs
+        self.leases = 0
+        self._trace: DataFrame | None = None
+        self._trace_lock = threading.Lock()
+
+    def traces(self) -> DataFrame:
+        """``correlate_span_logs(spans, logs)``: one row per span with
+        its log rollup and error flag, checkpointed by the first call."""
+        with self._trace_lock:
+            if self._trace is None:
+                self._trace = _pinned(correlate_span_logs(self.spans, self.logs))
+            return self._trace
+
+    def frames(self) -> list[DataFrame]:
+        return [df for df in (self.spans, self.logs, self._trace) if df is not None]
 
 
 class DuoEngine:
@@ -96,10 +141,11 @@ class DuoEngine:
         self._server: IngestServer | None = None
         self._http = None
         self._queries: list = []
-        #: table -> (store key, frame) of the last persistent read;
-        #: "trace" holds the persisted trace-ready frame (:meth:`traces`)
-        self._frames: dict[str, tuple[object, DataFrame]] = {}
-        self._frames_lock = threading.Lock()
+        #: the current generation, and every generation still held: the
+        #: current one plus superseded ones a request still leases
+        self._gen: Generation | None = None
+        self._held: list[Generation] = []
+        self._gen_lock = threading.Lock()
 
     # ------------------------------------------------------- ingest --
 
@@ -159,34 +205,17 @@ class DuoEngine:
     # -------------------------------------------------------- query --
 
     def _table_df(self, table: str) -> DataFrame:
-        """The table's current rows. A table with no rows yet reads as
-        an empty frame in its schema, so an empty engine is queryable.
-
-        A persistent table's frame is reused until its store key
-        changes (:meth:`_current`): the rebuild re-lists the files
-        and re-infers the schema in Spark jobs, while the key is two
-        listings. Key check and rebuild share one lock, so concurrent
-        requests after a commit rebuild once. Memory mode reads the
-        temp view afresh each call (no job): the pipeline re-points it
-        after every batch."""
+        """The table's current rows, read from the store as a plain
+        plan. A table with no rows yet reads as an empty frame in its
+        schema, so an empty engine is queryable. Memory mode reads the
+        temp view (no job): the pipeline re-points it after every batch.
+        The routes read the leased generation instead
+        (:meth:`query_service`)."""
         if self.memory_mode:
             if self.spark.catalog.tableExists(self._mem[table]):
                 return self.spark.table(self._mem[table])
             return self.spark.createDataFrame([], _EMPTY_SCHEMAS[table])
-        with self._frames_lock:
-            return self._current(table)[1]
-
-    def _current(self, table: str) -> tuple[object, DataFrame]:
-        """(store key, frame) of a persistent table, rebuilt when the key
-        changed. The key is the table's listed versions
-        (``merge.completed_versions``): it changes whenever a read would
-        see other files. The caller holds ``_frames_lock``."""
-        key = merge.completed_versions(self.spark, self.store.table_path(table))
-        cached = self._frames.get(table)
-        if cached is not None and cached[0] == key:
-            return cached
-        self._frames[table] = (key, self._read_table(table))
-        return self._frames[table]
+        return self._read_table(table)
 
     def _read_table(self, table: str) -> DataFrame:
         """A persistent table's rows. Spans dedup first-completion-wins;
@@ -206,50 +235,85 @@ class DuoEngine:
     def logs(self) -> DataFrame:
         return self._table_df("log")
 
-    def traces(self) -> DataFrame:
-        """The trace-ready frame: ``correlate_span_logs(spans(), logs())``,
-        one row per span with its log rollup and error flag, which the
-        trace routes filter.
+    def _checkpoint_table(self, table: str) -> DataFrame:
+        """A persistent table's rows, checkpointed. A table whose size
+        estimate fits one file split (``spark.sql.files.maxPartitionBytes``,
+        the size a scan reads as one partition) is held in one
+        partition, so the aggregate routes over it plan no exchange;
+        a larger one keeps its partitioning."""
+        df = self._read_table(table)
+        est = estimated_bytes(df)
+        split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        if est is not None and est <= split:
+            df = df.coalesce(1)
+        return _pinned(df)
 
-        A persistent store keeps one such frame per (span key, log key):
-        the first call after either key changes builds it under
-        ``_frames_lock`` with :func:`persist_count`, releasing the
-        previous one, so the engine owns at most one. ``persist()``
-        stores it at Spark's MEMORY_AND_DISK level, so the block manager
-        bounds its memory and spills the rest; no size gate applies.
-        Memory mode has no key: the same frame is returned as a plain,
-        unpersisted plan."""
-        if self.memory_mode:
-            return correlate_span_logs(self.spans(), self.logs())
-        with self._frames_lock:
-            (span_key, spans), (log_key, logs) = self._current("span"), self._current("log")
-            key = (span_key, log_key)
-            cached = self._frames.get("trace")
-            if cached is not None and cached[0] == key:
-                return cached[1]
-            self._release_traces()
-            df, _ = persist_count(correlate_span_logs(spans, logs))
-            self._frames["trace"] = (key, df)
-            return df
+    def _acquire(self) -> Generation:
+        """Lease the current generation, first building a new one if
+        either table's store key changed. The key is the table's listed
+        versions (``merge.completed_versions``, one listing per table):
+        it changes whenever a read would see other files. A table whose
+        key did not change keeps its checkpoint. Listing and build share
+        one lock, so concurrent requests after a commit build once."""
+        with self._gen_lock:
+            key = tuple(
+                merge.completed_versions(self.spark, self.store.table_path(t))
+                for t in ("span", "log")
+            )
+            old = self._gen
+            if old is None or old.key != key:
+                tables = [None, None] if old is None else [old.spans, old.logs]
+                made: list[DataFrame] = []
+                try:
+                    for i, table in enumerate(("span", "log")):
+                        if old is None or old.key[i] != key[i]:
+                            tables[i] = self._checkpoint_table(table)
+                            made.append(tables[i])
+                except BaseException:
+                    release(*made)
+                    raise
+                self._gen = Generation(key, *tables)
+                self._held.append(self._gen)
+                if old is not None and old.leases == 0:
+                    self._drop(old)
+            self._gen.leases += 1
+            return self._gen
 
-    def _release_traces(self) -> None:
-        """Free the persisted trace frame, if any. The caller holds
-        ``_frames_lock``."""
-        old = self._frames.pop("trace", None)
-        if old is not None:
-            release(old[1])
+    def _end_lease(self, gen: Generation) -> None:
+        with self._gen_lock:
+            gen.leases -= 1
+            if gen.leases == 0 and gen is not self._gen and gen in self._held:
+                self._drop(gen)
+
+    def _drop(self, gen: Generation) -> None:
+        """Release a superseded, unleased generation's checkpoints but
+        those a held generation shares. The caller holds ``_gen_lock``."""
+        self._held.remove(gen)
+        live = {id(df) for g in self._held for df in g.frames()}
+        release(*(df for df in gen.frames() if id(df) not in live))
 
     def query_service(self) -> QueryService:
         """The HTTP-facing facade over the engine's current tables,
-        built fresh per call (the process registry stays live); the
-        two table frames are reused until the store changes, and the
-        trace frame is built only when a trace route asks for it."""
+        built fresh per call (the process registry stays live).
+
+        A persistent store's facade reads a leased :class:`Generation`
+        and must be closed (``with engine.query_service() as svc:``):
+        its frames stay readable until then, however the store changes
+        meanwhile. Memory mode has no key: the facade reads the temp
+        views afresh and correlates per trace request."""
+        processes = self.process_registry.processes()
+        if self.memory_mode:
+            return QueryService(
+                self.spark, logs=self.logs(), spans=self.spans(), processes=processes,
+            )
+        gen = self._acquire()
         return QueryService(
             self.spark,
-            logs=self.logs(),
-            spans=self.spans(),
-            processes=self.process_registry.processes(),
-            trace_frame=self.traces,
+            logs=gen.logs,
+            spans=gen.spans,
+            processes=processes,
+            trace_frame=gen.traces,
+            end_lease=lambda: self._end_lease(gen),
         )
 
     def serve_http(self, host: str = "127.0.0.1", port: int = 0, request_hook=None):
@@ -301,5 +365,6 @@ class DuoEngine:
         for q in self._queries:
             q.stop()
         self._queries = []
-        with self._frames_lock:
-            self._release_traces()
+        with self._gen_lock:
+            release(*(df for g in self._held for df in g.frames()))
+            self._held, self._gen = [], None

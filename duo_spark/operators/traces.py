@@ -50,22 +50,23 @@ def select_root_spans(
     max_duration_us: int | None = None,
 ) -> DataFrame:
     """Root spans (parent_id IS NULL) passing the trace-admission
-    predicates — duo/src/web/services.rs:38-66."""
-    out = spans.filter(F.col("parent_id").isNull())
+    predicates — duo/src/web/services.rs:38-66. One conjunction, one
+    ``filter``: each ``filter`` call is a Dataset built and analyzed."""
+    cond = F.col("parent_id").isNull()
     if service:
-        out = out.filter(F.col("process_id").startswith(service))
+        cond &= F.col("process_id").startswith(service)
     if operation:
-        out = out.filter(F.col("name") == operation)
+        cond &= F.col("name") == operation
     if start_us is not None:
-        out = out.filter(F.col("start") >= F.lit(start_us))
+        cond &= F.col("start") >= F.lit(start_us)
     if end_us is not None:
-        out = out.filter(F.col("start") <= F.lit(end_us))
+        cond &= F.col("start") <= F.lit(end_us)
     dur = F.col("end") - F.col("start")
     if min_duration_us is not None:
-        out = out.filter(dur >= F.lit(min_duration_us))
+        cond &= dur >= F.lit(min_duration_us)
     if max_duration_us is not None:
-        out = out.filter(dur <= F.lit(max_duration_us))
-    return out
+        cond &= dur <= F.lit(max_duration_us)
+    return spans.filter(cond)
 
 
 def filter_traces(

@@ -11,6 +11,12 @@ config here is chosen to also hold on a large multi-executor cluster:
   row data).
 - Session timezone pinned to UTC so timestamp semantics are stable and
   oracle-comparable (DuckDB timestamps are UTC-naive).
+- PySpark's per-call origin capture off
+  (``spark.python.sql.dataFrameDebugging.enabled``): with it on, every
+  ``F.*``/Column call on a thread with an active session makes about
+  20 extra py4j round trips to record its Python call site. The cost:
+  an analysis error no longer names the Python line that built the
+  failing expression.
 """
 
 from __future__ import annotations
@@ -49,6 +55,7 @@ def get_spark(app_name: str = "duo_spark", **extra_conf: str) -> SparkSession:
             os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "64MB"),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # scalar @udf paths (none hot today — fold_idn only) cross the
         # boundary as Arrow batches instead of pickled rows
         .config("spark.sql.execution.pythonUDF.arrow.enabled", "true")

@@ -399,8 +399,8 @@ class CompletedVersions(NamedTuple):
 def completed_versions(spark, out_dir: str) -> CompletedVersions:
     """List a versioned table: one listing of ``compacted/`` and one
     of ``completed/``, no Spark job. Equal values mean a read sees the
-    same files, so the value doubles as the table's store key
-    (``DuoEngine.spans``/``logs``)."""
+    same files, so the value doubles as the table's store key (one
+    ``DuoEngine`` generation per key)."""
     snaps = _version_stamps(spark, f"{out_dir}/compacted")
     snapshot = max(snaps, default=None)
     listed = _version_stamps(spark, f"{out_dir}/completed")

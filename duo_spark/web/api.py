@@ -110,9 +110,12 @@ class QueryService:
     pid -> {"id", "service_name", "tags"} (duo/src/memory.rs:141-148).
 
     ``trace_frame()`` returns the trace-ready frame the trace routes
-    filter: every span with its correlated logs (``DuoEngine.traces``
-    keeps one per store version). Without it each trace request
+    filter: every span with its correlated logs (``Generation.traces``
+    checkpoints one per store version). Without it each trace request
     correlates ``spans`` with ``logs`` itself.
+
+    ``end_lease()`` ends the lease on the engine generation the frames
+    belong to; exiting ``with service:`` calls it once.
     """
 
     spark: SparkSession
@@ -120,6 +123,15 @@ class QueryService:
     spans: DataFrame
     processes: dict[str, dict[str, Any]] = field(default_factory=dict)
     trace_frame: Callable[[], DataFrame] | None = None
+    end_lease: Callable[[], None] | None = None
+
+    def __enter__(self) -> "QueryService":
+        return self
+
+    def __exit__(self, *exc: Any) -> None:
+        end, self.end_lease = self.end_lease, None
+        if end is not None:
+            end()
 
     # ------------------------------------------------------------ logs --
 

@@ -18,6 +18,7 @@ local mode shares the driver's scheduler across handler threads.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -61,12 +62,16 @@ def _route(service: QueryService, path: str, params: dict[str, Any]) -> Any:
 class DuoHTTPServer:
     """Serve a QueryService over HTTP on a daemon thread.
 
-    ``service_fn`` is called per request. ``lambda:
-    engine.query_service()`` gives each request a fresh facade over
-    the engine's table frames and trace frame, which the engine reuses
-    until its store key changes (a commit, compaction or replay), so
-    every request sees the current store; pass a fixed closure for a
-    static snapshot.
+    ``service_fn`` is called per request, and the facade it returns is
+    entered around the request's dispatch (``with service:``).
+    ``lambda: engine.query_service()`` gives each request a facade
+    that leases the engine's current generation: the checkpointed
+    span, log and trace frames of one store version, rebuilt only
+    when the store key changes (a commit, compaction or replay). The
+    lease ends when the dispatch does, so a request keeps reading its
+    generation while a later one builds the next, and the engine frees
+    a superseded generation once no request holds it. Pass a fixed
+    closure for a static snapshot.
     """
 
     def __init__(self, service_fn, host: str = "127.0.0.1", port: int = 0,
@@ -82,14 +87,11 @@ class DuoHTTPServer:
         class Handler(BaseHTTPRequestHandler):
             def do_GET(self) -> None:  # noqa: N802 (http.server API)
                 url = urlparse(self.path)
+                hook = outer._request_hook
                 try:
-                    if outer._request_hook is not None:
-                        with outer._request_hook(url.path):
-                            payload = _route(
-                                outer._service_fn(), url.path, _params(url.query)
-                            )
-                    else:
-                        payload = _route(outer._service_fn(), url.path, _params(url.query))
+                    with hook(url.path) if hook else contextlib.nullcontext():
+                        with outer._service_fn() as service:
+                            payload = _route(service, url.path, _params(url.query))
                     status = 200
                 except NotFound as e:
                     payload, status = {"error": str(e)}, 404

@@ -68,10 +68,14 @@ def test_bench_runs_free_their_blocks(spark, sf_dir, persistent_ids):
 
 
 def test_one_materialization_layer():
-    """localCheckpoint, thread pools and the optimizer size estimate
-    live only in materialize.py; every other module goes through it."""
+    """localCheckpoint, persist/cache/unpersist, thread pools and the
+    optimizer size estimate live only in materialize.py; every other
+    module goes through it."""
     root = pathlib.Path(__file__).resolve().parents[1] / "duo_spark"
-    banned = re.compile(r"localCheckpoint\(|ThreadPoolExecutor|sizeInBytes\(\)")
+    banned = re.compile(
+        r"localCheckpoint\(|\.persist\(|\.cache\(\)|\.unpersist\(|ThreadPoolExecutor"
+        r"|sizeInBytes\(\)"
+    )
     hits = [
         f"{p.relative_to(root)}:{i}"
         for p in sorted(root.rglob("*.py"))

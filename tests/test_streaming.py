@@ -932,94 +932,285 @@ def test_engine_serves_spans_from_fast_store(spark, scratch):
         eng.stop()
 
 
-def test_engine_reuses_frames_until_store_changes(spark, scratch):
-    """On an unchanged persistent store a second spans()/logs() call
-    returns the same frame and launches no Spark job; a commit changes
-    the span key and the next call rebuilds."""
-    from duo_spark.engine import DuoEngine
+def _engine_load(spark, eng, spans, logs):
+    """Stage span and log rows as the ingest server would, then drain.
+    A table given no rows gets no staged file, so its store key stays."""
     from duo_spark.schemas import LOG_CORE_SCHEMA
 
+    for rows, schema, source in ((spans, SPAN_SCHEMA, eng.span_source),
+                                 (logs, LOG_CORE_SCHEMA, eng.log_source)):
+        if rows:
+            spark.createDataFrame(rows, schema).write.mode("append").parquet(source)
+    eng.drain()
+
+
+def _span_logs(env):
+    """span id -> its log messages, over a Jaeger trace envelope."""
+    return {int(s["spanID"]): [f["value"] for lg in s["logs"] for f in lg["fields"]
+                               if f["key"] == "message"]
+            for t in env["data"] for s in t["spans"]}
+
+
+def _served(eng, route):
+    """``route(svc)`` over one leased query service, as one request."""
+    with eng.query_service() as svc:
+        return route(svc)
+
+
+def _log(span_id, message, time=BASE):
+    return ("web-0", time, 61, span_id, "INFO", "t", "f.rs", 1, message)
+
+
+def test_engine_reuses_frames_until_store_changes(spark, scratch, persistent_ids):
+    """On an unchanged persistent store a second request leases the same
+    generation and launches no Spark job; a span commit changes the span
+    key, and the next request builds a new span frame, keeps the log
+    frame and frees the superseded span checkpoint."""
+    from duo_spark.engine import DuoEngine
+
     eng = DuoEngine(spark, os.path.join(scratch, "data"), trigger_seconds=1)
-    os.makedirs(eng.span_source, exist_ok=True)
-    os.makedirs(eng.log_source, exist_ok=True)
-    spark.createDataFrame(
-        [_rec(51, start=BASE, end=BASE + 10)], SPAN_SCHEMA
-    ).write.mode("append").parquet(eng.span_source)
-    spark.createDataFrame(
-        [("web-0", BASE, 1, 51, "INFO", "t", "f.rs", 1, "m")], LOG_CORE_SCHEMA
-    ).write.mode("append").parquet(eng.log_source)
-    eng.drain()
-    (spans, logs), built = _jobs_in(spark, lambda: (eng.spans(), eng.logs()))
-    assert built > 0, "the first read must rebuild (schema inference)"
-    (spans2, logs2), reused = _jobs_in(spark, lambda: (eng.spans(), eng.logs()))
-    assert spans2 is spans and logs2 is logs
-    assert reused == 0
-    spark.createDataFrame(
-        [_rec(52, start=BASE + 20, end=BASE + 30)], SPAN_SCHEMA
-    ).write.mode("append").parquet(eng.span_source)
-    eng.drain()
-    spans3 = eng.spans()
-    assert spans3 is not spans
-    assert {r.id for r in spans3.collect()} == {51, 52}
+    try:
+        _engine_load(spark, eng, [_rec(51, start=BASE, end=BASE + 10)], [_log(51, "m")])
+        (spans, logs), built = _jobs_in(spark, lambda: _served(eng, lambda s: (s.spans, s.logs)))
+        assert built > 0, "the first request builds the generation"
+        (spans2, logs2), reused = _jobs_in(spark, lambda: _served(eng, lambda s: (s.spans, s.logs)))
+        assert spans2 is spans and logs2 is logs
+        assert reused == 0
+        _engine_load(spark, eng, [_rec(52, start=BASE + 20, end=BASE + 30)], [])
+        spans3, logs3 = _served(eng, lambda s: (s.spans, s.logs))
+        assert spans3 is not spans and logs3 is logs
+        assert {r.id for r in spans3.collect()} == {51, 52}
+        span_rdd = spans._jdf.queryExecution().logical().rdd().id()
+        assert span_rdd not in persistent_ids()
+    finally:
+        eng.stop()
+
+
+def test_engine_generation_routes_start_one_job(spark, scratch):
+    """On an unchanged one-partition store every route filters or
+    aggregates checkpointed one-partition frames: field_stats and
+    operations plan no exchange and start at most 1 Spark job each,
+    list_logs and get_trace at most 1, list_traces at most 2."""
+    from duo_spark.engine import DuoEngine
+
+    eng = DuoEngine(spark, os.path.join(scratch, "data"), trigger_seconds=1)
+    try:
+        _engine_load(spark, eng,
+                     [_rec(61, trace=61, start=BASE, end=BASE + 50),
+                      _rec(62, parent=61, trace=61, name="db", start=BASE + 5, end=BASE + 9)],
+                     [_log(62, "first", BASE + 6)])
+        _served(eng, lambda s: s.get_trace(61))  # builds the generation
+        routes = {
+            "field_stats": lambda s: s.field_stats("level", {}),
+            "operations": lambda s: s.operations("web"),
+            "list_logs": lambda s: s.list_logs({}),
+            "get_trace": lambda s: s.get_trace(61),
+            "list_traces": lambda s: s.list_traces({}),
+        }
+        got = {name: _jobs_in(spark, lambda r=r: _served(eng, r)) for name, r in routes.items()}
+        bound = {"field_stats": 1, "operations": 1, "list_logs": 1, "get_trace": 1,
+                 "list_traces": 2}
+        assert {k: jobs for k, (_, jobs) in got.items() if jobs > bound[k]} == {}
+        assert got["field_stats"][0] == [{"value": "INFO", "count": 1}]
+        assert got["operations"][0]["data"] == ["db", "op"]
+        assert _span_logs(got["get_trace"][0]) == {61: [], 62: ["first"]}
+        assert _served(eng, lambda s: (s.spans.rdd.getNumPartitions(),
+                                       s.logs.rdd.getNumPartitions())) == (1, 1)
+    finally:
+        eng.stop()
 
 
 def test_engine_trace_routes_filter_one_trace_frame(spark, scratch, persistent_ids):
     """On an unchanged persistent store the trace routes filter the
-    engine's one persisted trace frame: get_trace starts at most 1 Spark
-    job, list_traces at most 2. A span and log drained later show on
-    the next get_trace; the engine never holds more than one trace
-    frame, a compacted store keeps it persisted, and stop() frees it."""
+    generation's checkpointed trace frame: get_trace starts at most 1
+    Spark job, list_traces at most 2. A span and log drained later show
+    on the next get_trace; the engine holds one generation's three
+    frames (span, log, trace) after each request, a compacted store
+    keeps its generation too, and stop() frees it."""
     from duo_spark.engine import DuoEngine
-    from duo_spark.schemas import LOG_CORE_SCHEMA
-
-    def load(spans, logs):
-        spark.createDataFrame(spans, SPAN_SCHEMA).write.mode("append").parquet(eng.span_source)
-        spark.createDataFrame(logs, LOG_CORE_SCHEMA).write.mode("append").parquet(eng.log_source)
-        eng.drain()
-
-    def span_logs(env):
-        return {int(s["spanID"]): [f["value"] for lg in s["logs"] for f in lg["fields"]
-                                   if f["key"] == "message"]
-                for t in env["data"] for s in t["spans"]}
 
     before = persistent_ids()
     eng = DuoEngine(spark, os.path.join(scratch, "data"), trigger_seconds=1)
     try:
-        os.makedirs(eng.span_source, exist_ok=True)
-        os.makedirs(eng.log_source, exist_ok=True)
-        load([_rec(61, trace=61, start=BASE, end=BASE + 50),
-              _rec(62, parent=61, trace=61, start=BASE + 5, end=BASE + 9)],
-             [("web-0", BASE + 6, 61, 62, "INFO", "t", "f.rs", 1, "first")])
-        assert span_logs(eng.query_service().get_trace(61)) == {61: [], 62: ["first"]}
-        assert len(persistent_ids() - before) == 1
-        env, got_jobs = _jobs_in(spark, lambda: eng.query_service().get_trace(61))
+        _engine_load(spark, eng,
+                     [_rec(61, trace=61, start=BASE, end=BASE + 50),
+                      _rec(62, parent=61, trace=61, start=BASE + 5, end=BASE + 9)],
+                     [_log(62, "first", BASE + 6)])
+        assert _span_logs(_served(eng, lambda s: s.get_trace(61))) == {61: [], 62: ["first"]}
+        assert len(persistent_ids() - before) == 3
+        env, got_jobs = _jobs_in(spark, lambda: _served(eng, lambda s: s.get_trace(61)))
         assert got_jobs <= 1
-        assert span_logs(env) == {61: [], 62: ["first"]}
-        env, list_jobs = _jobs_in(spark, lambda: eng.query_service().list_traces({}))
+        assert _span_logs(env) == {61: [], 62: ["first"]}
+        env, list_jobs = _jobs_in(spark, lambda: _served(eng, lambda s: s.list_traces({})))
         assert list_jobs <= 2
         assert [t["traceID"] for t in env["data"]] == ["61"]
 
-        load([_rec(63, parent=61, trace=61, start=BASE + 20, end=BASE + 30)],
-             [("web-0", BASE + 21, 61, 63, "WARN", "t", "f.rs", 2, "later")])
-        env = eng.query_service().get_trace(61)
-        assert span_logs(env) == {61: [], 62: ["first"], 63: ["later"]}
-        assert len(persistent_ids() - before) == 1
-        load([_rec(71, trace=71, start=BASE + 90, end=BASE + 99)], [])
-        assert [t["traceID"] for t in eng.query_service().list_traces({})["data"]] == ["71", "61"]
-        assert len(persistent_ids() - before) == 1
+        _engine_load(spark, eng, [_rec(63, parent=61, trace=61, start=BASE + 20, end=BASE + 30)],
+                     [("web-0", BASE + 21, 61, 63, "WARN", "t", "f.rs", 2, "later")])
+        env = _served(eng, lambda s: s.get_trace(61))
+        assert _span_logs(env) == {61: [], 62: ["first"], 63: ["later"]}
+        assert len(persistent_ids() - before) == 3
+        _engine_load(spark, eng, [_rec(71, trace=71, start=BASE + 90, end=BASE + 99)], [])
+        traces = _served(eng, lambda s: s.list_traces({}))
+        assert [t["traceID"] for t in traces["data"]] == ["71", "61"]
+        assert len(persistent_ids() - before) == 3
 
-        # a compacted store keeps a key, so the frame persists there too
+        # a compacted store keeps a key, so its generation is checkpointed too
         eng.compact(retain_latest=1)
         eng.compact(retain_latest=1)
         want = {61: [], 62: ["first"], 63: ["later"]}
-        assert span_logs(eng.query_service().get_trace(61)) == want
-        env, got_jobs = _jobs_in(spark, lambda: eng.query_service().get_trace(61))
+        assert _span_logs(_served(eng, lambda s: s.get_trace(61))) == want
+        env, got_jobs = _jobs_in(spark, lambda: _served(eng, lambda s: s.get_trace(61)))
         assert got_jobs <= 1
-        assert span_logs(env) == want
-        assert len(persistent_ids() - before) == 1
+        assert _span_logs(env) == want
+        assert len(persistent_ids() - before) == 3
     finally:
         eng.stop()
     assert not (persistent_ids() - before)
+
+
+def test_engine_lease_outlives_the_next_generation(spark, scratch, persistent_ids, monkeypatch):
+    """A request that leased generation g keeps answering from g while
+    the store changes and a later request builds and reads g+1; g's
+    frames are freed when that request ends, and stop() frees g+1's."""
+    import threading
+    import urllib.request
+
+    from duo_spark.engine import DuoEngine
+    from duo_spark.web.api import QueryService
+
+    entered, go = threading.Event(), threading.Event()
+    get_trace = QueryService.get_trace
+
+    def held(self, trace_id):
+        if not entered.is_set():
+            entered.set()
+            go.wait(120)
+        return get_trace(self, trace_id)
+
+    monkeypatch.setattr(QueryService, "get_trace", held)
+    before = persistent_ids()
+    eng = DuoEngine(spark, os.path.join(scratch, "data"), trigger_seconds=1)
+    try:
+        _engine_load(spark, eng, [_rec(61, trace=61, start=BASE, end=BASE + 50)],
+                     [_log(61, "first")])
+        web = eng.serve_http()
+
+        def get(path):
+            with urllib.request.urlopen(f"http://{web[0]}:{web[1]}{path}", timeout=120) as r:
+                return r.status, json.loads(r.read())
+
+        first: list = []
+        holder = threading.Thread(target=lambda: first.append(get("/api/traces/61")))
+        holder.start()
+        assert entered.wait(120)
+        g = persistent_ids() - before
+        assert len(g) == 2  # span and log; the trace frame is built after the hold
+        _engine_load(spark, eng, [_rec(62, parent=61, trace=61, start=BASE + 5, end=BASE + 9)],
+                     [_log(62, "second", BASE + 6)])
+        status, env = get("/api/traces/61")
+        assert status == 200
+        assert _span_logs(env) == {61: ["first"], 62: ["second"]}
+        assert g <= persistent_ids()  # g is leased: still held
+        go.set()
+        holder.join(120)
+        assert first and first[0][0] == 200
+        assert _span_logs(first[0][1]) == {61: ["first"]}
+        now = persistent_ids() - before
+        assert len(now) == 3 and not (now & g)
+    finally:
+        go.set()
+        eng.stop()
+    assert not (persistent_ids() - before)
+
+
+def test_engine_leases_hold_under_concurrent_rebuilds(spark, scratch, persistent_ids,
+                                                     monkeypatch):
+    """Stress: 8 request threads (more than the cores) lease and read
+    while the store key changes every few listings, so generations are
+    built, superseded and dropped under contention. No read hits a
+    released frame, and afterwards the engine holds exactly the current
+    generation, unleased."""
+    import itertools
+    import sys
+    import threading
+
+    from duo_spark.engine import DuoEngine
+    from duo_spark.streaming import merge
+
+    eng = DuoEngine(spark, os.path.join(scratch, "data"), trigger_seconds=1)
+    _engine_load(spark, eng, [_rec(51, start=BASE, end=BASE + 10)], [_log(51, "m")])
+    listed, ticks = merge.completed_versions, itertools.count()
+
+    def listing(*args, **kwargs):
+        """The real listing, its stamps moved on every 6th call."""
+        v = listed(*args, **kwargs)
+        return v._replace(stamps=v.stamps + (next(ticks) // 6,))
+
+    monkeypatch.setattr(merge, "completed_versions", listing)
+    before = persistent_ids()
+    counts, errors = [], []
+
+    def worker():
+        try:
+            for _ in range(6):
+                with eng.query_service() as svc:
+                    counts.append((svc.spans.count(), svc.logs.count()))
+        except Exception as e:  # recorded, asserted below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(300)
+        assert not any(t.is_alive() for t in threads)
+        assert errors == []
+        assert counts == [(1, 1)] * 48
+        assert eng._held == [eng._gen] and eng._gen.leases == 0
+        frames = {df._jdf.queryExecution().logical().rdd().id() for df in eng._gen.frames()}
+        assert persistent_ids() - before == frames
+    finally:
+        sys.setswitchinterval(interval)
+        eng.stop()
+    assert not (persistent_ids() - before)
+
+
+def test_engine_trace_request_lists_each_table_once(spark, scratch, monkeypatch):
+    """An HTTP trace request reads each table's store key once: the
+    lease lists both tables (2 ``completed_versions`` calls) and the
+    route reads the leased generation."""
+    import urllib.request
+
+    from duo_spark.engine import DuoEngine
+    from duo_spark.streaming import merge
+
+    eng = DuoEngine(spark, os.path.join(scratch, "data"), trigger_seconds=1)
+    try:
+        _engine_load(spark, eng, [_rec(61, trace=61, start=BASE, end=BASE + 50)],
+                     [_log(61, "first")])
+        web = eng.serve_http()
+
+        def get(path):
+            with urllib.request.urlopen(f"http://{web[0]}:{web[1]}{path}", timeout=120) as r:
+                assert r.status == 200
+
+        get("/api/traces/61")
+        calls = []
+        listed = merge.completed_versions
+
+        def counted(*args, **kwargs):
+            calls.append(args[1])
+            return listed(*args, **kwargs)
+
+        monkeypatch.setattr(merge, "completed_versions", counted)
+        get("/api/traces/61")
+        assert sorted(calls) == sorted(eng.store.table_path(t) for t in ("span", "log"))
+    finally:
+        eng.stop()
 
 
 def test_engine_http_fresh_after_each_store_change(spark, scratch):
