@@ -217,15 +217,20 @@ class DuoEngine:
             return self.spark.createDataFrame([], _EMPTY_SCHEMAS[table])
         return self._read_table(table)
 
-    def _read_table(self, table: str) -> DataFrame:
-        """A persistent table's rows. Spans dedup first-completion-wins;
-        logs keep their own columns, the K1 partition columns their
-        versions carry for compaction dropped."""
+    def _read_table(
+        self, table: str, versions: merge.CompletedVersions | None = None
+    ) -> DataFrame:
+        """A persistent table's rows: ``versions`` (a store key) if
+        given, else the versions listed now. Spans dedup
+        first-completion-wins; logs keep their own columns, the K1
+        partition columns their versions carry for compaction dropped."""
         path = self.store.table_path(table)
         try:
             if table == "span":
-                return merge.read_completed(self.spark, path)
-            return merge.read_completed(self.spark, path, dedup=False).drop(*PARTITION_COLS)
+                return merge.read_completed(self.spark, path, versions=versions)
+            return merge.read_completed(
+                self.spark, path, dedup=False, versions=versions
+            ).drop(*PARTITION_COLS)
         except FileNotFoundError:
             return self.spark.createDataFrame([], _EMPTY_SCHEMAS[table])
 
@@ -235,13 +240,13 @@ class DuoEngine:
     def logs(self) -> DataFrame:
         return self._table_df("log")
 
-    def _checkpoint_table(self, table: str) -> DataFrame:
-        """A persistent table's rows, checkpointed. A table whose size
-        estimate fits one file split (``spark.sql.files.maxPartitionBytes``,
-        the size a scan reads as one partition) is held in one
-        partition, so the aggregate routes over it plan no exchange;
-        a larger one keeps its partitioning."""
-        df = self._read_table(table)
+    def _checkpoint_table(self, table: str, versions: merge.CompletedVersions) -> DataFrame:
+        """A persistent table's rows at ``versions``, checkpointed. A
+        table whose size estimate fits one file split
+        (``spark.sql.files.maxPartitionBytes``, the size a scan reads as
+        one partition) is held in one partition, so the aggregate routes
+        over it plan no exchange; a larger one keeps its partitioning."""
+        df = self._read_table(table, versions)
         est = estimated_bytes(df)
         split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
         if est is not None and est <= split:
@@ -252,9 +257,12 @@ class DuoEngine:
         """Lease the current generation, first building a new one if
         either table's store key changed. The key is the table's listed
         versions (``merge.completed_versions``, one listing per table):
-        it changes whenever a read would see other files. A table whose
-        key did not change keeps its checkpoint. Listing and build share
-        one lock, so concurrent requests after a commit build once."""
+        it changes whenever a read would see other files. A changed
+        table's frame reads exactly the versions its key lists, so a
+        version published during the build shows in the next
+        generation. A table whose key did not change keeps its
+        checkpoint. Listing and build share one lock, so concurrent
+        requests after a commit build once."""
         with self._gen_lock:
             key = tuple(
                 merge.completed_versions(self.spark, self.store.table_path(t))
@@ -267,7 +275,7 @@ class DuoEngine:
                 try:
                     for i, table in enumerate(("span", "log")):
                         if old is None or old.key[i] != key[i]:
-                            tables[i] = self._checkpoint_table(table)
+                            tables[i] = self._checkpoint_table(table, key[i])
                             made.append(tables[i])
                 except BaseException:
                     release(*made)

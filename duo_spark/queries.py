@@ -20,8 +20,10 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql import Window
 
 from duo_spark.functions import codec as codec_fns
@@ -37,6 +39,7 @@ from duo_spark.operators.traces import (
     filter_traces,
     logs_for_traces,
 )
+from duo_spark.schemas import FIXTURE_SCHEMAS
 
 # epoch µs constants (UTC)
 T_2024_01_05 = 1_704_412_800_000_000
@@ -45,19 +48,27 @@ T_2024_01_20 = 1_705_708_800_000_000
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # events.ts has shipped as parquet TIMESTAMP(NANOS) (which Spark
-        # only reads as an ns-epoch long, behind nanosAsLong) and as
-        # TIMESTAMP(MICROS)/NTZ, depending on the generator version.
-        # Normalize both layouts to a µs-precision timestamp column so
-        # every downstream view sees one shape. get_spark() sets the
-        # conf too; setting it here keeps driver-owned sessions working.
+    """Fixture table ``<sf_dir>/<name>.parquet``, read with its declared
+    schema (``schemas.FIXTURE_SCHEMAS``): the plan is built with no
+    footer-inference Spark job. The one place the registry reads a
+    fixture.
+
+    ``events.ts`` has also shipped as parquet TIMESTAMP(NANOS), which
+    Spark reads only as an ns-epoch long. That layout is recognised from
+    the file footer (pyarrow, no Spark job): ``ts`` is declared a long,
+    read behind ``nanosAsLong`` and normalized to a µs timestamp, so
+    every downstream view sees one shape."""
+    path = f"{sf_dir}/{name}.parquet"
+    schema = FIXTURE_SCHEMAS[name]
+    ts_type = str(pq.read_schema(path).field("ts").type) if name == "events" else ""
+    if ts_type.startswith("timestamp[ns"):  # the legacy layout
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ev = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(ev.dtypes).get("ts") == "bigint":  # legacy ns-long layout
-            ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return ev
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        schema = T.StructType(
+            [T.StructField("ts", T.LongType()) if f.name == "ts" else f for f in schema]
+        )
+        ev = spark.read.schema(schema).parquet(path)
+        return ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return spark.read.schema(schema).parquet(path)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2204,7 +2215,7 @@ def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the exhaustive all-pairs definition (safe at sf0.01)."""
     from duo_spark.operators.fuzzy import fuzzy_pairs
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = _t(spark, sf_dir, "customer")
     return fuzzy_pairs(cust, "c_custkey", "c_name", max_distance=1)
 
 
@@ -5177,8 +5188,8 @@ def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     per fact row, SCALING.md probe 15)."""
     from duo_spark.operators.sketch import bloom_build, bloom_might_contain
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    cust = _t(spark, sf_dir, "customer")
+    orders = _t(spark, sf_dir, "orders")
     dim = cust.filter(F.col("c_nationkey") == 7).select("c_custkey")
     # m sized for ~13 bits/key at sf0.1 (FPR ~0.5%); a production build
     # picks m from the dim-side count the same way Spark's
@@ -5387,8 +5398,8 @@ def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duo_spark.operators.skew import key_skew_profile
 
     ev = _t(spark, sf_dir, "events")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem")
     # the three per-key profiles are independent pipelines (each runs
     # its own checkpoint + offsets-collect pair inside
     # with_running_total) — build them concurrently so the six eager
@@ -5948,8 +5959,8 @@ def q_validate_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     join). Exact integer violation counts, ppm rate."""
     from duo_spark.operators.validate import validate
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
     return validate(
         orders,
         rules={

@@ -19,6 +19,16 @@ faithful carrier. Foreign u64 >= 2^63 would be reinterpreted
 Timestamps are Int64 MICROSECONDS since epoch (duo/src/models.rs:61-63,
 duo/src/arrow.rs:24), kept as LongType for fidelity; derive a
 TimestampType column only when window/event-time ops need one.
+
+Fixture tables: the ten TPC-H-like driver tables the query registry
+reads (``queries._t``) are declared here too, as
+:data:`FIXTURE_SCHEMAS`, each equal to what Spark infers from the
+fixture files (``timestamp[us]`` columns as ``timestamp_ntz``,
+``embedding`` as ``array<float>``). A read with a declared schema plans
+with no footer-inference Spark job; the declaration is the contract,
+and a fixture file of another layout fails at read time. The older
+``events.ts`` layout, parquet TIMESTAMP(NANOS), is the one exception
+``_t`` recognises (from the file footer, no Spark job).
 """
 
 from __future__ import annotations
@@ -66,3 +76,36 @@ PROCESS_SCHEMA = T.StructType(
 
 #: Log levels, most to least severe — duo-api proto common.proto Level
 LEVELS = ("ERROR", "WARN", "INFO", "DEBUG", "TRACE")
+
+
+def _fixture(*fields: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(n, t, True) for n, t in fields])
+
+
+_L, _I, _D, _S = T.LongType(), T.IntegerType(), T.DoubleType(), T.StringType()
+_TS = T.TimestampNTZType()
+
+#: The driver's fixture tables (``<sf_dir>/<name>.parquet``), as Spark
+#: infers them — see "Fixture tables" above
+FIXTURE_SCHEMAS = {
+    "customer": _fixture(("c_custkey", _L), ("c_name", _S), ("c_nationkey", _I),
+                         ("c_acctbal", _D), ("c_mktsegment", _S)),
+    "documents": _fixture(("doc_id", _L), ("text", _S), ("lang", _S), ("source", _S),
+                          ("n_chars", _L)),
+    "embeddings": _fixture(("vec_id", _L), ("embedding", T.ArrayType(T.FloatType(), True)),
+                           ("label", _I)),
+    "events": _fixture(("event_id", _L), ("ts", _TS), ("user_id", _L), ("event_type", _S),
+                       ("value", _D), ("props", _S)),
+    "lineitem": _fixture(("l_orderkey", _L), ("l_partkey", _L), ("l_suppkey", _L),
+                         ("l_linenumber", _I), ("l_quantity", _D), ("l_extendedprice", _D),
+                         ("l_discount", _D), ("l_tax", _D), ("l_returnflag", _S),
+                         ("l_linestatus", _S), ("l_shipdate", _TS)),
+    "nation": _fixture(("n_nationkey", _I), ("n_name", _S), ("n_regionkey", _I)),
+    "orders": _fixture(("o_orderkey", _L), ("o_custkey", _L), ("o_orderstatus", _S),
+                       ("o_totalprice", _D), ("o_orderdate", _TS), ("o_orderpriority", _S)),
+    "part": _fixture(("p_partkey", _L), ("p_name", _S), ("p_brand", _S), ("p_type", _S),
+                     ("p_size", _I), ("p_retailprice", _D)),
+    "region": _fixture(("r_regionkey", _I), ("r_name", _S)),
+    "supplier": _fixture(("s_suppkey", _L), ("s_name", _S), ("s_nationkey", _I),
+                         ("s_acctbal", _D)),
+}

@@ -60,9 +60,10 @@ def get_spark(app_name: str = "duo_spark", **extra_conf: str) -> SparkSession:
         # boundary as Arrow batches instead of pickled rows
         .config("spark.sql.execution.pythonUDF.arrow.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # events.ts is parquet TIMESTAMP(NANOS); Spark reads it as a
-        # ns-epoch long (set here once instead of as a query-time
-        # session mutation)
+        # serves only the legacy events.ts layout, parquet
+        # TIMESTAMP(NANOS), which Spark reads as an ns-epoch long behind
+        # this conf (queries._t sets it too when it meets that layout);
+        # the repo's fixtures store events.ts as µs
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # aggressive broadcast: dimension tables (process registry,
         # nation/region analogs) are tiny even at 100 TB fact scale

@@ -409,7 +409,9 @@ def completed_versions(spark, out_dir: str) -> CompletedVersions:
     return CompletedVersions(snapshot, deltas, head + tuple(listed[v] for v in deltas))
 
 
-def read_completed(spark, out_dir: str, *, dedup: bool = True) -> DataFrame:
+def read_completed(
+    spark, out_dir: str, *, dedup: bool = True, versions: CompletedVersions | None = None
+) -> DataFrame:
     """All spans completed so far: the newest compacted snapshot (if
     :func:`compact_completed` has run) plus every delta version above
     it — exactly-once: a replayed batch overwrites its own version,
@@ -423,8 +425,13 @@ def read_completed(spark, out_dir: str, *, dedup: bool = True) -> DataFrame:
 
     Versions read with partition-value type inference off: the K1
     columns inside a partitioned version come back as the same strings
-    the batch store reads, so partitioned and flat versions union."""
-    versions = completed_versions(spark, out_dir)
+    the batch store reads, so partitioned and flat versions union.
+
+    ``versions`` reads exactly those listed versions (a store key from
+    :func:`completed_versions`) instead of listing again, so the frame
+    matches its key even if a version is published meanwhile."""
+    if versions is None:
+        versions = completed_versions(spark, out_dir)
     parts: list[tuple[DataFrame, int]] = []
     if versions.snapshot is not None:
         parts.append(

@@ -46,6 +46,26 @@ def persistent_ids(spark):
 
 
 @pytest.fixture(scope="session")
+def jobs_in(spark):
+    """Callable: (fn(), the number of Spark jobs it started) — counted
+    in a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = uuid.uuid4().hex
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def plan_rdd_ids():
     """Callable: ids of the checkpoint RDDs a frame's logical plan reads
     (its LogicalRDD leaves)."""

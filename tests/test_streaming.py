@@ -28,18 +28,6 @@ def scratch():
     return _scratch("test", uuid.uuid4().hex)
 
 
-def _jobs_in(spark, fn):
-    """(fn(), the number of Spark jobs it started) — counted in a fresh
-    job group."""
-    sc, group = spark.sparkContext, uuid.uuid4().hex
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_replay_withholds_open_spans_and_merges_closed(spark):
     records = [
         # span 1: open then close, tags from both records merge
@@ -961,7 +949,7 @@ def _log(span_id, message, time=BASE):
     return ("web-0", time, 61, span_id, "INFO", "t", "f.rs", 1, message)
 
 
-def test_engine_reuses_frames_until_store_changes(spark, scratch, persistent_ids):
+def test_engine_reuses_frames_until_store_changes(spark, scratch, persistent_ids, jobs_in):
     """On an unchanged persistent store a second request leases the same
     generation and launches no Spark job; a span commit changes the span
     key, and the next request builds a new span frame, keeps the log
@@ -971,9 +959,9 @@ def test_engine_reuses_frames_until_store_changes(spark, scratch, persistent_ids
     eng = DuoEngine(spark, os.path.join(scratch, "data"), trigger_seconds=1)
     try:
         _engine_load(spark, eng, [_rec(51, start=BASE, end=BASE + 10)], [_log(51, "m")])
-        (spans, logs), built = _jobs_in(spark, lambda: _served(eng, lambda s: (s.spans, s.logs)))
+        (spans, logs), built = jobs_in(lambda: _served(eng, lambda s: (s.spans, s.logs)))
         assert built > 0, "the first request builds the generation"
-        (spans2, logs2), reused = _jobs_in(spark, lambda: _served(eng, lambda s: (s.spans, s.logs)))
+        (spans2, logs2), reused = jobs_in(lambda: _served(eng, lambda s: (s.spans, s.logs)))
         assert spans2 is spans and logs2 is logs
         assert reused == 0
         _engine_load(spark, eng, [_rec(52, start=BASE + 20, end=BASE + 30)], [])
@@ -986,7 +974,7 @@ def test_engine_reuses_frames_until_store_changes(spark, scratch, persistent_ids
         eng.stop()
 
 
-def test_engine_generation_routes_start_one_job(spark, scratch):
+def test_engine_generation_routes_start_one_job(spark, scratch, jobs_in):
     """On an unchanged one-partition store every route filters or
     aggregates checkpointed one-partition frames: field_stats and
     operations plan no exchange and start at most 1 Spark job each,
@@ -1007,7 +995,7 @@ def test_engine_generation_routes_start_one_job(spark, scratch):
             "get_trace": lambda s: s.get_trace(61),
             "list_traces": lambda s: s.list_traces({}),
         }
-        got = {name: _jobs_in(spark, lambda r=r: _served(eng, r)) for name, r in routes.items()}
+        got = {name: jobs_in(lambda r=r: _served(eng, r)) for name, r in routes.items()}
         bound = {"field_stats": 1, "operations": 1, "list_logs": 1, "get_trace": 1,
                  "list_traces": 2}
         assert {k: jobs for k, (_, jobs) in got.items() if jobs > bound[k]} == {}
@@ -1020,7 +1008,8 @@ def test_engine_generation_routes_start_one_job(spark, scratch):
         eng.stop()
 
 
-def test_engine_trace_routes_filter_one_trace_frame(spark, scratch, persistent_ids):
+def test_engine_trace_routes_filter_one_trace_frame(spark, scratch, persistent_ids,
+                                                    jobs_in):
     """On an unchanged persistent store the trace routes filter the
     generation's checkpointed trace frame: get_trace starts at most 1
     Spark job, list_traces at most 2. A span and log drained later show
@@ -1038,10 +1027,10 @@ def test_engine_trace_routes_filter_one_trace_frame(spark, scratch, persistent_i
                      [_log(62, "first", BASE + 6)])
         assert _span_logs(_served(eng, lambda s: s.get_trace(61))) == {61: [], 62: ["first"]}
         assert len(persistent_ids() - before) == 3
-        env, got_jobs = _jobs_in(spark, lambda: _served(eng, lambda s: s.get_trace(61)))
+        env, got_jobs = jobs_in(lambda: _served(eng, lambda s: s.get_trace(61)))
         assert got_jobs <= 1
         assert _span_logs(env) == {61: [], 62: ["first"]}
-        env, list_jobs = _jobs_in(spark, lambda: _served(eng, lambda s: s.list_traces({})))
+        env, list_jobs = jobs_in(lambda: _served(eng, lambda s: s.list_traces({})))
         assert list_jobs <= 2
         assert [t["traceID"] for t in env["data"]] == ["61"]
 
@@ -1060,7 +1049,7 @@ def test_engine_trace_routes_filter_one_trace_frame(spark, scratch, persistent_i
         eng.compact(retain_latest=1)
         want = {61: [], 62: ["first"], 63: ["later"]}
         assert _span_logs(_served(eng, lambda s: s.get_trace(61))) == want
-        env, got_jobs = _jobs_in(spark, lambda: _served(eng, lambda s: s.get_trace(61)))
+        env, got_jobs = jobs_in(lambda: _served(eng, lambda s: s.get_trace(61)))
         assert got_jobs <= 1
         assert _span_logs(env) == want
         assert len(persistent_ids() - before) == 3
@@ -1209,6 +1198,38 @@ def test_engine_trace_request_lists_each_table_once(spark, scratch, monkeypatch)
         monkeypatch.setattr(merge, "completed_versions", counted)
         get("/api/traces/61")
         assert sorted(calls) == sorted(eng.store.table_path(t) for t in ("span", "log"))
+    finally:
+        eng.stop()
+
+
+def test_engine_generation_reads_the_versions_its_key_lists(spark, scratch, monkeypatch):
+    """A generation build lists each table once (2 ``completed_versions``
+    calls) and its frames read exactly the listed versions: a span
+    version published right after the key listing is not in that
+    generation's frame, and the next request's generation shows it."""
+    from duo_spark.engine import DuoEngine
+    from duo_spark.streaming import merge
+
+    eng = DuoEngine(spark, os.path.join(scratch, "data"), trigger_seconds=1)
+    try:
+        _engine_load(spark, eng, [_rec(71, start=BASE, end=BASE + 10)], [_log(71, "m")])
+        calls = []
+        listed = merge.completed_versions
+
+        def publish_after_listing(*args, **kwargs):
+            """The real listing; the first span listing is followed by a
+            new span version."""
+            v = listed(*args, **kwargs)
+            calls.append(args[1])
+            if args[1] == eng.store.table_path("span") and len(calls) == 1:
+                _engine_load(spark, eng, [_rec(72, start=BASE + 20, end=BASE + 30)], [])
+            return v
+
+        monkeypatch.setattr(merge, "completed_versions", publish_after_listing)
+        built = _served(eng, lambda s: {r.id for r in s.spans.collect()})
+        assert sorted(calls) == sorted(eng.store.table_path(t) for t in ("span", "log"))
+        assert built == {71}
+        assert _served(eng, lambda s: {r.id for r in s.spans.collect()}) == {71, 72}
     finally:
         eng.stop()
 
