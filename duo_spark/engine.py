@@ -62,20 +62,19 @@ from pyspark.sql import DataFrame, SparkSession
 from duo_spark.ingest import ProcessRegistry
 from duo_spark.operators.materialize import checkpoint, estimated_bytes, release
 from duo_spark.operators.traces import correlate_span_logs
-from duo_spark.schemas import LOG_CORE_SCHEMA
-from duo_spark.sources.store import PARTITION_COLS, PartitionedStore
+from duo_spark.schemas import COMPLETED_SPAN_SCHEMA, LOG_CORE_SCHEMA
+from duo_spark.sources.store import PartitionedStore
 from duo_spark.streaming import merge
 from duo_spark.streaming.ingest_server import IngestServer
 from duo_spark.streaming.pipeline import (
     _scratch,
-    completed_span_schema,
     start_log_pipeline,
     start_span_pipeline,
 )
 from duo_spark.web.api import QueryService
 
 #: what each table reads as before its first rows land
-_EMPTY_SCHEMAS = {"span": completed_span_schema(), "log": LOG_CORE_SCHEMA}
+_EMPTY_SCHEMAS = {"span": COMPLETED_SPAN_SCHEMA, "log": LOG_CORE_SCHEMA}
 
 
 def _pinned(df: DataFrame) -> DataFrame:
@@ -222,15 +221,12 @@ class DuoEngine:
     ) -> DataFrame:
         """A persistent table's rows: ``versions`` (a store key) if
         given, else the versions listed now. Spans dedup
-        first-completion-wins; logs keep their own columns, the K1
-        partition columns their versions carry for compaction dropped."""
-        path = self.store.table_path(table)
+        first-completion-wins; logs union by name."""
         try:
-            if table == "span":
-                return merge.read_completed(self.spark, path, versions=versions)
             return merge.read_completed(
-                self.spark, path, dedup=False, versions=versions
-            ).drop(*PARTITION_COLS)
+                self.spark, self.store.table_path(table),
+                dedup=table == "span", versions=versions,
+            )
         except FileNotFoundError:
             return self.spark.createDataFrame([], _EMPTY_SCHEMAS[table])
 

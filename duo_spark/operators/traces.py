@@ -144,8 +144,7 @@ def correlate_span_logs(
                  if c in logs.columns]
     extra = sorted(
         c for c in logs.columns
-        if c not in ("process_id", "time", "trace_id", "span_id", "date",
-                     "hour", "minute", *core_tail)
+        if c not in ("process_id", "time", "trace_id", "span_id", *core_tail)
     )
     per_span = logs.filter(F.col("span_id").isNotNull()).groupBy("span_id").agg(
         F.count(F.lit(1)).alias("log_count"),

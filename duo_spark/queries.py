@@ -623,8 +623,8 @@ FROM recs GROUP BY id HAVING max("end") IS NOT NULL
 def q_streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 end-to-end: the record set pushed through the REAL persistent
     span pipeline — file source -> foreachBatch completion -> versioned
-    completed-span delta log carrying the K1 date/hour/minute columns
-    (availableNow drain) -> read back through
+    completed-span delta log (flat versions of the completed-span
+    columns; availableNow drain) -> read back through
     ``merge.read_completed``, the engine's span read path
     (duo/src/grpc/server.rs:89-120 + partition/writer.rs). Thinned to
     every-40th order."""

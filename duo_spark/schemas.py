@@ -49,6 +49,22 @@ SPAN_SCHEMA = T.StructType(
     ]
 )
 
+#: Completed span table — what the span pipeline publishes and the
+#: engine reads (``streaming/merge.py``): the partial-merge fields of
+#: SPAN_SCHEMA with the tags resolved to one JSON object string
+COMPLETED_SPAN_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType(), False),
+        T.StructField("trace_id", T.LongType(), True),
+        T.StructField("parent_id", T.LongType(), True),
+        T.StructField("name", T.StringType(), True),
+        T.StructField("process_id", T.StringType(), True),
+        T.StructField("start", T.LongType(), True),
+        T.StructField("end", T.LongType(), True),
+        T.StructField("tags", T.StringType(), True),
+    ]
+)
+
 #: Log table fixed core — duo/src/schema.rs:30-42. Extra user fields are
 #: appended as real columns per batch (schema evolution).
 LOG_CORE_SCHEMA = T.StructType(

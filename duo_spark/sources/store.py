@@ -12,7 +12,11 @@ Spark mapping:
 - S2/S3 scan -> spark.read.parquet(table_root); filters on the
   partition columns prune directories in the Catalyst optimizer (no
   manual prefix math), and predicate pushdown + row-group stats +
-  bloom filters prune within files (S4).
+  bloom filters prune within files (S4). The data schema is inferred
+  once, then the read is planned with the partition columns declared
+  strings: "hour=00" stays "00" (not int 0) without a session-wide
+  conf switch, so a compaction that demotes a partition column to a
+  data column changes no value.
 - U1 hot∪cold -> unionByName(allowMissingColumns=True): the log schema
   drifts over time (new user fields), so positional union would be
   wrong; ByName fills missing columns with null, matching the
@@ -28,21 +32,28 @@ query results are identical (same columns, same values) and pruning on
 the demoted column degrades gracefully to row-group min/max stats.
 
 All filesystem metadata operations (exists / side-file JSON / the
-compaction swap) go through the Hadoop FileSystem API resolved from
-the path's own scheme, so the store works unchanged against any
-configured object store (s3a://, gs://, hdfs://...), matching the
-reference's object-store abstraction (duo/src/config.rs:93-132, K4).
+compaction swap, and the versioned tables' listings and publishes in
+``streaming/``) go through the Hadoop FileSystem API resolved from
+the path's own scheme (:func:`hadoop_fs`), so the store works
+unchanged against any configured object store (s3a://, gs://,
+hdfs://...), matching the reference's object-store abstraction
+(duo/src/config.rs:93-132, K4).
+
+The engine's own span and log tables are versioned delta logs
+(``streaming/merge.py``) that hold only their table's columns; K1
+appears there only as the compacted snapshot's directories.
 """
 
 from __future__ import annotations
 
 import json
 import posixpath
-import threading
 from dataclasses import dataclass
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from duo_spark.functions.time import timestamp_from_us
 
@@ -71,32 +82,14 @@ def bloom_options(writer, column: str = "trace_id"):
     )
 
 
-#: session conf deciding whether partition values are type-inferred
-#: ("hour=00" read as int 0) or kept as the strings they were written as
-_INFERENCE_CONF = "spark.sql.sources.partitionColumnTypeInference.enabled"
-_inference_lock = threading.Lock()
-
-
-def read_uninferred(spark: SparkSession, *paths: str, **options: str) -> DataFrame:
-    """``spark.read.options(**options).parquet(*paths)`` with
-    partition-value type inference OFF: partition columns come back as
-    the exact strings they were written as ("hour=00" stays "00").
-
-    The switch is a session-wide conf, so get → set → read → restore
-    runs under one module lock: concurrent readers (HTTP handler
-    threads, the operators' thread pools) would otherwise interleave
-    the steps — a read then runs with inference on, and the session
-    can be left with it off for good. Schema and partition discovery
-    happen eagerly inside ``parquet()``, so the conf can be restored
-    right after."""
-    with _inference_lock:
-        conf = spark.conf
-        old = conf.get(_INFERENCE_CONF, "true")
-        conf.set(_INFERENCE_CONF, "false")
-        try:
-            return spark.read.options(**options).parquet(*paths)
-        finally:
-            conf.set(_INFERENCE_CONF, old)
+def hadoop_fs(spark: SparkSession, path: str):
+    """Hadoop FileSystem for ``path``'s scheme (K4: local, s3a, gs,
+    hdfs... — whatever the Hadoop conf knows), plus the Path. The class
+    is built by name: resolving ``spark._jvm.org.apache...`` costs a
+    py4j round trip per package hop (~2 ms), paid on every store-key
+    listing of every HTTP request."""
+    jpath = JavaClass("org.apache.hadoop.fs.Path", spark._jvm._gateway_client)(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def with_partition_cols(df: DataFrame, time_col: str, granularity: str = "minute") -> DataFrame:
@@ -120,14 +113,6 @@ class PartitionedStore:
 
     def table_path(self, table: str) -> str:
         return posixpath.join(self.root, table)
-
-    def _fs(self, path: str):
-        """Hadoop FileSystem for ``path``'s scheme (K4: local, s3a,
-        gs, hdfs... — whatever the Hadoop conf knows), plus the Path."""
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, hpath
 
     def write(self, df: DataFrame, table: str, time_col: str, mode: str = "append") -> None:
         """K1 — partitioned parquet sink with trace_id bloom filter.
@@ -160,18 +145,26 @@ class PartitionedStore:
         log schemas unify (reference Schema::try_merge,
         duo/src/schema.rs:78-89).
 
-        Partition-value type inference is disabled for the read: the
-        partition columns come back as the exact strings they were
+        The partition columns come back as the exact strings they were
         written as ("hour=00" stays "00", not int 0), so results are
         invariant under compaction demoting them to data columns.
         """
-        return self._read_uninferred(self.table_path(table))
+        return self._read(self.table_path(table))
 
-    def _read_uninferred(self, *paths: str, base_path: str | None = None) -> DataFrame:
-        options = {"mergeSchema": "true"}
+    def _read(self, *paths: str, base_path: str | None = None) -> DataFrame:
+        """mergeSchema read of ``paths``: the data schema is inferred
+        once (one footer job), then the read is planned again with that
+        schema and the partition columns declared strings — no session
+        conf is touched, so concurrent readers need no lock."""
+        reader = self.spark.read.option("mergeSchema", "true")
         if base_path is not None:
-            options["basePath"] = base_path
-        return read_uninferred(self.spark, *paths, **options)
+            reader = reader.option("basePath", base_path)
+        inferred = reader.parquet(*paths).schema
+        declared = T.StructType([
+            T.StructField(f.name, T.StringType()) if f.name in PARTITION_COLS else f
+            for f in inferred.fields
+        ])
+        return reader.schema(declared).parquet(*paths)
 
     def read_range(
         self, table: str, start_us: int, end_us: int, time_col: str = "time"
@@ -210,19 +203,19 @@ class PartitionedStore:
                 seen.add(cut)
                 prefixes.append(cut)
         root = self.table_path(table)
-        fs, _ = self._fs(root)
+        fs, _ = hadoop_fs(self.spark, root)
         paths = []
         for pre in prefixes:
             full = posixpath.join(root, pre)
-            if fs.exists(self.spark._jvm.org.apache.hadoop.fs.Path(full)):
+            if fs.exists(hadoop_fs(self.spark, full)[1]):
                 paths.append(full)
         if not paths:
             return self.read(table).where(F.lit(False))
         gate = (F.col(time_col) >= F.lit(start_us)) & (F.col(time_col) <= F.lit(end_us))
-        return self._read_uninferred(*paths, base_path=root).filter(gate)
+        return self._read(*paths, base_path=root).filter(gate)
 
     def exists(self, table: str) -> bool:
-        fs, p = self._fs(self.table_path(table))
+        fs, p = hadoop_fs(self.spark, self.table_path(table))
         if not fs.exists(p):
             return False
         for status in fs.listStatus(p):
@@ -234,7 +227,7 @@ class PartitionedStore:
     # -- K3: tiny JSON side files (process registry, merged log schema) --
 
     def write_json(self, rel_path: str, payload: object) -> None:
-        fs, p = self._fs(posixpath.join(self.root, rel_path))
+        fs, p = hadoop_fs(self.spark, posixpath.join(self.root, rel_path))
         stream = fs.create(p, True)  # creates parent dirs, overwrites
         try:
             stream.write(bytearray(json.dumps(payload).encode("utf-8")))
@@ -242,7 +235,7 @@ class PartitionedStore:
             stream.close()
 
     def read_json(self, rel_path: str) -> object | None:
-        fs, p = self._fs(posixpath.join(self.root, rel_path))
+        fs, p = hadoop_fs(self.spark, posixpath.join(self.root, rel_path))
         if not fs.exists(p):
             return None
         stream = fs.open(p)
@@ -272,10 +265,9 @@ class PartitionedStore:
         from datetime import datetime, timedelta, timezone
 
         root = self.table_path(table)
-        fs, rootp = self._fs(root)
+        fs, rootp = hadoop_fs(self.spark, root)
         if not fs.exists(rootp):
             return []
-        jPath = self.spark._jvm.org.apache.hadoop.fs.Path
         deleted: list[str] = []
 
         def span_end_us(date_s: str, hour_s: str | None, minute_s: str | None) -> int:
@@ -371,7 +363,7 @@ class PartitionedStore:
         backup = self.table_path(f"{table}._precompact")
         # partition values must survive as the strings they were
         # written as ("00" must not become int 0 and re-write as "0")
-        df = self._read_uninferred(path)
+        df = self._read(path)
         rep = df.repartition(*[F.col(c) for c in cols])
         tcol = next((c for c in ("time", "start") if c in df.columns), None)
         if zorder_by:
@@ -401,9 +393,9 @@ class PartitionedStore:
         renames (backup-swap; rolls back if the second rename fails)."""
         path = self.table_path(table)
         backup = self.table_path(f"{table}._precompact")
-        fs, orig_p = self._fs(path)
-        _, scratch_p = self._fs(scratch)
-        _, backup_p = self._fs(backup)
+        fs, orig_p = hadoop_fs(self.spark, path)
+        _, scratch_p = hadoop_fs(self.spark, scratch)
+        _, backup_p = hadoop_fs(self.spark, backup)
         fs.delete(backup_p, True)
         if not fs.rename(orig_p, backup_p):
             raise IOError(f"swap: could not move {path} aside")

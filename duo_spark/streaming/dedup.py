@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 
 from duo_spark.operators.dedup import _hashed_shingles, _index_frames, normalize_text
 from duo_spark.operators.materialize import scope
+from duo_spark.sources.store import hadoop_fs
 
 
 def streaming_dedup_exact(
@@ -102,10 +103,8 @@ def streaming_incremental_near_dup(
             )
             # clean first-batch probe via the Hadoop FS (any scheme) — a
             # read-then-catch would log a WARN stack trace per batch
-            jpath = spark._jvm.org.apache.hadoop.fs.Path
-            bands_path = jpath(f"{index_dir}/bands")
-            sets_path = jpath(f"{index_dir}/sets")
-            fs = bands_path.getFileSystem(spark._jsc.hadoopConfiguration())
+            fs, bands_path = hadoop_fs(spark, f"{index_dir}/bands")
+            sets_path = hadoop_fs(spark, f"{index_dir}/sets")[1]
 
             def with_batch(schema):  # fresh copy — StructType.add mutates
                 return T.StructType(

@@ -39,9 +39,13 @@ State layout under ``out_dir``:
                           into its true predecessor)
   completed/v=<batch_id>  the spans COMPLETED by batch b (a delta log;
                           replays overwrite their own version, so the
-                          union over versions is exactly-once)
+                          union over versions is exactly-once), one
+                          flat write of the table's own columns
   compacted/v=<batch_id>  snapshot of every delta up to b
-                          (:func:`compact_completed`)
+                          (:func:`compact_completed`), partitioned into
+                          date=/hour=/minute= directories derived from
+                          the table's time column — the only place K1
+                          appears; reads drop it
 
 The log table uses the same ``completed``/``compacted`` layout, read
 and folded by the same functions: each log batch is one delta
@@ -62,7 +66,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duo_spark.functions.codec import tags_variant
-from duo_spark.sources.store import read_uninferred
+from duo_spark.schemas import COMPLETED_SPAN_SCHEMA
+from duo_spark.sources.store import (
+    PARTITION_COLS,
+    bloom_options,
+    hadoop_fs,
+    with_partition_cols,
+)
 from duo_spark.streaming.rollup import (
     _latest_id,
     _prune_versions,
@@ -113,7 +123,6 @@ def _resolve_tags_col() -> F.Column:
 def fast_merge_processor(
     out_dir: str,
     open_max_age_us: int | None = None,
-    partition_completed: bool = False,
     on_batch=None,
 ):
     """Build the foreachBatch processor behind
@@ -121,18 +130,16 @@ def fast_merge_processor(
     ``pipeline.start_span_pipeline`` can run the SAME merge under any
     trigger and sink arrangement.
 
-    ``partition_completed=True`` adds the K1 date/hour/minute
-    partition COLUMNS to each completed delta version — as DATA
-    columns, one flat write per batch. Round-8 lesson (probe 19): a
-    per-batch ``partitionBy`` write fans every micro-batch across
-    every calendar directory its spans touch (the probe's date-spread
-    workload hit ~2,500 dirs/batch → 48 s batches, 13× slower than
-    the merge itself); the delta log therefore stays flat and FAST,
-    and :func:`compact_completed` pays the directory fan-out ONCE,
-    folding deltas into a REAL partitioned + bloom-filtered snapshot
-    that pruning-sensitive readers scan. Recent deltas are small by
-    construction (at most a few ticks), so scanning them unpruned
-    costs nothing.
+    Each completed delta version is one flat write of the
+    completed-span columns. Round-8 lesson (probe 19): a per-batch
+    ``partitionBy`` write fans every micro-batch across every calendar
+    directory its spans touch (the probe's date-spread workload hit
+    ~2,500 dirs/batch → 48 s batches, 13× slower than the merge
+    itself); the delta log therefore stays flat and FAST, and
+    :func:`compact_completed` pays the directory fan-out ONCE, folding
+    deltas into a REAL partitioned + bloom-filtered snapshot. Recent
+    deltas are small by construction (at most a few ticks), so
+    scanning them unpruned costs nothing.
 
     ``on_batch(spark, batch_id)``, if given, runs after each batch's
     state is committed — the memory-mode hook that refreshes the
@@ -193,10 +200,6 @@ def fast_merge_processor(
                     F.col("start") >= wm - open_max_age_us
                 )
         done = completed.withColumn("tags", _resolve_tags_col()).drop("_pairs")
-        if partition_completed:
-            from duo_spark.sources.store import with_partition_cols
-
-            done = with_partition_cols(done, "start", "minute")
         _publish_version(spark, done, f"{out_dir}/completed", batch_id)
         still_open.write.mode("overwrite").parquet(
             f"{out_dir}/open/.tmp-{batch_id}"
@@ -246,21 +249,14 @@ def streaming_span_merge_fast(
     )
 
 
-def log_append_processor(
-    out_dir: str, partition_completed: bool = False, on_batch=None
-):
+def log_append_processor(out_dir: str, on_batch=None):
     """The foreachBatch processor behind ``pipeline.start_log_pipeline``:
     logs need no completion merge, so each batch is published as-is as
     the delta ``completed/v=<batch_id>`` (a replay overwrites its own
-    version). Options as :func:`fast_merge_processor`'s; the K1 columns
-    derive from the log ``time``."""
+    version). ``on_batch`` as :func:`fast_merge_processor`'s."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        if partition_completed:
-            from duo_spark.sources.store import with_partition_cols
-
-            batch = with_partition_cols(batch, "time", "minute")
         _publish_version(spark, batch, f"{out_dir}/completed", batch_id)
         if on_batch is not None:
             on_batch(spark, batch_id)
@@ -293,14 +289,12 @@ def _publish_dir(spark, tmp: str, dest: str) -> None:
     FileSystem.rename moves src INTO an existing dest dir rather than
     over it, so rename-aside (not rename-overwrite) is the only safe
     primitive here."""
-    from duo_spark.streaming.rollup import _fs
-
-    fs, tmp_p = _fs(spark, tmp)
-    dest_p = _fs(spark, dest)[1]
+    fs, tmp_p = hadoop_fs(spark, tmp)
+    dest_p = hadoop_fs(spark, dest)[1]
     aside_p = None
     if fs.exists(dest_p):
         head, tail = dest.rsplit("/", 1)
-        aside_p = _fs(spark, f"{head}/.old-{tail}")[1]
+        aside_p = hadoop_fs(spark, f"{head}/.old-{tail}")[1]
         if fs.exists(aside_p):
             fs.delete(aside_p, True)
         if not fs.rename(dest_p, aside_p):
@@ -326,9 +320,7 @@ def _write_wm(spark, out_dir: str, batch_id: int, wm: int, *,
     removes it with its version). ``at`` overrides the target dir so
     the sidecar can land in the staging dir BEFORE the atomic rename
     publishes the version."""
-    from duo_spark.streaming.rollup import _fs
-
-    fs, p = _fs(spark, f"{at or f'{out_dir}/open/v={batch_id}'}/_wm.json")
+    fs, p = hadoop_fs(spark, f"{at or f'{out_dir}/open/v={batch_id}'}/_wm.json")
     stream = fs.create(p, True)
     try:
         stream.write(bytearray(str(int(wm)).encode("utf-8")))
@@ -337,11 +329,9 @@ def _write_wm(spark, out_dir: str, batch_id: int, wm: int, *,
 
 
 def _read_wm(spark, out_dir: str, vid: int | None) -> int | None:
-    from duo_spark.streaming.rollup import _fs
-
     if vid is None:
         return None
-    fs, p = _fs(spark, f"{out_dir}/open/v={vid}/_wm.json")
+    fs, p = hadoop_fs(spark, f"{out_dir}/open/v={vid}/_wm.json")
     if not fs.exists(p):
         return None
     stream = fs.open(p)
@@ -409,6 +399,21 @@ def completed_versions(spark, out_dir: str) -> CompletedVersions:
     return CompletedVersions(snapshot, deltas, head + tuple(listed[v] for v in deltas))
 
 
+def _read_versions(
+    spark, out_dir: str, snapshot: int | None, deltas, dedup: bool
+) -> list[tuple[DataFrame, int]]:
+    """The snapshot (as version -1, if any) and each delta, as
+    (frame, version) pairs. Span versions (``dedup``) are read with
+    ``COMPLETED_SPAN_SCHEMA``, so no footer-inference job starts; log
+    versions infer theirs, which varies by version as user fields drift
+    in. K1 is dropped from every version: the snapshot's directories,
+    and the data columns of deltas written by earlier pipelines."""
+    reader = spark.read.schema(COMPLETED_SPAN_SCHEMA) if dedup else spark.read
+    paths = [(f"{out_dir}/compacted/v={snapshot}", -1)] if snapshot is not None else []
+    paths += [(f"{out_dir}/completed/v={v}", v) for v in deltas]
+    return [(reader.parquet(p).drop(*PARTITION_COLS), v) for p, v in paths]
+
+
 def read_completed(
     spark, out_dir: str, *, dedup: bool = True, versions: CompletedVersions | None = None
 ) -> DataFrame:
@@ -423,22 +428,16 @@ def read_completed(
     have no id to dedup: the versions are unioned by name
     (:func:`_combine`).
 
-    Versions read with partition-value type inference off: the K1
-    columns inside a partitioned version come back as the same strings
-    the batch store reads, so partitioned and flat versions union.
+    The frame holds only the table's columns (:func:`_read_versions`):
+    span versions are read with the declared ``COMPLETED_SPAN_SCHEMA``,
+    so building it starts no Spark job; log versions infer theirs.
 
     ``versions`` reads exactly those listed versions (a store key from
     :func:`completed_versions`) instead of listing again, so the frame
     matches its key even if a version is published meanwhile."""
     if versions is None:
         versions = completed_versions(spark, out_dir)
-    parts: list[tuple[DataFrame, int]] = []
-    if versions.snapshot is not None:
-        parts.append(
-            (read_uninferred(spark, f"{out_dir}/compacted/v={versions.snapshot}"), -1)
-        )
-    for v in versions.deltas:
-        parts.append((read_uninferred(spark, f"{out_dir}/completed/v={v}"), v))
+    parts = _read_versions(spark, out_dir, versions.snapshot, versions.deltas, dedup)
     if not parts:
         raise FileNotFoundError(f"no completed-span versions under {out_dir}")
     if len(parts) == 1:
@@ -456,6 +455,10 @@ def compact_completed(
     small-files fix for long-running ingest (a 60 s tick writes ~1,440
     tiny delta dirs/day; scans degrade with file count, not data).
     ``dedup`` is :func:`read_completed`'s: False folds the log table.
+    The snapshot is always written partitioned into zero-padded
+    ``date=/hour=/minute=`` directories, derived from the table's time
+    column (``start`` for spans, ``time`` for logs); the versions it
+    folds hold no K1 columns of their own.
 
     Keeps the newest ``retain_latest`` deltas out of the snapshot:
     only batches at/after the last committed checkpoint can ever be
@@ -482,41 +485,25 @@ def compact_completed(
 
     Returns the new snapshot's version id, or None if there was
     nothing to compact."""
-    from duo_spark.streaming.rollup import _fs
-
     cvid, deltas, _ = completed_versions(spark, out_dir)
     fold = deltas[:-retain_latest] if retain_latest > 0 else deltas
     upto = fold[-1] if fold else None
-    fs = _fs(spark, out_dir)[0]
+    fs = hadoop_fs(spark, out_dir)[0]
     if fold:
-        parts: list[tuple[DataFrame, int]] = []
-        if cvid is not None:
-            parts.append(
-                (read_uninferred(spark, f"{out_dir}/compacted/v={cvid}"), -1)
-            )
-        for v in fold:
-            parts.append((read_uninferred(spark, f"{out_dir}/completed/v={v}"), v))
-        merged = _combine(parts, dedup)
+        merged = _combine(_read_versions(spark, out_dir, cvid, fold, dedup), dedup)
+        # the snapshot is where the directory fan-out is PAID (once,
+        # not per micro-batch; round-8 probe 19): K1 derived from the
+        # table's time column, a real partitioned + bloom-sized layout,
+        # repartitioned so each dir gets one file per compaction
+        merged = with_partition_cols(merged, "start" if dedup else "time")
         tmp = f"{out_dir}/compacted/.tmp-{upto}"
-        if "date" in merged.columns:
-            # deltas from the persistent pipelines carry the K1
-            # partition columns as data — the snapshot is where the
-            # directory fan-out is PAID (once, not per micro-batch;
-            # round-8 probe 19): a real partitioned + bloom-sized layout
-            # that time-windowed readers prune, repartitioned so each
-            # dir gets one file per compaction
-            from duo_spark.sources.store import bloom_options
-
-            part_cols = [c for c in ("date", "hour", "minute") if c in merged.columns]
-            bloom_options(
-                merged.repartition(*[F.col(c) for c in part_cols])
-                .write.mode("overwrite")
-                .partitionBy(*part_cols)
-            ).parquet(tmp)
-        else:
-            merged.write.mode("overwrite").parquet(tmp)
-        tmp_path = _fs(spark, tmp)[1]
-        if not fs.rename(tmp_path, _fs(spark, f"{out_dir}/compacted/v={upto}")[1]):
+        bloom_options(
+            merged.repartition(*[F.col(c) for c in PARTITION_COLS])
+            .write.mode("overwrite")
+            .partitionBy(*PARTITION_COLS)
+        ).parquet(tmp)
+        tmp_path = hadoop_fs(spark, tmp)[1]
+        if not fs.rename(tmp_path, hadoop_fs(spark, f"{out_dir}/compacted/v={upto}")[1]):
             # Hadoop rename signals failure by RETURNING FALSE (dest
             # already exists from a racing compaction, or an fs error)
             # — proceeding would delete state the new snapshot never
@@ -535,7 +522,7 @@ def compact_completed(
         _prune_versions(spark, f"{out_dir}/compacted", keep=(cvid, upto))
         for v in _version_ids(spark, f"{out_dir}/completed"):
             if v <= cvid:
-                fs.delete(_fs(spark, f"{out_dir}/completed/v={v}")[1], True)
+                fs.delete(hadoop_fs(spark, f"{out_dir}/completed/v={v}")[1], True)
     return upto
 
 

@@ -30,7 +30,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from duo_spark.schemas import LOG_CORE_SCHEMA, SPAN_SCHEMA
+from duo_spark.schemas import COMPLETED_SPAN_SCHEMA, LOG_CORE_SCHEMA, SPAN_SCHEMA
 
 #: scratch root for checkpoints / replay staging (kept inside the repo
 #: tree; gitignored)
@@ -142,7 +142,7 @@ def _start_versioned(
         processor = make_processor(root, on_batch=_refresh)
     else:
         assert out_dir is not None, "out_dir required unless memory_mode"
-        processor = make_processor(out_dir, partition_completed=True)
+        processor = make_processor(out_dir)
     writer = stream.writeStream.foreachBatch(processor).option(
         "checkpointLocation", checkpoint_dir or _scratch("ckpt", uuid.uuid4().hex)
     )
@@ -169,7 +169,7 @@ def start_span_pipeline(
     Span completion is the JVM-side foreachBatch partial-merge
     (streaming/merge.py): completed spans land as an exactly-once
     versioned delta log under ``out_dir`` (``completed/v=N``, each
-    version carrying the K1 date/hour/minute columns as data); read
+    version holding only the completed-span columns); read
     with ``merge.read_completed``, fold small files with
     ``merge.compact_completed``. Open spans are held until their close
     arrives, as in the reference (duo/src/aggregator.rs:32-39).
@@ -191,27 +191,8 @@ def start_span_pipeline(
 
     return _start_versioned(
         spark, span_record_stream(spark, source_dir), fast_merge_processor,
-        read_completed, completed_span_schema(), out_dir, checkpoint_dir,
+        read_completed, COMPLETED_SPAN_SCHEMA, out_dir, checkpoint_dir,
         trigger_seconds, memory_mode, memory_table, available_now,
-    )
-
-
-def completed_span_schema():
-    """Schema of completed spans: the partial-merge fields
-    (SPAN_SCHEMA scalars) + resolved ``tags`` json string."""
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),
-            T.StructField("trace_id", T.LongType(), True),
-            T.StructField("parent_id", T.LongType(), True),
-            T.StructField("name", T.StringType(), True),
-            T.StructField("process_id", T.StringType(), True),
-            T.StructField("start", T.LongType(), True),
-            T.StructField("end", T.LongType(), True),
-            T.StructField("tags", T.StringType(), True),
-        ]
     )
 
 

@@ -22,9 +22,10 @@ holds two versions on disk.
 
 from __future__ import annotations
 
-from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from duo_spark.sources.store import hadoop_fs
 
 #: supported decomposable aggregates and their merge functions.
 #: sum must preserve NULL-ness: an all-NULL input column aggregates to
@@ -107,17 +108,9 @@ def streaming_rollup(
     )
 
 
-def _fs(spark, path: str):
-    # the class by name: resolving ``spark._jvm.org.apache...`` costs a
-    # py4j round trip per package hop (~2 ms), paid on every store-key
-    # listing of every HTTP request
-    jpath = JavaClass("org.apache.hadoop.fs.Path", spark._jvm._gateway_client)(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
 def _version_stamps(spark, out_dir: str) -> dict[int, int]:
     """Version id -> modification time (ms) of its ``v=<id>`` dir."""
-    fs, root = _fs(spark, out_dir)
+    fs, root = hadoop_fs(spark, out_dir)
     if not fs.exists(root):
         return {}
     stamps = {}
@@ -142,10 +135,10 @@ def _latest_id(spark, out_dir: str, below: int | None = None) -> int | None:
 
 
 def _prune_versions(spark, out_dir: str, keep: tuple[int, ...]) -> None:
-    fs, _root = _fs(spark, out_dir)
+    fs, _root = hadoop_fs(spark, out_dir)
     for vid in _version_ids(spark, out_dir):
         if vid not in keep:
-            fs.delete(_fs(spark, f"{out_dir}/v={vid}")[1], True)
+            fs.delete(hadoop_fs(spark, f"{out_dir}/v={vid}")[1], True)
 
 
 def read_rollup(spark, out_dir: str) -> DataFrame:

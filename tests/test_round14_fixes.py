@@ -39,8 +39,9 @@ def test_publish_dir_replay_keeps_dest_and_cleans_aside(spark, tmp_path):
     ``.old-*`` residue, and (c) keep the version listable throughout
     — verified here end-state; the absence window is two metadata
     renames, measured in probe 41's soak."""
+    from duo_spark.sources.store import hadoop_fs
     from duo_spark.streaming.merge import _publish_dir
-    from duo_spark.streaming.rollup import _fs, _version_ids
+    from duo_spark.streaming.rollup import _version_ids
 
     root = str(tmp_path / "pub")
     spark.createDataFrame([(1, "first")], "id long, v string").write.parquet(
@@ -54,7 +55,7 @@ def test_publish_dir_replay_keeps_dest_and_cleans_aside(spark, tmp_path):
     )
     _publish_dir(spark, f"{root}/.tmp-b", f"{root}/v=7")
     assert spark.read.parquet(f"{root}/v=7").collect()[0].v == "second"
-    fs, aside = _fs(spark, f"{root}/.old-v=7")
+    fs, aside = hadoop_fs(spark, f"{root}/.old-v=7")
     assert not fs.exists(aside), ".old aside must be deleted after publish"
     assert _version_ids(spark, root) == [7]
 

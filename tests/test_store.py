@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
+import re
 import uuid
 
 import pytest
@@ -346,33 +348,34 @@ def test_compaction_zorder_same_results(spark, store):
         store.compact("span", to_granularity="date", zorder_by="nope")
 
 
-def test_uninferred_reads_race_free_under_concurrency(spark, store, tmp_path):
-    """Partition-value type inference is a session-wide conf that
-    uninferred reads switch off and restore. Eight threads reading a
-    partitioned table at once (through both users of the switch: the
-    store's table read and the completed-span version read) must each
-    get string date/hour/minute, and the conf must end where it began."""
+def test_store_reads_keep_string_partitions_concurrently(spark, store, monkeypatch):
+    """Partition values read back as the strings they were written as
+    ("hour=00" stays "00") without switching any session conf. Eight
+    threads reading a partitioned table at once must each get string
+    date/hour/minute, and no read may write the session conf (it is
+    session-wide: a concurrent reader would see the switch)."""
     import sys
     import threading
 
-    from duo_spark.streaming.merge import fast_merge_processor, read_completed
+    from pyspark.sql.conf import RuntimeConfig
 
-    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    orig = spark.conf.get(key, "true")
-    spans = _spans(spark, n=4)
-    store.write(spans, "span", time_col="start")
-    merged = str(tmp_path / "merged")
-    fast_merge_processor(merged, partition_completed=True)(spans, 0)
-    readers = [lambda: store.read("span"), lambda: read_completed(spark, merged)]
+    # five spans across an hour boundary: minutes 59, 00, 01, 02, 03
+    store.write(_spans(spark).filter("id >= 46"), "span", time_col="start")
+    conf_sets: list[tuple] = []
+    real_set = RuntimeConfig.set
+    monkeypatch.setattr(
+        RuntimeConfig, "set",
+        lambda self, *a: (conf_sets.append(a), real_set(self, *a))[1],
+    )
     barrier = threading.Barrier(8)
     types: list[tuple[str, str, str]] = []
     errors: list[BaseException] = []
 
-    def work(i: int) -> None:
+    def work() -> None:
         try:
             barrier.wait(timeout=60)
             for _ in range(16):
-                dtypes = dict(readers[i % 2]().dtypes)
+                dtypes = dict(store.read("span").dtypes)
                 types.append(tuple(dtypes[c] for c in ("date", "hour", "minute")))
         except BaseException as e:  # noqa: BLE001 — surfaced below
             errors.append(e)
@@ -380,7 +383,7 @@ def test_uninferred_reads_race_free_under_concurrency(spark, store, tmp_path):
     old_interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
-        threads = [threading.Thread(target=work, args=(i,)) for i in range(8)]
+        threads = [threading.Thread(target=work) for _ in range(8)]
         for t in threads:
             t.start()
         for t in threads:
@@ -391,4 +394,21 @@ def test_uninferred_reads_race_free_under_concurrency(spark, store, tmp_path):
     assert not errors, errors
     assert len(types) == 128
     assert set(types) == {("string", "string", "string")}
-    assert spark.conf.get(key, "true") == orig
+    assert conf_sets == []
+    minutes = {r.minute for r in store.read("span").select("minute").collect()}
+    assert minutes == {"59", "00", "01", "02", "03"}
+
+
+def test_no_partition_inference_switch():
+    """Reads keep partition values as strings by declaring their
+    schema: no module under duo_spark/ names the session-wide
+    inference conf or the retired per-version K1 option."""
+    root = pathlib.Path(__file__).resolve().parents[1] / "duo_spark"
+    banned = re.compile(r"partitionColumnTypeInference|partition_completed")
+    hits = [
+        f"{p.relative_to(root)}:{i}"
+        for p in sorted(root.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert hits == []

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from duo_spark.operators.spans import merge_span_records
-from duo_spark.schemas import SPAN_SCHEMA
+from duo_spark.schemas import COMPLETED_SPAN_SCHEMA, SPAN_SCHEMA
 from duo_spark.streaming import replay_span_records, start_span_pipeline
 from duo_spark.streaming.pipeline import SCRATCH_ROOT, _scratch
 
@@ -700,7 +700,7 @@ def test_fast_merge_compaction_rename_failure_deletes_nothing(
     FALSE — compact_completed used to ignore it and delete the old
     snapshot plus all folded deltas anyway, losing completed spans. A
     failed rename must now raise and leave every version intact."""
-    import duo_spark.streaming.rollup as rollup
+    import duo_spark.streaming.merge as merge
     from duo_spark.streaming.merge import (
         compact_completed, read_completed, streaming_span_merge_fast,
     )
@@ -732,16 +732,16 @@ def test_fast_merge_compaction_rename_failure_deletes_nothing(
         def __getattr__(self, name):
             return getattr(self._fs, name)
 
-    real_fs = rollup._fs
+    real_fs = merge.hadoop_fs
     monkeypatch.setattr(
-        rollup, "_fs",
+        merge, "hadoop_fs",
         lambda sp, path: (
             (_RenameFailsFs(real_fs(sp, path)[0]), real_fs(sp, path)[1])
         ),
     )
     with pytest.raises(RuntimeError, match="rename"):
         compact_completed(spark, out, retain_latest=0)
-    monkeypatch.setattr(rollup, "_fs", real_fs)
+    monkeypatch.setattr(merge, "hadoop_fs", real_fs)
     # nothing was deleted by the failed attempt
     assert sorted(_version_ids(spark, f"{out}/completed")) == deltas
     assert compact_completed(spark, out, retain_latest=0) == deltas[-1]
@@ -798,12 +798,12 @@ def test_fast_pipeline_memory_table_resolves_with_empty_source(spark, scratch):
 
 def test_fast_pipeline_persistent_layout_and_compacted_snapshot(spark, scratch):
     """Default-engine persistent pipeline (round-8 probe-19 shape):
-    completed deltas are FLAT per-batch writes carrying the K1
-    partition columns as data (a per-batch partitionBy fans every
-    batch across every calendar dir — 13× slower on a date-spread
-    workload); compaction pays the fan-out once, producing a real
-    date=/hour=/minute= snapshot; read_completed is identical before
-    and after; withheld opens stay out."""
+    completed deltas are FLAT per-batch writes of the completed-span
+    columns (a per-batch partitionBy fans every batch across every
+    calendar dir — 13× slower on a date-spread workload); compaction
+    pays the fan-out once, producing a real date=/hour=/minute=
+    snapshot; read_completed is identical before and after, and holds
+    only the table's columns; withheld opens stay out."""
     from duo_spark.streaming.merge import compact_completed, read_completed
 
     src = os.path.join(scratch, "in")
@@ -825,10 +825,9 @@ def test_fast_pipeline_persistent_layout_and_compacted_snapshot(spark, scratch):
     # deltas are FLAT: parquet files, no per-batch calendar dirs
     assert not any(d.startswith("date=") for d in inner), inner
     back = read_completed(spark, out)
+    assert back.columns == COMPLETED_SPAN_SCHEMA.names
     assert {r.id for r in back.collect()} == {21, 22}
-    minutes = {r.minute for r in back.select("minute").distinct().collect()}
-    assert all(isinstance(m, str) for m in minutes) and len(minutes) == 2
-    before = {(r.id, r.end, r.date, r.minute) for r in back.collect()}
+    before = {tuple(r) for r in back.collect()}
     # compaction produces the REAL partitioned snapshot
     assert compact_completed(spark, out, retain_latest=0) is not None
     snap = os.listdir(os.path.join(out, "compacted"))
@@ -837,9 +836,109 @@ def test_fast_pipeline_persistent_layout_and_compacted_snapshot(spark, scratch):
         d.startswith("date=")
         for d in os.listdir(os.path.join(out, "compacted", vsnap[0]))
     )
-    after = {(r.id, r.end, r.date, r.minute)
-             for r in read_completed(spark, out).collect()}
-    assert after == before
+    after = read_completed(spark, out)
+    assert after.columns == COMPLETED_SPAN_SCHEMA.names
+    assert {tuple(r) for r in after.collect()} == before
+
+
+#: 2024-01-02T03:04:05Z: every K1 value of its minute is zero-padded
+T0304 = 1_704_164_645_000_000
+
+
+def test_compacted_snapshot_zero_padded_and_table_columns_only(spark, scratch):
+    """Both tables' versions hold only their own columns; compaction
+    derives K1 from the table's time column (span ``start``, log
+    ``time``) into zero-padded date=/hour=/minute= directories, and
+    read_completed still returns only the table's columns."""
+    from duo_spark.schemas import LOG_CORE_SCHEMA
+    from duo_spark.streaming.merge import (
+        compact_completed, fast_merge_processor, log_append_processor,
+        read_completed,
+    )
+
+    spans, logs = os.path.join(scratch, "span"), os.path.join(scratch, "log")
+    span_proc, log_proc = fast_merge_processor(spans), log_append_processor(logs)
+    for b in range(2):
+        t = T0304 + b * 1000
+        span_proc(spark.createDataFrame(
+            [_rec(b + 1, start=t, end=t + 5)], SPAN_SCHEMA), b)
+        log_proc(spark.createDataFrame([_log(b + 1, "m", t)], LOG_CORE_SCHEMA), b)
+    for out, dedup, cols in ((spans, True, COMPLETED_SPAN_SCHEMA.names),
+                             (logs, False, LOG_CORE_SCHEMA.names)):
+        assert read_completed(spark, out, dedup=dedup).columns == cols
+        before = {tuple(r) for r in read_completed(spark, out, dedup=dedup).collect()}
+        assert len(before) == 2
+        vid = compact_completed(spark, out, retain_latest=0, dedup=dedup)
+        leaf = os.path.join(out, "compacted", f"v={vid}",
+                            "date=2024-01-02", "hour=03", "minute=04")
+        assert any(f.endswith(".parquet") for f in os.listdir(leaf)), leaf
+        after = read_completed(spark, out, dedup=dedup)
+        assert after.columns == cols
+        assert {tuple(r) for r in after.collect()} == before
+
+
+def test_span_read_completed_plans_without_a_job(spark, scratch, jobs_in):
+    """Span versions are read with the declared completed-span schema:
+    building the frame over a snapshot and two deltas starts no Spark
+    job (a footer-inferred read starts one per version)."""
+    from duo_spark.streaming.merge import (
+        compact_completed, completed_versions, fast_merge_processor, read_completed,
+    )
+
+    out = os.path.join(scratch, "span")
+    proc = fast_merge_processor(out)
+    for b in range(4):
+        proc(spark.createDataFrame(
+            [_rec(b + 1, start=T0304 + b, end=T0304 + b + 5)], SPAN_SCHEMA), b)
+    compact_completed(spark, out, retain_latest=2)
+    versions = completed_versions(spark, out)
+    assert versions.snapshot is not None and len(versions.deltas) == 2
+    df, jobs = jobs_in(lambda: read_completed(spark, out, versions=versions))
+    assert jobs == 0
+    assert sorted(r.id for r in df.collect()) == [1, 2, 3, 4]
+
+
+def test_store_in_earlier_layout_reads_and_compacts(spark, scratch):
+    """A store written by earlier pipelines — deltas carrying the K1
+    columns as data, a snapshot partitioned by them — reads back the
+    same rows with only the table's columns, before and after
+    compaction. Built by hand for both tables; span id 1 recurs in a
+    delta with a later end, and the snapshot's row wins."""
+    from duo_spark.schemas import LOG_CORE_SCHEMA
+    from duo_spark.sources.store import PARTITION_COLS, with_partition_cols
+    from duo_spark.streaming.merge import compact_completed, read_completed
+
+    def span_rows(*ids, end=5):
+        return spark.createDataFrame(
+            [_rec(i, start=T0304 + i, end=T0304 + i + end, tags='{"k":1}') for i in ids],
+            COMPLETED_SPAN_SCHEMA)
+
+    def log_rows(*ids):
+        return spark.createDataFrame([_log(i, f"m{i}", T0304 + i) for i in ids],
+                                     LOG_CORE_SCHEMA)
+
+    tables = (
+        (os.path.join(scratch, "span"), True, "start",
+         [span_rows(1, 2), span_rows(3), span_rows(1, 4, end=99)],
+         {(1, T0304 + 6), (2, T0304 + 7), (3, T0304 + 8), (4, T0304 + 103)}),
+        (os.path.join(scratch, "log"), False, "time",
+         [log_rows(1, 2), log_rows(3), log_rows(4)],
+         {(i, f"m{i}") for i in (1, 2, 3, 4)}),
+    )
+    for out, dedup, time_col, (snap, *deltas), want in tables:
+        with_partition_cols(snap, time_col).write.partitionBy(*PARTITION_COLS).parquet(
+            f"{out}/compacted/v=0")
+        for v, d in enumerate(deltas, 1):
+            with_partition_cols(d, time_col).write.parquet(f"{out}/completed/v={v}")
+        cols = snap.columns
+        for compacted in (False, True):
+            if compacted:
+                assert compact_completed(spark, out, retain_latest=0, dedup=dedup) == 2
+            got = read_completed(spark, out, dedup=dedup)
+            assert got.columns == cols
+            key = ("id", "end") if dedup else ("span_id", "message")
+            rows = got.select(*key).collect()
+            assert len(rows) == 4 and {tuple(r) for r in rows} == want
 
 
 def test_fast_pipeline_empty_completed_batch_readable(spark, scratch):
@@ -1521,7 +1620,7 @@ def test_fast_merge_processor_replay_is_idempotent(spark, scratch):
     from duo_spark.streaming.merge import fast_merge_processor, read_completed, read_open
 
     out = os.path.join(scratch, "state")
-    proc = fast_merge_processor(out, partition_completed=True)
+    proc = fast_merge_processor(out)
     b0 = spark.createDataFrame(
         [_rec(1, start=BASE), _rec(2, start=BASE + 1, end=BASE + 50)], SPAN_SCHEMA
     )
@@ -1544,7 +1643,7 @@ def test_completed_versions_key_changes_on_replay(spark, scratch):
     from duo_spark.streaming.merge import completed_versions, fast_merge_processor
 
     out = os.path.join(scratch, "state")
-    proc = fast_merge_processor(out, partition_completed=True)
+    proc = fast_merge_processor(out)
     b0 = spark.createDataFrame([_rec(1, start=BASE, end=BASE + 5)], SPAN_SCHEMA)
     proc(b0, 0)
     first = completed_versions(spark, out)
